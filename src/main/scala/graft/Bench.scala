@@ -54,11 +54,11 @@ object Bench {
                                  cpus: String, matched: Option[Int],
                                  nFlags: Int, nFailed: Int): String = {
     val cpusJson = cpus.trim.toIntOption.map(_.toString)
-      .getOrElse("\"" + cpus + "\"")
+      .getOrElse(Json.str(cpus))
     val matchedJson = matched.map(m => s""","baseline_matched":$m""")
       .getOrElse("")
     s"""{"metric":"total","value":$totalStr,"unit":"sec","n":$n""" +
-      s""","sf":"$sfDir","cpus":$cpusJson$matchedJson,"n_flags":$nFlags""" +
+      s""","sf":${Json.str(sfDir)},"cpus":$cpusJson$matchedJson,"n_flags":$nFlags""" +
       s""","n_failed":$nFailed,"detail":"bench_metrics.json"}"""
   }
 

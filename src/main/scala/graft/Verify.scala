@@ -28,20 +28,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Declared rows-only queries (driver ask, carried r11–r17): every
     // catalog query WITHOUT a DuckDB twin is deliberate — not a coverage
@@ -51,7 +39,7 @@ object Verify {
     val rowsOnly = (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet)
       .toSeq.sorted
     Files.writeString(Paths.get(s"$outDir/rows_only.json"),
-      rowsOnly.map(n => s"${q(n)}: true").mkString("{", ",", "}"))
+      rowsOnly.map(n => s"${Json.str(n)}: true").mkString("{", ",", "}"))
     spark.stop()
   }
 }

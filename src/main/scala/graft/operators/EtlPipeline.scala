@@ -1,58 +1,76 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.model.MaterializedDay
-import graft.sources.TableStore
+import graft.model.{MaterializedDay, Schemas}
+import graft.sources.{Overlap, TableStore}
 
-/** The ETL flow (reference flows.py:17-124, SURVEY §3.1) as one Spark job:
+/** The ETL flow (reference flows.py:17-124, SURVEY §3.1):
   *
   *   Dataset[MaterializedDay] → D1 canonical JSON → D2 change-detection
-  *   anti-join vs stored RawDayData → cache the (small) diff → M1 upsert raw
-  *   → D3 re-parse → 8 extract branches (D4–D12) each loaded with
-  *   intent-faithful replace-days semantics (M3) / keyed upsert (M2).
+  *   anti-join vs stored RawDayData → stage the (small) diff → D3 re-parse
+  *   → 8 extract branches (D4–D12) loaded concurrently → M1 upsert raw.
   *
-  * Lineage replaces the Prefect DAG; the only shuffles are the anti-join
-  * (J3) and the per-table upsert joins. The diff is STAGED (written to
-  * parquet and re-read, [[TableStore.stage]]), not merely persisted: the M1
-  * upsert atomically swaps away the very directory the diff's lineage reads,
-  * so a cache eviction between upsert and the eight child branches would
-  * recompute an empty diff and silently skip the changed days. The reference
-  * has the same invariant by construction — it re-parses the in-memory diff,
-  * never the DB (flows.py:66-74).
+  * Fan-out: like the reference's one task per child table (flows.py:75-122),
+  * each branch runs on its own driver thread ([[Overlap.jobs]]), so one
+  * table's planning, commit and renames overlap the others' tasks. The
+  * reference loads MealEntries after Meals (flows.py:99-104) for SQLite's
+  * FK check; the engine enforces no FK on write, so they load side by side.
+  *
+  * Shared key set: every branch replaces against the diff's (userid, date)
+  * keys, not the days its own extract yields, so a changed day that lost
+  * its meals, note, exercises or a measurement keeps none of the old rows.
+  *
+  * Commit order: RawDayData is upserted LAST, after every branch has
+  * joined (a failing branch throws only once its siblings finish). The diff
+  * keys on RawDayData content, so a crash before the commit leaves the
+  * re-run the same non-empty diff and it repeats the idempotent per-day
+  * child loads; parent-first would leave the children stale forever.
+  *
+  * The diff is STAGED (written to parquet and re-read, [[TableStore.stage]]),
+  * not persisted: the M1 upsert swaps away the directory the diff's lineage
+  * reads, so an evicted cache would recompute an empty diff. The reference
+  * has the same invariant by construction — it re-parses the in-memory
+  * diff, never the DB (flows.py:66-74). Each branch parses the few-KB
+  * staged diff itself; a shared cache would be rebuilt by every branch
+  * that found it not yet materialized.
   */
 object EtlPipeline {
 
+  /** The eight child loads, each (table, extract over the parsed diff). */
+  private val children: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "Notes" -> Extractors.extractNotes,
+    "Water" -> Extractors.extractWater,
+    "Goals" -> Extractors.extractGoals,
+    "Meals" -> Extractors.extractMeals,
+    "MealEntries" -> Extractors.extractMealEntries,
+    "CardioExercises" -> Extractors.extractCardio,
+    "StrengthExercises" -> Extractors.extractStrength,
+    "Measurements" -> (parsed => Extractors.extractMeasurements(parsed)
+      .dropDuplicates(Schemas.tables("Measurements")._2)))
+
   def run(store: TableStore, days: Dataset[MaterializedDay],
-          afterUpsert: () => Unit = () => ())
-         (implicit spark: SparkSession): Long = {
+          afterUpsert: () => Unit = () => ()): Long = {
     store.init()
-    val serialized = Extractors.serializeDays(days.toDF())
+    load(store, Extractors.serializeDays(days.toDF()), afterUpsert)
+  }
+
+  /** Diff `serialized` days (D1 output: userid, date, rawdaydata) against
+    * the store and load the changed ones — the one load path behind batch
+    * [[run]] and the streaming ETL. Returns the number of changed days.
+    * `afterUpsert` is a test seam between the child loads and M1. */
+  def load(store: TableStore, serialized: DataFrame,
+           afterUpsert: () => Unit = () => ()): Long = {
     val (diff, dropStaged) = store.stage(
       Extractors.changedDays(serialized, store.read("RawDayData")))
     try {
       val nChanged = diff.count()
       if (nChanged > 0) {
-        // children FIRST, RawDayData LAST as the commit marker (same
-        // reasoning as DayStream): the diff keys on RawDayData content,
-        // so committing the parent before the children means a crash in
-        // any extract leaves the re-run's diff EMPTY and the children
-        // permanently stale. With the parent last, a re-run recomputes
-        // the same diff and repeats the idempotent per-day child loads.
         val parsed = Extractors.deserializeDays(diff)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          store.replaceDays("Notes", Extractors.extractNotes(parsed))
-          store.replaceDays("Water", Extractors.extractWater(parsed))
-          store.replaceDays("Goals", Extractors.extractGoals(parsed))
-          store.replaceDays("Meals", Extractors.extractMeals(parsed))
-          store.replaceDays("MealEntries", Extractors.extractMealEntries(parsed))
-          store.replaceDays("CardioExercises", Extractors.extractCardio(parsed))
-          store.replaceDays("StrengthExercises", Extractors.extractStrength(parsed))
-          store.upsert("Measurements", Extractors.extractMeasurements(parsed)) // M2
-        } finally parsed.unpersist()
-        afterUpsert() // test seam: simulate eviction between loads and M1
+        Overlap.jobs(children.map { case (table, extract) =>
+          () => store.replaceDays(table, extract(parsed), diff)
+        }: _*)
+        afterUpsert()
         store.upsert("RawDayData", diff) // M1 — the commit marker
       }
       nChanged

@@ -1153,8 +1153,10 @@ object Similarity {
         .groupBy(col(idC))
         .agg(min(col("pd")).as("pd"))
         .select(col(idC), (col("pd") % lit(mExclusive)).cast("long").as(outC))
-    val subC = subspaces(mdSeeds("pq:", kCodes, "ccid"), "cv", "csub", m, sd)
-      .localCheckpoint()
+    // guarded like the scalars: a failed codebook build joins the seed job
+    val subC = graft.sources.Overlap.guarding(cellsT)(
+      subspaces(mdSeeds("pq:", kCodes, "ccid"), "cv", "csub", m, sd)
+        .localCheckpoint())
     val cells = cellsT()
     val assigned = argminTo(q.crossJoin(broadcast(cells)), "id",
       call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid")

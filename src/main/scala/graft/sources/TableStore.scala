@@ -31,6 +31,9 @@ final class TableStore(spark: SparkSession, root: String,
 
   private def path(table: String) = s"$root/$table"
 
+  /** The day key every table carries: M3 replaces and M4 cascades on it. */
+  private val dayKeys = Seq("userid", "date")
+
   /** Hive-style partition spec: every table carries (userid, date); laying
     * the directory out by date turns the reference's point lookups
     * (`WHERE userid=? AND date=?`, S4/S5) and the report's date-range scan
@@ -162,11 +165,22 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Delete-then-insert by (userid, date) — the intent-faithful child-table
     * reload (M3): re-running a changed day replaces its rows instead of
-    * appending duplicates. */
-  def replaceDays(table: String, incoming: DataFrame): Unit = {
-    val dayKeys = Seq("userid", "date")
-    val kept = read(table).join(
-      incoming.select(dayKeys.map(col): _*).distinct(), dayKeys, "left_anti")
+    * appending duplicates. Only the days present in `incoming` are
+    * replaced; see the three-argument form for a reload whose day set is
+    * known independently of the rows. */
+  def replaceDays(table: String, incoming: DataFrame): Unit =
+    replaceDays(table, incoming,
+      incoming.select(dayKeys.map(col): _*).distinct())
+
+  /** Delete every row of `table` on a `days` (userid, date) key, then
+    * insert `incoming`. A day in `days` with no incoming rows ends up
+    * EMPTY in this table — the load for a changed day that lost a section
+    * (no meals any more, an emptied note) — which the rows-derived form
+    * cannot express. Duplicate keys in `days` are harmless (anti-join). */
+  def replaceDays(table: String, incoming: DataFrame,
+                  days: DataFrame): Unit = {
+    val kept = read(table).join(days.select(dayKeys.map(col): _*),
+      dayKeys, "left_anti")
     swapIn(table, kept.unionByName(align(table, incoming)))
   }
 
@@ -174,19 +188,18 @@ final class TableStore(spark: SparkSession, root: String,
     * (userid, date) matches — explicit version of SQLite's FK cascade,
     * applied only when enforce=true (mirrors PRAGMA foreign_keys). */
   def cascadeDelete(parentKeys: DataFrame, enforce: Boolean = true): Unit = {
-    val keys = Seq("userid", "date")
     // STAGED, not lazy: the natural call passes keys derived from the
     // store (read("RawDayData").where(...)), and the first swapIn deletes
     // the directory that frame reads — each child join would then
     // re-evaluate the victims against the post-delete parent, find
     // nothing, and silently leave every orphan in place
     val (victims, cleanup) =
-      stage(parentKeys.select(keys.map(col): _*).distinct())
+      stage(parentKeys.select(dayKeys.map(col): _*).distinct())
     try {
-      swapIn("RawDayData", read("RawDayData").join(victims, keys, "left_anti"))
+      swapIn("RawDayData", read("RawDayData").join(victims, dayKeys, "left_anti"))
       if (enforce) {
         Schemas.tables.keys.filter(_ != "RawDayData").foreach { child =>
-          swapIn(child, read(child).join(victims, keys, "left_anti"))
+          swapIn(child, read(child).join(victims, dayKeys, "left_anti"))
         }
       }
     } finally cleanup()
@@ -203,7 +216,14 @@ final class TableStore(spark: SparkSession, root: String,
   def stage(df: DataFrame): (DataFrame, () => Unit) = {
     val dir = new Path(s"$root/_staging/${java.util.UUID.randomUUID()}")
     df.write.mode("errorifexists").parquet(dir.toString)
-    val staged = spark.read.schema(df.schema).parquet(dir.toString)
+    // the part files named one by one, in write-task order: a directory
+    // read takes them in listing order, which differs between runs, and
+    // the scan keeps it among same-size files — the ids generated over the
+    // staged rows (monotonically_increasing_id) would follow it. Task 0
+    // always writes a part file, so the list is never empty.
+    val parts = fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).map(_.toString).sorted
+    val staged = spark.read.schema(df.schema).parquet(parts.toIndexedSeq: _*)
     (staged, () => { fs.delete(dir, true); () })
   }
 

@@ -3,15 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.Extractors
+import graft.operators.{EtlPipeline, Extractors}
 import graft.sources.{DaySource, TableStore}
 
 /** The Structured-Streaming upgrade of the ETL flow (SURVEY §2.10: an
   * extension, not a reference semantic): fetched day documents land as
   * JSON-lines files in a staging dir; this job ingests whatever has arrived
   * (`Trigger.AvailableNow`), dedups per micro-batch on the day key, and
-  * applies the SAME diff → upsert → extract-branch load the batch pipeline
-  * uses, via foreachBatch — one code path for batch and streaming.
+  * hands each batch to [[EtlPipeline.load]] via foreachBatch — the batch
+  * pipeline's own diff → concurrent child loads → RawDayData commit, so a
+  * foreachBatch retry after a crash mid-children re-runs the same diff.
   *
   * Change detection (D2) happens inside the batch function against the
   * current store state, so re-delivered or unchanged days are no-ops —
@@ -47,32 +48,7 @@ object DayStream {
           s"[daystream] dropping $bad malformed row(s) with null username/date")
         val good = deduped
           .where(col("username").isNotNull && col("date").isNotNull)
-        val serialized = Extractors.serializeDays(good)
-        // staged, not persisted: upsert swaps away the diff's source dir, so
-        // eviction+recompute would silently lose the batch (see EtlPipeline)
-        val (diff, dropStaged) = store.stage(
-          Extractors.changedDays(serialized, store.read("RawDayData")))
-        try {
-          if (diff.count() > 0) {
-            // children FIRST, RawDayData LAST as the commit marker: the
-            // diff is computed against RawDayData, so upserting the parent
-            // before the children means a crash mid-children + foreachBatch
-            // retry recomputes an EMPTY diff and permanently skips the
-            // remaining child loads. With the parent last, a retry re-runs
-            // the (idempotent per-day) child loads and only then marks the
-            // batch done by making the diff empty.
-            val parsed = Extractors.deserializeDays(diff)
-            store.replaceDays("Notes", Extractors.extractNotes(parsed))
-            store.replaceDays("Water", Extractors.extractWater(parsed))
-            store.replaceDays("Goals", Extractors.extractGoals(parsed))
-            store.replaceDays("Meals", Extractors.extractMeals(parsed))
-            store.replaceDays("MealEntries", Extractors.extractMealEntries(parsed))
-            store.replaceDays("CardioExercises", Extractors.extractCardio(parsed))
-            store.replaceDays("StrengthExercises", Extractors.extractStrength(parsed))
-            store.upsert("Measurements", Extractors.extractMeasurements(parsed))
-            store.upsert("RawDayData", diff)
-          }
-        } finally dropStaged()
+        EtlPipeline.load(store, Extractors.serializeDays(good))
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -97,6 +97,19 @@ class BenchBaselineSpec extends AnyFunSuite {
       .contains(""""cpus":"*""""))
   }
 
+  test("summaryLine stays valid JSON for a quote or backslash in sf and cpus") {
+    // the line is hand-built JSON: an unescaped quote or backslash in
+    // SPARK_GRAFT_SF_DIR would make the whole line unparseable
+    val dir = """/data/q"uoted\dir"""
+    val cpus = """4"\"""
+    val line = Bench.summaryLine("2.0000", 2, dir, cpus, Some(2), 0, 0)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("sf").asText() == dir)
+    assert(json.get("cpus").asText() == cpus)
+    assert(json.get("value").asDouble() == 2.0)
+    assert(json.get("baseline_matched").asInt() == 2)
+  }
+
   test("isRegression pins the flag formula: >=2x AND >=0.5s absolute") {
     assert(Bench.isRegression(t = 1.2, base = 0.5)) // 2.4x and +0.7s
     assert(!Bench.isRegression(t = 0.9, base = 0.5)) // 1.8x — ratio short
