@@ -20,19 +20,21 @@ object Bench {
   private[graft] def parseBaseline(path: String): Option[(String, Map[String, Double])] = {
     val f = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(f)) return None
-    val s = java.nio.file.Files.readString(f)
-    // `:\s*` on BOTH regexes: the baseline file has flip-flopped between the
-    // harness's compact form (`"q01":0.64`) and pretty-printed hand merges
-    // (`"q01": 0.64`). The colon-tight r10 regexes silently matched nothing
-    // against the pretty form, so parseBaseline returned None and the
-    // regression gate printed vacuous "no flags" for three rounds. Both
-    // formats are pinned in BenchSpec.
-    val sf = """"sf":\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-    // value pattern must cover Double.toString's scientific notation
-    // (8.53E-4) — truncating at the mantissa would inflate the baseline
-    val qs = """"(q\d+[a-z0-9_]*)":\s*([0-9.Ee+\-]+)""".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    sf.map(_ -> qs)
+    // a JSON parser: every valid spelling (compact or pretty, an escaped
+    // sf path) must read back, or the gate silently stops comparing
+    val root =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(f.toFile)
+      catch {
+        case e: com.fasterxml.jackson.core.JacksonException =>
+          System.err.println(s"[bench] unreadable baseline $path: ${e.getMessage}")
+          return None
+      }
+    Option(root.get("sf")).filter(_.isTextual).map { sf =>
+      import scala.jdk.CollectionConverters._
+      sf.asText() -> Option(root.get("queries")).toSeq
+        .flatMap(_.properties().asScala)
+        .map(e => e.getKey -> e.getValue.asDouble()).toMap
+    }
   }
 
   /** The regression-flag predicate, factored out so BenchSpec can pin the
@@ -52,15 +54,14 @@ object Bench {
     * first, so nothing that parsed before stops parsing. */
   private[graft] def summaryLine(totalStr: String, n: Int, sfDir: String,
                                  cpus: String, matched: Option[Int],
-                                 nFlags: Int, nFailed: Int): String = {
-    val cpusJson = cpus.trim.toIntOption.map(_.toString)
-      .getOrElse(Json.str(cpus))
-    val matchedJson = matched.map(m => s""","baseline_matched":$m""")
-      .getOrElse("")
-    s"""{"metric":"total","value":$totalStr,"unit":"sec","n":$n""" +
-      s""","sf":${Json.str(sfDir)},"cpus":$cpusJson$matchedJson,"n_flags":$nFlags""" +
-      s""","n_failed":$nFailed,"detail":"bench_metrics.json"}"""
-  }
+                                 nFlags: Int, nFailed: Int): String =
+    Json.obj(Seq("metric" -> Json.str("total"), "value" -> totalStr,
+      "unit" -> Json.str("sec"), "n" -> n.toString, "sf" -> Json.str(sfDir),
+      "cpus" -> cpus.trim.toIntOption.map(_.toString)
+        .getOrElse(Json.str(cpus))) ++
+      matched.map(m => "baseline_matched" -> m.toString) ++
+      Seq("n_flags" -> nFlags.toString, "n_failed" -> nFailed.toString,
+        "detail" -> Json.str("bench_metrics.json")))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -184,16 +185,16 @@ object Bench {
     // ~3.1 KB, overflowing the round driver's ~2.6 KB output-tail capture
     // window (BENCH_r05 parsed: null, q01–q05 clipped); at 4 decimals the
     // whole line fits. Locale.ROOT as in the regression map below.
-    val qs = results.map { case (k, v) =>
-      String.format(java.util.Locale.ROOT, "\"%s\":%.4f", k, Double.box(v))
-    }.mkString("{", ",", "}")
+    def fmt(pattern: String, v: Double) =
+      String.format(java.util.Locale.ROOT, pattern, Double.box(v))
+    val qs = Json.obj(results.map { case (k, v) => k -> fmt("%.4f", v) })
     val total = results.map(_._2).sum
 
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE",
       "bench_baseline.json")
     // (matched, flag strings) when a same-sf baseline parsed — kept as
     // data so both the full line and the compact summary line can ride it
-    val gate: Option[(Int, Seq[String])] = parseBaseline(baselinePath) match {
+    val gate: Option[(Int, Seq[(String, String)])] = parseBaseline(baselinePath) match {
       case Some((baseSf, base)) if baseSf == sfDir =>
         // liveness receipt: how many timed queries the gate actually
         // compared. 0 (or an absent field) means the gate did NOT run —
@@ -204,49 +205,40 @@ object Bench {
           case (name, t) if base.get(name).exists(isRegression(t, _)) =>
             // Locale.ROOT: a comma-decimal default locale would emit
             // "q22":1,53 and break the JSON line
-            String.format(java.util.Locale.ROOT, """"%s":%.2f""",
-              name, Double.box(t / base(name)))
+            name -> fmt("%.2f", t / base(name))
         }
         Some((matched, slow))
       case _ => None
     }
-    val regressions = gate match {
-      case Some((matched, slow)) =>
-        // regressions map omitted when empty — every byte counts against
-        // the capture window — but the matched count always rides
-        val flags =
-          if (slow.isEmpty) ""
-          else s""","regressions":${slow.mkString("{", ",", "}")}"""
-        s""","baseline_matched":$matched$flags"""
-      case None => ""
+    val gateFields = gate.toSeq.flatMap { case (matched, slow) =>
+      // regressions map omitted when empty — every byte counts against
+      // the capture window — but the matched count always rides
+      ("baseline_matched" -> matched.toString) +:
+        (if (slow.isEmpty) Nil else Seq("regressions" -> Json.obj(slow)))
     }
     val failedNames = failed.result()
-    val failures = failedNames match {
-      case Nil => ""
-      case fs => fs.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
-    }
-    val totalStr = String.format(java.util.Locale.ROOT, "%.4f",
-      Double.box(total))
-    val line =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qs,"sf":"$sfDir"$regressions$failures}"""
-    println(line)
+    val totalStr = fmt("%.4f", total)
+    val fields = Seq("metric" -> Json.str("total"), "value" -> totalStr,
+      "unit" -> Json.str("sec"), "queries" -> qs, "sf" -> Json.str(sfDir)) ++
+      gateFields ++
+      (if (failedNames.isEmpty) Nil
+       else Seq("failed" -> failedNames.map(Json.str).mkString("[", ",", "]")))
+    println(Json.obj(fields))
     // capture-proof twin: the driver reads stdout through a bounded tail
     // window (~2 KB — BENCH_r07's capture already clips the line head at
     // 77 queries), so the canonical copy of every run's metrics lands on
     // disk where nothing can clip it. The per-attempt times ride ONLY
     // here: an attempts map on stdout would push the queries map out of
     // the capture window entirely (the BENCH_r05 failure mode).
-    val att = allAttempts.result().map { case (k, ts) =>
-      val arr = ts.map(t => String.format(java.util.Locale.ROOT, "%.4f",
-        Double.box(t))).mkString("[", ",", "]")
-      s""""$k":$arr"""
-    }.mkString("{", ",", "}")
+    val att = Json.obj(allAttempts.result().map { case (k, ts) =>
+      k -> ts.map(fmt("%.4f", _)).mkString("[", ",", "]")
+    })
     // atomic publish: write-temp + ATOMIC_MOVE, so a reader (or a killed
     // run) can never observe a half-written metrics file
     val metricsTmp = java.nio.file.Paths.get(
       "bench_metrics.json.tmp-" + java.util.UUID.randomUUID())
     java.nio.file.Files.writeString(metricsTmp,
-      line.dropRight(1) + s""","attempts":$att}""" + "\n")
+      Json.obj(fields :+ ("attempts" -> att)) + "\n")
     java.nio.file.Files.move(metricsTmp,
       java.nio.file.Paths.get("bench_metrics.json"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
@@ -260,7 +252,7 @@ object Bench {
         subset.isEmpty)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(baselinePath),
-        s"""{"queries":$qs,"sf":"$sfDir"}""")
+        Json.obj(Seq("queries" -> qs, "sf" -> Json.str(sfDir))))
     spark.stop()
   }
 }

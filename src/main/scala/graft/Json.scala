@@ -1,6 +1,6 @@
 package graft
 
-/** String literals for the mains' hand-built JSON output. */
+/** String literals and objects for the mains' JSON output. */
 private[graft] object Json {
 
   /** `s` as a quoted JSON string: backslash, quote and ALL control chars
@@ -16,4 +16,9 @@ private[graft] object Json {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** A JSON object of `fields`: keys escaped through [[str]], values
+    * already rendered JSON. */
+  def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 }

@@ -28,9 +28,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Json.obj(SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> Json.str(v) }))
     // Declared rows-only queries (driver ask, carried r11–r17): every
     // catalog query WITHOUT a DuckDB twin is deliberate — not a coverage
     // gap — so label them machine-readably next to oracle_sql.json. Each
@@ -39,7 +38,7 @@ object Verify {
     val rowsOnly = (SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet)
       .toSeq.sorted
     Files.writeString(Paths.get(s"$outDir/rows_only.json"),
-      rowsOnly.map(n => s"${Json.str(n)}: true").mkString("{", ",", "}"))
+      Json.obj(rowsOnly.map(_ -> "true")))
     spark.stop()
   }
 }

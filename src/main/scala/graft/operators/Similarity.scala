@@ -202,7 +202,13 @@ object Similarity {
     * corpus, all joins hash-partitioned on the cell id. Each k-means round
     * costs one n·K assignment plus an n·dim exploded mean — an offline
     * index-build cost that buys tighter cells (smaller nProbe at the same
-    * recall) on clustered corpora. */
+    * recall) on clustered corpora.
+    *
+    * `queryPred` must select a BOUNDED query set — a constant-size id
+    * window such as `id >= a && id < b`: the probe set (queries × nProbe
+    * rows, carrying the query vectors) is BROADCAST, so a predicate whose
+    * match count grows with the corpus (a modulus) grows the broadcast
+    * with it. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               nCentroids: Int, nProbe: Int, queryPred: Column,
               k: Int, kmeansIters: Int = 0,
@@ -487,31 +493,19 @@ object Similarity {
     * params changed, or a build crashed pre-fingerprint) triggers one
     * synchronous [[ivfBuildStored]] — the self-healing default; a
     * production deployment would page instead. Queries are drawn from
-    * `emb` by `queryPred` (post-rename: `col("id")`). */
+    * `emb` by `queryPred` (post-rename: `col("id")`), which must select a
+    * BOUNDED query set — [[ivfTopK]]'s broadcast requirement. */
   def ivfSearchStored(emb: DataFrame, idCol: String, vecCol: String,
                       nCentroids: Int, nProbe: Int, queryPred: Column,
                       k: Int, index: graft.sources.VectorIndex,
                       kmeansIters: Int = 0,
                       portable: Boolean = false,
                       corpusToken: Option[String] = None): DataFrame = {
-    corpusToken match {
-      case Some(tok) =>
-        // O(1) freshness: the caller (the system that writes the corpus)
-        // holds its version token — compare against the index's covered
-        // version, zero corpus jobs on the fresh path
-        if (!index.isCurrent(tok)) {
-          ivfBuildStored(emb, idCol, vecCol, nCentroids, index,
-            kmeansIters, portable).collect()
-          require(index.isCurrent(tok),
-            "caller corpus token does not match this corpus + params — " +
-              "was it computed by ivfCorpusToken with the same arguments?")
-        }
-      case None =>
-        // audit mode: fingerprint the corpus (memoized per session under
-        // its file-manifest identity) and compare to the base build
-        ivfEnsureStored(emb, idCol, vecCol, nCentroids, index, kmeansIters,
-          portable)
-    }
+    index.ensureCovers(corpusToken,
+      indexMeta(emb, idCol, vecCol, nCentroids, kmeansIters, portable, index),
+      "ivfCorpusToken")(
+      ivfBuildStored(emb, idCol, vecCol, nCentroids, index, kmeansIters,
+        portable))
     val qVecs = prepared(emb, idCol, vecCol).where(queryPred)
       .select(col("id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
     probeRerank(qVecs, index.readCentroids(), index.readPostings(),
@@ -525,11 +519,11 @@ object Similarity {
                       nCentroids: Int, index: graft.sources.VectorIndex,
                       kmeansIters: Int = 0,
                       portable: Boolean = false): Unit =
-    if (!index.isFresh(
-        indexMeta(emb, idCol, vecCol, nCentroids, kmeansIters, portable,
-          index)))
+    index.ensureCovers(None,
+      indexMeta(emb, idCol, vecCol, nCentroids, kmeansIters, portable, index),
+      "ivfCorpusToken")(
       ivfBuildStored(emb, idCol, vecCol, nCentroids, index, kmeansIters,
-        portable).collect()
+        portable))
 
   /** INCREMENTAL index maintenance: assign `newEmb`'s vectors to the
     * STORED centroid grid (no re-seed, no k-means — exactly how a
@@ -541,10 +535,8 @@ object Similarity {
     * disk. */
   def ivfExtendStored(newEmb: DataFrame, idCol: String, vecCol: String,
                       index: graft.sources.VectorIndex): DataFrame = {
-    val assigned = assignVectors(newEmb, idCol, vecCol,
-      index.readCentroids())
     index.upsertPostings(
-      assigned.select(col("cid"), col("id"), col("v"), col("nrm")))
+      assignVectors(newEmb, idCol, vecCol, index.readCentroids()))
     ivfCensus(index)
   }
 
@@ -570,12 +562,9 @@ object Similarity {
     // with the files) or not at all, so a retry after a crash — or a
     // re-run of the same ingest step — is a token-file read and a no-op
     // when the batch already landed; no id-presence scan over the index.
-    if (expectToken.forall(index.isCurrent)) {
-      val assigned = assignVectors(newEmb, idCol, vecCol,
-        index.readCentroids())
+    if (expectToken.forall(index.isCurrent))
       index.appendPostings(
-        assigned.select(col("cid"), col("id"), col("v"), col("nrm")))
-    }
+        assignVectors(newEmb, idCol, vecCol, index.readCentroids()))
     ivfCensus(index)
   }
 
@@ -1063,7 +1052,13 @@ object Similarity {
     * join broadcasts the bounded probe set. Fixed nCells keeps routing
     * O(N·K·d) — production at corpus-scaled K would add
     * [[semanticDedup]]'s √K hierarchical routing; the join shape
-    * downstream is identical. */
+    * downstream is identical.
+    *
+    * `queryPred` must select a BOUNDED query set — a constant-size id
+    * window such as `id >= a && id < b`: the probe set, the ADC distance
+    * table and the rerank shortlist (all ∝ queries) are BROADCAST, so a
+    * predicate whose match count grows with the corpus (a modulus) grows
+    * the broadcasts with it. */
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
                 nCells: Int, nProbe: Int, m: Int, kCodes: Int, scale: Long,
                 queryPred: Column, rerank: Int, k: Int): DataFrame = {
@@ -1145,31 +1140,67 @@ object Similarity {
       (d, mx)
     }
     val sd = dim / m
-    def argminTo(pairs: DataFrame, idC: String, distC: Column,
-                 keyC: String, outC: String): DataFrame =
-      pairs
-        .select(col(idC),
-          (distC.cast("decimal(38,0)") * lit(mExclusive) + col(keyC)).as("pd"))
-        .groupBy(col(idC))
-        .agg(min(col("pd")).as("pd"))
-        .select(col(idC), (col("pd") % lit(mExclusive)).cast("long").as(outC))
     // guarded like the scalars: a failed codebook build joins the seed job
     val subC = graft.sources.Overlap.guarding(cellsT)(
       subspaces(mdSeeds("pq:", kCodes, "ccid"), "cv", "csub", m, sd)
         .localCheckpoint())
     val cells = cellsT()
-    val assigned = argminTo(q.crossJoin(broadcast(cells)), "id",
-      call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid")
-    // PQ encode (whole corpus — the index-build cost)
-    val d2sub = call_function("long_sq_dist", col("sub"), col("csub"))
-    val codes = argminTo(
-      subspaces(q, "qv", "sub", m, sd).join(broadcast(subC), "s")
-        .withColumn("ik", col("id") * m + col("s")), // (id, s) packed for the argmin
-      "ik", d2sub, "ccid", "code")
-      .select(expr(s"ik div $m").as("id"),
-        pmod(col("ik"), lit(m)).cast("int").as("s"), col("code"))
+    // cell assignment + PQ encode (whole corpus — the index-build cost)
+    val (assigned, codes) = pqAssignEncode(q, cells, subC, m, sd, mExclusive)
     (q, cells, assigned, subC, codes, sd)
   }
+
+  /** Decimal-packed argmin (the q95/q79 lesson): per `idC`, the `keyC`
+    * with the smallest `distC`, ties to the smaller key, as
+    * min(dist·radix + key) over decimal(38,0) — the identical
+    * lexicographic (dist, key) order in a mutable 16-byte buffer, so the
+    * pairs stream through a map-side-combining HashAggregate; a
+    * min_by(struct) buffer is immutable and would silently plan
+    * SortAggregateExec, sorting every candidate pair. Exact only while
+    * 0 <= key < `radix` — callers pass a radix covering every key (and
+    * require non-negative ids). */
+  private def packedArgmin(pairs: DataFrame, idC: String, distC: Column,
+                           keyC: String, outC: String,
+                           radix: Long): DataFrame =
+    pairs
+      .select(col(idC),
+        (distC.cast("decimal(38,0)") * lit(radix) + col(keyC)).as("pd"))
+      .groupBy(col(idC))
+      .agg(min(col("pd")).as("pd"))
+      .select(col(idC), (col("pd") % lit(radix)).cast("long").as(outC))
+
+  /** Route every `q` (id, qv) vector to its integer-L2-nearest cell and
+    * encode each of its m subspaces against the codebooks — ONE
+    * implementation behind the build ([[ivfPqIndex]]) and the batch
+    * encode against a stored index ([[encodeAgainstStored]]). `radix`
+    * must exceed every id, cid and ccid. Returns (assigned (id, cid),
+    * codes (id, s, code)). */
+  private def pqAssignEncode(q: DataFrame, cells: DataFrame,
+                             subC: DataFrame, m: Int, sd: Int,
+                             radix: Long): (DataFrame, DataFrame) = {
+    val assigned = packedArgmin(q.crossJoin(broadcast(cells)), "id",
+      call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid",
+      radix)
+    val codes = packedArgmin(
+      subspaces(q, "qv", "sub", m, sd).join(broadcast(subC), "s")
+        .withColumn("ik", col("id") * m + col("s")), // (id, s) packed for the argmin
+      "ik", call_function("long_sq_dist", col("sub"), col("csub")), "ccid",
+      "code", radix)
+      .select(expr(s"ik div $m").as("id"),
+        pmod(col("ik"), lit(m)).cast("int").as("s"), col("code"))
+    (assigned, codes)
+  }
+
+  /** The stored code rows (cid, id, s, code, fp) for an encoded batch:
+    * codes joined to their cell and to the raw per-id hash, fp kept on
+    * the s = 0 row only (the token term rides one row per vector). */
+  private def pqCodeRows(codes: DataFrame, assigned: DataFrame,
+                         emb: DataFrame, idCol: String,
+                         vecCol: String): DataFrame =
+    codes.join(assigned.select(col("id"), col("cid")), Seq("id"))
+      .join(pqFps(emb, idCol, vecCol), Seq("id"))
+      .select(col("cid"), col("id"), col("s"), col("code"),
+        when(col("s") === 0, col("fp")).as("fp"))
 
   /** Per-id raw-content hashes for a PQ batch — the token terms that ride
     * the s = 0 code rows. */
@@ -1287,11 +1318,7 @@ object Similarity {
     // sampling pass AND the clustered shuffle — unmaterialized, the
     // whole-corpus encode argmin (the build's dominant cost) would run
     // twice
-    val codesCid = codes.join(assigned.select(col("id"), col("cid")),
-        Seq("id"))
-      .join(pqFps(emb, idCol, vecCol), Seq("id"))
-      .select(col("cid"), col("id"), col("s"), col("code"),
-        when(col("s") === 0, col("fp")).as("fp"))
+    val codesCid = pqCodeRows(codes, assigned, emb, idCol, vecCol)
       .localCheckpoint(true)
     // token folded from the checkpointed s = 0 code rows instead of a
     // second (memo-cold) corpus scan (r17; the sparseBuildStored
@@ -1360,27 +1387,8 @@ object Similarity {
     if (!bMin.isNullAt(0))
       require(bMin.getLong(0) >= 0,
         s"non-negative ids required; saw min(id)=${bMin.getLong(0)}")
-    def argminTo(pairs: DataFrame, idC: String, distC: Column,
-                 keyC: String, outC: String): DataFrame =
-      pairs
-        .select(col(idC),
-          (distC.cast("decimal(38,0)") * lit(mEx) + col(keyC)).as("pd"))
-        .groupBy(col(idC))
-        .agg(min(col("pd")).as("pd"))
-        .select(col(idC), (col("pd") % lit(mEx)).cast("long").as(outC))
-    val assigned = argminTo(q.crossJoin(broadcast(cells)), "id",
-      call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid")
-    val codes = argminTo(
-      subspaces(q, "qv", "sub", m, sd).join(broadcast(subC), "s")
-        .withColumn("ik", col("id") * m + col("s")),
-      "ik", call_function("long_sq_dist", col("sub"), col("csub")),
-      "ccid", "code")
-      .select(expr(s"ik div $m").as("id"),
-        pmod(col("ik"), lit(m)).cast("int").as("s"), col("code"))
-    codes.join(assigned.select(col("id"), col("cid")), Seq("id"))
-      .join(pqFps(newEmb, idCol, vecCol), Seq("id"))
-      .select(col("cid"), col("id"), col("s"), col("code"),
-        when(col("s") === 0, col("fp")).as("fp"))
+    val (assigned, codes) = pqAssignEncode(q, cells, subC, m, sd, mEx)
+    pqCodeRows(codes, assigned, newEmb, idCol, vecCol)
   }
 
   /** Build `index` from `emb` iff its fingerprint does not match the
@@ -1389,10 +1397,10 @@ object Similarity {
   def ivfPqEnsureStored(emb: DataFrame, idCol: String, vecCol: String,
                         nCells: Int, m: Int, kCodes: Int, scale: Long,
                         index: graft.sources.PqIndex): Unit =
-    if (!index.isFresh(
-        pqMeta(emb, idCol, vecCol, nCells, m, kCodes, scale, index)))
-      ivfPqBuildStored(emb, idCol, vecCol, nCells, m, kCodes, scale, index)
-        .collect()
+    index.ensureCovers(None,
+      pqMeta(emb, idCol, vecCol, nCells, m, kCodes, scale, index),
+      "ivfPqCorpusToken")(
+      ivfPqBuildStored(emb, idCol, vecCol, nCells, m, kCodes, scale, index))
 
   /** O(batch) PQ ingest for genuinely-new ids — [[ivfPqExtendStored]]
     * without the eviction rewrite ([[ivfAppendStored]]'s contract for
@@ -1430,25 +1438,18 @@ object Similarity {
     * cid-clustered code rows (row-group-pruned to the probed cells) — no
     * encode or assignment stages in the plan; the raw corpus is touched
     * only for the query vectors and the k-bounded exact rerank. Missing or
-    * stale index self-heals with one synchronous build. */
+    * stale index self-heals with one synchronous build. `queryPred` must
+    * select a BOUNDED query set — [[ivfPqTopK]]'s broadcast
+    * requirement. */
   def ivfPqSearchStored(emb: DataFrame, idCol: String, vecCol: String,
                         nCells: Int, nProbe: Int, m: Int, kCodes: Int,
                         scale: Long, queryPred: Column, rerank: Int, k: Int,
                         index: graft.sources.PqIndex,
                         corpusToken: Option[String] = None): DataFrame = {
-    corpusToken match {
-      case Some(tok) =>
-        if (!index.isCurrent(tok)) {
-          ivfPqBuildStored(emb, idCol, vecCol, nCells, m, kCodes, scale,
-            index).collect()
-          require(index.isCurrent(tok),
-            "caller corpus token does not match this corpus + params — " +
-              "was it computed by ivfPqCorpusToken with the same arguments?")
-        }
-      case None =>
-        ivfPqEnsureStored(emb, idCol, vecCol, nCells, m, kCodes, scale,
-          index)
-    }
+    index.ensureCovers(corpusToken,
+      pqMeta(emb, idCol, vecCol, nCells, m, kCodes, scale, index),
+      "ivfPqCorpusToken")(
+      ivfPqBuildStored(emb, idCol, vecCol, nCells, m, kCodes, scale, index))
     graft.plans.VectorExpressions.register(emb.sparkSession)
     val q = emb.where(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), fixedPoint(vecCol, scale).as("qv"))
@@ -1555,19 +1556,13 @@ object Similarity {
       .limit(sCount)
       .select(col("id").as("sid"), col("qv").as("sv"))
       .localCheckpoint()
-    def argminTo(pairs: DataFrame, idC: String, distC: org.apache.spark.sql.Column,
-                 keyC: String, outC: String): DataFrame =
-      pairs
-        .select(col(idC),
-          (distC.cast("decimal(38,0)") * lit(mExclusive) + col(keyC)).as("pd"))
-        .groupBy(col(idC))
-        .agg(min(col("pd")).as("pd"))
-        .select(col(idC), (col("pd") % lit(mExclusive)).cast("long").as(outC))
     // route every seed, then every doc, to its super-cell (√K candidates)
-    val seedSuper = argminTo(seeds.crossJoin(broadcast(supers)), "cid",
-      call_function("long_sq_dist", col("cv"), col("sv")), "sid", "sid")
-    val docSuper = argminTo(q.crossJoin(broadcast(supers)), "id",
-      call_function("long_sq_dist", col("qv"), col("sv")), "sid", "sid")
+    val seedSuper = packedArgmin(seeds.crossJoin(broadcast(supers)), "cid",
+      call_function("long_sq_dist", col("cv"), col("sv")), "sid", "sid",
+      mExclusive)
+    val docSuper = packedArgmin(q.crossJoin(broadcast(supers)), "id",
+      call_function("long_sq_dist", col("qv"), col("sv")), "sid", "sid",
+      mExclusive)
     // then pick the cell among that super-cell's seeds (expected √K rows)
     val cellCands = q.join(docSuper, Seq("id"))
       .join(broadcast(seeds.join(seedSuper, Seq("cid"))), Seq("sid"))
@@ -1577,8 +1572,9 @@ object Similarity {
     // routing chain (super-route, cell-route, vector rejoin). The pair
     // join needs (qv, n2) on both sides anyway, so materializing the
     // relation once strictly beats recomputing the routing per consumer.
-    val assigned = argminTo(cellCands, "id",
-      call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid")
+    val assigned = packedArgmin(cellCands, "id",
+      call_function("long_sq_dist", col("qv"), col("cv")), "cid", "cid",
+      mExclusive)
       .join(q, Seq("id"))
       .withColumn("n2", call_function("long_dot", col("qv"), col("qv")))
       .localCheckpoint()

@@ -337,16 +337,8 @@ object TfIdf {
     // the ledger fp, and the token's fingerprint terms all derive from
     // this one checkpointed per-doc projection instead; at 100 TB that
     // is one corpus read where there were three.
-    val perDoc = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        xxhash64(col(idCol), col(textCol)).as("fp"),
-        graft.functions.TextFunctions.termCounts(tokens(col(textCol)))
-          .as("tcs"))
-      .localCheckpoint(true)
-    val tf = perDoc
-      .select(col("id"), explode(col("tcs")).as("tc"))
-      .select(col("id"), col("tc.term").as("term"),
-        col("tc.tf").cast("long").as("tf"))
+    val perDoc = perDocPass(docs, idCol, textCol)
+    val tf = tfOf(perDoc)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // materialized ONCE: the weight relation feeds the norms write, the
     // range-partitioner's SAMPLING pass, and the postings shuffle — an
@@ -357,13 +349,6 @@ object TfIdf {
       .select(col("term"), col("id"), col("df"), col("tf"),
         (col("tf") * expr(s"$idfScale div df")).as("w"))
       .localCheckpoint(true)
-    val n2 = w.groupBy(col("id"))
-      .agg(sum(col("w").cast("decimal(38,0)") * col("w")).as("n2"))
-    val ledger = perDoc.select(col("id"), col("fp"))
-      .join(n2, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n2"), lit(0).cast("decimal(38,0)")).as("n2"),
-        col("fp"))
     // the token's fingerprint terms fold from the checkpointed per-doc
     // rows — identical by the fold-invariance contract to textScanToken
     // over the corpus (ONE render/terms implementation, so the formats
@@ -377,7 +362,7 @@ object TfIdf {
       graft.sources.CorpusToken.render("text3",
         graft.sources.CorpusToken.terms(perDoc, col("id"), col("fp")),
         s"idf=$idfScale|buckets=${index.nBuckets}"))
-    index.writeIndex(w, ledger, meta)
+    index.writeIndex(w, ledgerOf(perDoc, w), meta)
     sparseCensus(index)
   }
 
@@ -410,8 +395,44 @@ object TfIdf {
   def sparseEnsureStored(docs: DataFrame, idCol: String, textCol: String,
                          index: graft.sources.TextIndex,
                          idfScale: Long = 10000L): Unit =
-    if (!index.isFresh(textMeta(docs, idCol, textCol, idfScale, index)))
-      sparseBuildStored(docs, idCol, textCol, index, idfScale).collect()
+    index.ensureCovers(None,
+      textMeta(docs, idCol, textCol, idfScale, index), "sparseCorpusToken")(
+      sparseBuildStored(docs, idCol, textCol, index, idfScale))
+
+  /** One checkpointed text pass over a doc frame — (id, fp, term
+    * counts) — feeding tokenization AND the ledger fingerprint: the
+    * corpus at build time, the batch at ingest (pre-r17 each read the
+    * text two or three times). */
+  private def perDocPass(docs: DataFrame, idCol: String,
+                         textCol: String): DataFrame =
+    docs.where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        xxhash64(col(idCol), col(textCol)).as("fp"),
+        graft.functions.TextFunctions.termCounts(tokens(col(textCol)))
+          .as("tcs"))
+      .localCheckpoint(true)
+
+  private def tfOf(perDoc: DataFrame): DataFrame =
+    perDoc.select(col("id"), explode(col("tcs")).as("tc"))
+      .select(col("id"), col("tc.term").as("term"),
+        col("tc.tf").cast("long").as("tf"))
+
+  /** The per-doc norm LEDGER rows — one row per doc of `perDoc` (id, fp)
+    * (n2 = 0 when the doc has no weighted terms in `w`) carrying the
+    * fingerprint term fp = xxhash64(id, text), read by token folds and
+    * rebuilds instead of the corpus — derived from a checkpointed per-doc
+    * pass (or the stored ledger, on a rebuild), so no second text scan.
+    * ONE implementation behind the build, both ingests and the
+    * rebuild. */
+  private def ledgerOf(perDoc: DataFrame, w: DataFrame): DataFrame = {
+    val n2 = w.groupBy(col("id"))
+      .agg(sum(col("w").cast("decimal(38,0)") * col("w")).as("n2"))
+    perDoc.select(col("id"), col("fp"))
+      .join(n2, Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("n2"), lit(0).cast("decimal(38,0)")).as("n2"),
+        col("fp"))
+  }
 
   /** INCREMENTAL index ingest under the STALE-IDF contract — exactly how
     * production lexical search absorbs documents between statistics
@@ -424,56 +445,10 @@ object TfIdf {
     * [[sparseBuildStored]]). Upsert is keyed on doc id: a re-ingested doc
     * evicts its old rows from every term list. Returns the per-df census
     * read back from disk. */
-  /** One checkpointed text pass over an ingest batch — (id, fp, term
-    * counts) — feeding tokenization AND the ledger fingerprint (the
-    * [[sparseBuildStored]] single-pass discipline applied to the batch
-    * paths; pre-r17 each ingest read the batch text twice). */
-  private def batchPerDoc(newDocs: DataFrame, idCol: String,
-                          textCol: String): DataFrame =
-    newDocs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        xxhash64(col(idCol), col(textCol)).as("fp"),
-        graft.functions.TextFunctions.termCounts(tokens(col(textCol)))
-          .as("tcs"))
-      .localCheckpoint(true)
-
-  private def tfOf(perDoc: DataFrame): DataFrame =
-    perDoc.select(col("id"), explode(col("tcs")).as("tc"))
-      .select(col("id"), col("tc.term").as("term"),
-        col("tc.tf").cast("long").as("tf"))
-
-  /** The per-doc norm LEDGER rows — one row per doc with non-null text
-    * (n2 = 0 when the doc yields no terms) carrying the fingerprint term
-    * fp = xxhash64(id, text), read by token folds and rebuilds instead
-    * of the corpus — derived from the checkpointed per-doc pass, so no
-    * second text scan. */
-  private def ledgerOf(perDoc: DataFrame, w: DataFrame): DataFrame = {
-    val n2 = w.groupBy(col("id"))
-      .agg(sum(col("w").cast("decimal(38,0)") * col("w")).as("n2"))
-    perDoc.select(col("id"), col("fp"))
-      .join(n2, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n2"), lit(0).cast("decimal(38,0)")).as("n2"),
-        col("fp"))
-  }
-
   def sparseExtendStored(newDocs: DataFrame, idCol: String, textCol: String,
                          index: graft.sources.TextIndex,
                          idfScale: Long = 10000L): DataFrame = {
-    val perDoc = batchPerDoc(newDocs, idCol, textCol)
-    val tf = tfOf(perDoc)
-    // one row per term: every posting of a term carries the same build df
-    val storedDf = index.readPostings()
-      .groupBy(col("term")).agg(max(col("df")).as("df"))
-    // eager localCheckpoint: w's plan READS the stored postings (for the
-    // stale df); the upsert REPLACES that directory, and a lazy w
-    // re-executed by the second swap would read just-deleted part files.
-    // Batch-sized materialization severs the lineage before any swap.
-    val w = tf.join(storedDf, Seq("term"), "left")
-      .select(col("term"), col("id"),
-        coalesce(col("df"), lit(1L)).as("df"), col("tf"),
-        (col("tf") * expr(s"$idfScale div coalesce(df, 1)")).as("w"))
-      .localCheckpoint(true)
+    val (perDoc, w) = staleIdfBatch(newDocs, idCol, textCol, index, idfScale)
     // eviction keys from the BATCH, not the ledger: a doc re-posted with
     // NULL text produces no ledger row (it leaves the covered corpus)
     // but its old rows must still be evicted — so they come from newDocs
@@ -481,6 +456,27 @@ object TfIdf {
     index.upsert(w, ledgerOf(perDoc, w),
       evictIds = Some(newDocs.select(col(idCol).as("id"))))
     sparseCensus(index)
+  }
+
+  /** A batch's checkpointed per-doc pass and its posting rows weighted
+    * against the STORED df (unseen terms df = 1) — ONE implementation
+    * behind the keyed and the append ingest. `w` is materialized
+    * batch-sized: its plan READS the stored postings (for the stale df)
+    * that the ingest then replaces or appends to, and a lazy `w`
+    * re-executed after a swap would read just-deleted part files. */
+  private def staleIdfBatch(newDocs: DataFrame, idCol: String,
+                            textCol: String, index: graft.sources.TextIndex,
+                            idfScale: Long): (DataFrame, DataFrame) = {
+    val perDoc = perDocPass(newDocs, idCol, textCol)
+    // one row per term: every posting of a term carries the same build df
+    val storedDf = index.readPostings()
+      .groupBy(col("term")).agg(max(col("df")).as("df"))
+    val w = tfOf(perDoc).join(storedDf, Seq("term"), "left")
+      .select(col("term"), col("id"),
+        coalesce(col("df"), lit(1L)).as("df"), col("tf"),
+        (col("tf") * expr(s"$idfScale div coalesce(df, 1)")).as("w"))
+      .localCheckpoint(true)
+    (perDoc, w)
   }
 
   /** O(batch) text ingest for genuinely-new doc ids —
@@ -503,17 +499,7 @@ object TfIdf {
     // pre-batch corpus version (O(1) token-file read)
     if (expectToken.exists(t => !index.isCurrent(t)))
       return sparseCensus(index)
-    val perDoc = batchPerDoc(newDocs, idCol, textCol)
-    val tf = tfOf(perDoc)
-    val storedDf = index.readPostings()
-      .groupBy(col("term")).agg(max(col("df")).as("df"))
-    // batch-sized materialization before any file lands (the
-    // sparseExtendStored lineage discipline)
-    val w = tf.join(storedDf, Seq("term"), "left")
-      .select(col("term"), col("id"),
-        coalesce(col("df"), lit(1L)).as("df"), col("tf"),
-        (col("tf") * expr(s"$idfScale div coalesce(df, 1)")).as("w"))
-      .localCheckpoint(true)
+    val (perDoc, w) = staleIdfBatch(newDocs, idCol, textCol, index, idfScale)
     index.appendDocs(w, ledgerOf(perDoc, w))
     sparseCensus(index)
   }
@@ -553,14 +539,7 @@ object TfIdf {
       .select(col("term"), col("id"), col("df"), col("tf"),
         (col("tf") * expr(s"$idfScale div df")).as("w"))
       .localCheckpoint(true)
-    val n2 = w.groupBy(col("id"))
-      .agg(sum(col("w").cast("decimal(38,0)") * col("w")).as("n2"))
     val n = nT()
-    val ledger = n.select(col("id"), col("fp"))
-      .join(n2, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n2"), lit(0).cast("decimal(38,0)")).as("n2"),
-        col("fp"))
     // fingerprint reconstructed from the ledger — identical by the
     // fold-invariance contract to textScanToken over the merged corpus
     // (ONE render implementation, so the formats cannot drift). `def`:
@@ -569,7 +548,7 @@ object TfIdf {
     def meta = graft.sources.CorpusToken.render("text3",
       graft.sources.CorpusToken.terms(n, col("id"), col("fp")),
       s"idf=$idfScale|buckets=${index.nBuckets}")
-    index.writeIndex(w, ledger, meta)
+    index.writeIndex(w, ledgerOf(n, w), meta)
     sparseCensus(index)
   }
 
@@ -587,21 +566,9 @@ object TfIdf {
                          maxDf: Long = 100L, idfScale: Long = 10000L,
                          prune: Boolean = false,
                          corpusToken: Option[String] = None): DataFrame = {
-    corpusToken match {
-      case Some(tok) =>
-        // O(1) freshness: compare the caller's corpus version against
-        // the index's covered version — zero corpus jobs when fresh
-        if (!index.isCurrent(tok)) {
-          sparseBuildStored(docs, idCol, textCol, index, idfScale)
-            .collect()
-          require(index.isCurrent(tok),
-            "caller corpus token does not match this corpus + params — " +
-              "was it computed by sparseCorpusToken with the same " +
-              "arguments?")
-        }
-      case None =>
-        sparseEnsureStored(docs, idCol, textCol, index, idfScale)
-    }
+    index.ensureCovers(corpusToken,
+      textMeta(docs, idCol, textCol, idfScale, index), "sparseCorpusToken")(
+      sparseBuildStored(docs, idCol, textCol, index, idfScale))
     sparseRank(index.readPostings(), index.readNorms(), queryPred, k,
       maxDf, prune)
   }

@@ -184,6 +184,7 @@ object Curation {
     graft.operators.TfIdf.sparseSearchStored(t(s, dir)("documents"),
       "doc_id", "text", queryPred = col("id") % 89 === 3, k = 5,
       index = textIndex(s, dir), maxDf = 400L)
+      .orderBy(col("qid"), col("rank"))
 
   // OFFLINE IVF-PQ build (q125's index half persisted): integer cell
   // grid + subspace codebooks + cid-clustered code rows through the
@@ -390,6 +391,7 @@ object Curation {
     graft.operators.TfIdf.sparseSearchStored(docs, "doc_id", "text",
       queryPred = col("id") >= 40 && col("id") < 46, k = 5, index = idx,
       maxDf = 400L, corpusToken = Some(token))
+      .orderBy(col("qid"), col("rank"))
   }
 
   // TOKEN-GATED PQ serving (q169's contract for the compressed store):
@@ -680,6 +682,7 @@ object Curation {
     graft.operators.TfIdf.sparseCosineTopK(
       t(s, dir)("documents"), "doc_id", "text",
       queryPred = col("id") % 97 === 0, k = 5, maxDf = 400L)
+      .orderBy(col("qid"), col("rank"))
 
   // Deterministic random walks over the q121 link graph (Graphs.
   // randomWalks): 3 hops from each doc_id % 61 == 0 seed, next node =

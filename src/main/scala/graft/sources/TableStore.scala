@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -58,29 +58,8 @@ final class TableStore(spark: SparkSession, root: String,
     Schemas.tables.keys.foreach(initTable)
   }
 
-  /** Crash recovery for [[swapIn]]'s two-rename window: a kill between
-    * `dest→old` and `tmp→dest` leaves the table ABSENT with a complete
-    * `.old-*` beside it — without recovery, `read()` would silently return
-    * an empty table and the next diff would treat every row as new. The
-    * `.tmp-*` (new data, possibly incomplete) is discarded: the swap never
-    * completed, so the pre-swap state is the durable truth. Leftover tmp/old
-    * dirs from crashes AFTER a completed swap are plain garbage — swept. */
-  private def recoverSwap(table: String): Unit = {
-    val glob = fs.globStatus(new Path(path(table) + ".{old,tmp}-*"))
-    if (glob == null || glob.isEmpty) return
-    if (!exists(table)) {
-      val olds = glob.filter(_.getPath.getName.contains(".old-"))
-      if (olds.nonEmpty) {
-        // at most one .old can exist (single writer, deleted per swap);
-        // rename failure returns false — surface it, the .old is the only
-        // durable copy of the table
-        require(fs.rename(olds.head.getPath, new Path(path(table))),
-          s"recoverSwap($table): restoring ${olds.head.getPath} failed")
-      }
-    }
-    fs.globStatus(new Path(path(table) + ".{old,tmp}-*"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
+  private def recoverSwap(table: String): Unit =
+    TableStore.recoverDir(fs, path(table), table)
 
   def initTable(table: String): Unit = {
     require(Schemas.tables.contains(table), s"unknown table $table")
@@ -241,21 +220,64 @@ final class TableStore(spark: SparkSession, root: String,
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
   }
 
-  /** Materialize `df` into a fresh dir, then swap it in (write-temp +
-    * rename; rename is atomic on HDFS-like filesystems). */
-  private def swapIn(table: String, df: DataFrame): Unit = {
-    val dest = new Path(path(table))
-    val tmp = new Path(path(table) + ".tmp-" + java.util.UUID.randomUUID())
-    write(table, align(table, df), mode = "errorifexists", dest = tmp.toString)
-    val old = new Path(path(table) + ".old-" + java.util.UUID.randomUUID())
+  /** Materialize `df` into a fresh dir, then swap it in
+    * ([[TableStore.swapDir]]). */
+  private def swapIn(table: String, df: DataFrame): Unit =
+    TableStore.swapDir(fs, path(table), table) { tmp =>
+      write(table, align(table, df), mode = "errorifexists",
+        dest = tmp.toString)
+    }
+}
+
+/** The write-temp + two-rename directory swap, shared by [[TableStore]]
+  * and the index stores ([[IndexStore]]). */
+private[sources] object TableStore {
+
+  /** Replace the directory `dest` with what `write` puts into a fresh
+    * `<dest>.tmp-<uuid>`: rename `dest` to `<dest>.old-<uuid>`, rename the
+    * tmp dir to `dest`, drop the old copy. Readers see the old or the new
+    * directory, never a partial one (rename is atomic on HDFS-like
+    * filesystems); a kill between the two renames is healed by
+    * [[recoverDir]]. */
+  def swapDir(fs: FileSystem, dest: String, label: String)(
+      write: Path => Unit): Unit = {
+    val destP = new Path(dest)
+    val tmp = new Path(dest + ".tmp-" + java.util.UUID.randomUUID())
+    write(tmp)
+    val old = new Path(dest + ".old-" + java.util.UUID.randomUUID())
     // Hadoop rename reports failure by RETURNING FALSE, not throwing — an
-    // unchecked failed rename here would silently no-op the upsert and the
-    // next recoverSwap would garbage-collect the .tmp holding the only
-    // copy of the new state
-    if (fs.exists(dest)) require(fs.rename(dest, old),
-      s"swapIn($table): rename $dest -> $old failed")
-    require(fs.rename(tmp, dest),
-      s"swapIn($table): rename $tmp -> $dest failed — pre-swap state is in $old")
+    // unchecked failed rename here would silently drop the new version
+    // and the next recoverDir would garbage-collect the .tmp holding the
+    // only copy of it
+    if (fs.exists(destP)) require(fs.rename(destP, old),
+      s"swapIn($label): rename $destP -> $old failed")
+    require(fs.rename(tmp, destP),
+      s"swapIn($label): rename $tmp -> $destP failed — pre-swap state is in $old")
     fs.delete(old, true)
+  }
+
+  /** Crash recovery for [[swapDir]]'s two-rename window: a kill between
+    * `dest→old` and `tmp→dest` leaves `dest` ABSENT with a complete
+    * `.old-*` beside it — without recovery, a read would silently see an
+    * empty table (the next diff would treat every row as new). The
+    * `.tmp-*` (new data, possibly incomplete) is discarded: the swap never
+    * completed, so the pre-swap state is the durable truth. Leftover
+    * tmp/old dirs from crashes AFTER a completed swap are plain garbage —
+    * swept. */
+  def recoverDir(fs: FileSystem, dest: String, label: String): Unit = {
+    val glob = fs.globStatus(new Path(dest + ".{old,tmp}-*"))
+    if (glob == null || glob.isEmpty) return
+    if (!fs.exists(new Path(dest))) {
+      val olds = glob.filter(_.getPath.getName.contains(".old-"))
+      if (olds.nonEmpty) {
+        // at most one .old can exist (single writer, deleted per swap);
+        // rename failure returns false — surface it, the .old is the only
+        // durable copy
+        require(fs.rename(olds.head.getPath, new Path(dest)),
+          s"recoverSwap($label): restoring ${olds.head.getPath} failed")
+      }
+    }
+    fs.globStatus(new Path(dest + ".{old,tmp}-*"))
+      .foreach(st => fs.delete(st.getPath, true))
   }
 }

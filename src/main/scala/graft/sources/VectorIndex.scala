@@ -5,27 +5,89 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-/** Shared parquet-directory machinery for prebuilt ANN index stores — the
-  * offline half of the production architecture (build once, search many).
-  * Tables swap in atomically ([[TableStore]]'s write-temp + two-rename
-  * discipline, crash-recoverable); the build fingerprint (`_meta`) lands
-  * LAST, so a freshness probe can only see it once every byte it vouches
-  * for is durable.
+/** One physically-partitioned index table, described by the only things
+  * the maintenance verbs need that differ between index families: its
+  * name, its partition column, its schema, its band function (`key` —
+  * hashed for string keys — mod the band count), its sort key (`key`
+  * again: rows cluster by what they band on), and which rows carry the
+  * covered-corpus token's per-row `fp` term (`tokenRows`; None when the
+  * table carries no token term at all). A table banded on `id` itself
+  * keeps a key's rows in that key's own band, so its touched set is
+  * derived from the keys without a scan. */
+private[sources] final case class IndexTable(
+    name: String, partCol: String, key: String, schema: StructType,
+    hashKey: Boolean = false, tokenRows: Option[Column] = None) {
+
+  /** The band of a row under an `n`-band layout. */
+  def band(n: Int): Column =
+    pmod(if (hashKey) xxhash64(col(key)) else col(key), lit(n.toLong))
+      .cast("int")
+
+  /** The schema plus the partition column, as written. */
+  def full: StructType =
+    StructType(schema.fields :+ StructField(partCol, IntegerType))
+
+  /** Partition-clustered, row-balanced shuffle for a write of this table:
+    * RANGE-partition on (partCol, key, id) — every task gets a
+    * contiguous, row-balanced slice, so full cluster parallelism with
+    * zero hash-collision skew — then sort (partCol, key) within tasks.
+    * Three write layouts lost A/Bs to this one: `repartition(dataKey)`
+    * scatters every dir across every task (tasks-per-dir small files the
+    * next maintenance read pays for); `repartition(partCol)` collapses to
+    * nParts tasks (the 1000× text build tripled); hash on a partCol×subs
+    * composite throws ~256 balls into 256 bins — a third of the tasks
+    * empty, the loaded ones 2–3×. The id spread gives ranges a
+    * high-cardinality tiebreak so even a single hot partition value
+    * splits across tasks; each dir still receives ~tasks/nParts
+    * contiguous key-sorted files, and the leading partCol sort satisfies
+    * the dynamic-partition writer's ordering requirement — no extra
+    * (unstable) sort node to break the key run lengths. */
+  def clustered(df: DataFrame): DataFrame =
+    df.repartitionByRange(col(partCol), col(key), col("id"))
+      .sortWithinPartitions(col(partCol), col(key))
+}
+
+/** Shared parquet-directory machinery for prebuilt index stores — the
+  * offline half of the production architecture (build once, maintain
+  * incrementally, search many). Every family ([[VectorIndex]],
+  * [[PqIndex]], [[TextIndex]]) runs ONE lifecycle written here once,
+  * parameterized only by its [[IndexTable]] descriptions:
   *
-  * Large tables are PHYSICALLY PARTITIONED (`<table>/<col>=<n>/` dirs) so
-  * incremental maintenance rewrites only the partitions a batch touches —
-  * the production layout: an ingest/delete over a 100 TB index must cost
+  *   - build publish ([[publishBuild]]): clear `_meta`/`_token`, swap
+  *     every table in (overlapped), fold the fingerprint on a driver
+  *     thread alongside, then publish token and meta — LAST, so a
+  *     freshness probe can only see them once every byte they vouch for
+  *     is durable;
+  *   - keyed upsert ([[upsertRows]]) and delete ([[deleteRows]]) by `id`:
+  *     rewrite only the partitions holding the batch's rows or prior rows
+  *     of its ids, then fold the token (added terms in, evicted out);
+  *   - atomic append ([[appendRows]]): batch files land inside the live
+  *     partitions under one commit marker that also carries the token;
+  *   - targeted compaction ([[compactRows]]): refold only partitions at a
+  *     file-count threshold.
+  *
+  * Whole tables swap in with [[TableStore.swapDir]]'s write-temp +
+  * two-rename discipline (crash-recoverable). Large tables are
+  * PHYSICALLY PARTITIONED (`<table>/<col>=<n>/` dirs) so incremental
+  * maintenance rewrites only the partitions a batch touches — the
+  * production layout: an ingest/delete over a 100 TB index must cost
   * ∝ touched cells, not ∝ corpus. Partition maintenance writes every
   * replacement partition in ONE job into a dot-prefixed temp dir
   * (invisible to Spark's file listing), then swaps each partition with
   * the same two-rename discipline; a crash mid-swap leaves `.old-*`
   * markers that [[recoverPartitions]] restores, and every maintenance op
-  * is keyed + idempotent, so a retry after a partial swap converges. */
+  * is keyed + idempotent, so a retry after a partial swap converges.
+  * Every mutating verb runs under the store's single-writer lease. */
 private[sources] abstract class IndexStore(spark: SparkSession,
                                            root: String) {
 
-  protected def path(table: String) = s"$root/$table"
-  protected def fs = new Path(root)
+  private type Delta = (Long, BigInt, BigInt)
+  private val NoDelta: Delta = (0L, BigInt(0), BigInt(0))
+  private def plus(a: Delta, b: Delta): Delta =
+    (a._1 + b._1, a._2 + b._2, a._3 + b._3)
+
+  private def path(table: String) = s"$root/$table"
+  private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Partition count NEW layouts of this store are written with. */
@@ -41,7 +103,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * their own until rebuilt. Pre-marker indexes fall back to the
     * configured constant (their fingerprints rebuild-gate them anyway
     * on the next ensure). */
-  protected def liveBands(table: String): Int = {
+  private def liveBands(table: String): Int = {
     val m = new Path(s"${path(table)}/_layout")
     if (!fs.exists(m)) configuredBands
     else {
@@ -54,52 +116,26 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
   }
 
-  /** [[TableStore.recoverSwap]]'s contract, restated for the index dirs:
-    * a kill between the two renames leaves the table absent with the
-    * complete pre-swap copy in `.old-*` — restore it; leftover tmp/old
-    * dirs from post-swap crashes are garbage — swept. */
-  protected def recoverSwap(table: String): Unit = {
-    val glob = fs.globStatus(new Path(path(table) + ".{old,tmp}-*"))
-    if (glob == null || glob.isEmpty) return
-    if (!fs.exists(new Path(path(table)))) {
-      val olds = glob.filter(_.getPath.getName.contains(".old-"))
-      if (olds.nonEmpty)
-        require(fs.rename(olds.head.getPath, new Path(path(table))),
-          s"recoverSwap($table): restoring ${olds.head.getPath} failed")
+  private def swapIn(table: String, df: DataFrame, schema: StructType,
+                     partitionBy: Option[String] = None): Unit =
+    TableStore.swapDir(fs, path(table), table) { tmp =>
+      val w = df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
+        .write.mode("errorifexists")
+      partitionBy.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
+      // the layout marker rides the data's atomic rename, so _layout can
+      // never disagree with the dirs beside it (underscore names are
+      // invisible to Spark's file listing)
+      if (partitionBy.isDefined) {
+        val outS = fs.create(new Path(tmp, "_layout"), true)
+        try outS.write(s"bands=$configuredBands".getBytes(
+          java.nio.charset.StandardCharsets.UTF_8))
+        finally outS.close()
+      }
     }
-    fs.globStatus(new Path(path(table) + ".{old,tmp}-*"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
-
-  protected def swapIn(table: String, df: DataFrame, schema: StructType,
-                       partitionBy: Option[String] = None): Unit = {
-    val dest = new Path(path(table))
-    val tmp = new Path(path(table) + ".tmp-" + java.util.UUID.randomUUID())
-    val w = df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("errorifexists")
-    partitionBy.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
-    // the layout marker rides the data's atomic rename, so _layout can
-    // never disagree with the dirs beside it (underscore names are
-    // invisible to Spark's file listing)
-    if (partitionBy.isDefined) {
-      val outS = fs.create(new Path(tmp, "_layout"), true)
-      try outS.write(s"bands=$configuredBands".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally outS.close()
-    }
-    val old = new Path(path(table) + ".old-" + java.util.UUID.randomUUID())
-    // Hadoop rename reports failure by returning false — unchecked, a
-    // failed rename silently drops the new index version
-    if (fs.exists(dest)) require(fs.rename(dest, old),
-      s"swapIn($table): rename $dest -> $old failed")
-    require(fs.rename(tmp, dest),
-      s"swapIn($table): rename $tmp -> $dest failed — pre-swap in $old")
-    fs.delete(old, true)
-  }
 
   protected def read(table: String, schema: StructType): DataFrame = {
     recoverCommits()
-    recoverSwap(table)
+    TableStore.recoverDir(fs, path(table), table)
     require(fs.exists(new Path(path(table))),
       s"index table $table missing under $root — build the index first")
     spark.read.schema(schema).parquet(path(table))
@@ -108,20 +144,16 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   // ------------------------------------------------------------------
   // physically-partitioned tables
 
-  protected def withPart(schema: StructType, partCol: String): StructType =
-    StructType(schema.fields :+ StructField(partCol, IntegerType))
-
   /** Read a whole partitioned table; the returned frame carries `partCol`
     * from the directory names (callers filtering on it get partition
     * pruning — only the named dirs' files are listed and read). */
-  protected def readPartitioned(table: String, partCol: String,
-                                schema: StructType): DataFrame = {
+  protected def readTable(t: IndexTable): DataFrame = {
     recoverCommits()
-    recoverSwap(table)
-    recoverPartitions(table, partCol)
-    require(fs.exists(new Path(path(table))),
-      s"index table $table missing under $root — build the index first")
-    spark.read.schema(withPart(schema, partCol)).parquet(path(table))
+    TableStore.recoverDir(fs, path(t.name), t.name)
+    recoverPartitions(t)
+    require(fs.exists(new Path(path(t.name))),
+      s"index table ${t.name} missing under $root — build the index first")
+    spark.read.schema(t.full).parquet(path(t.name))
   }
 
   /** Per-partition crash recovery: a kill between a partition's two
@@ -130,43 +162,227 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * post-swap garbage — swept. (Dot-prefixed names are invisible to
     * Spark's file listing, so even unswept leftovers can't pollute a
     * read.) */
-  protected def recoverPartitions(table: String, partCol: String): Unit = {
-    val glob = fs.globStatus(new Path(path(table) + "/.{old,tmp}-*"))
+  private def recoverPartitions(t: IndexTable): Unit = {
+    val glob = fs.globStatus(new Path(path(t.name) + "/.{old,tmp}-*"))
     if (glob == null) return
     glob.foreach { st =>
       val nm = st.getPath.getName
-      val marker = nm.indexOf(s"-$partCol=")
+      val marker = nm.indexOf(s"-${t.partCol}=")
       if (nm.startsWith(".old-") && marker > 0) {
-        val live = new Path(path(table) + "/" + nm.substring(marker + 1))
+        val live = new Path(path(t.name) + "/" + nm.substring(marker + 1))
         if (!fs.exists(live))
           require(fs.rename(st.getPath, live),
-            s"recoverPartitions($table): restoring $nm failed")
+            s"recoverPartitions(${t.name}): restoring $nm failed")
         else fs.delete(st.getPath, true)
       } else fs.delete(st.getPath, true)
     }
   }
 
-  /** Partition-clustered, row-balanced shuffle for a partitioned-table
-    * write: RANGE-partition on (partCol, sortKey, spreadKey) — every
-    * task gets a contiguous, row-balanced slice, so full cluster
-    * parallelism with zero hash-collision skew — then sort
-    * (partCol, sortKey) within tasks. Three write layouts lost A/Bs to
-    * this one: `repartition(dataKey)` scatters every dir across every
-    * task (tasks-per-dir small files the next maintenance read pays
-    * for); `repartition(partCol)` collapses to nParts tasks (the 1000×
-    * text build tripled); hash on a partCol×subs composite throws ~256
-    * balls into 256 bins — a third of the tasks empty, the loaded ones
-    * 2–3×. The spread key (member id / term) gives ranges a
-    * high-cardinality tiebreak so even a single hot partition value
-    * splits across tasks; each dir still receives ~tasks/nParts
-    * contiguous key-sorted files, and the leading partCol sort
-    * satisfies the dynamic-partition writer's ordering requirement —
-    * no extra (unstable) sort node to break the key run lengths. */
-  protected def clusteredFor(df: DataFrame, partCol: String,
-                             sortKey: Column,
-                             spreadKey: Column): DataFrame =
-    df.repartitionByRange(col(partCol), sortKey, spreadKey)
-      .sortWithinPartitions(col(partCol), sortKey)
+  // ------------------------------------------------------------------
+  // the maintenance verbs
+
+  /** Persist a full build: every table swaps in, the fingerprint lands
+    * last. `partitioned` tables are banded under the CONFIGURED count and
+    * clustered ([[IndexTable.clustered]]); `flat` (name, schema, rows)
+    * tables are broadcast-sized and written whole. Overlapped independent
+    * jobs (guide §2.6): the swaps write different directories, the build
+    * paths hand in frames that read only checkpointed corpus/batch rows,
+    * never these tables, and `meta` (by-name: the builds pass the token
+    * fold over their already-checkpointed rows) reads no index table —
+    * the small swaps and the fingerprint aggregate back-fill the
+    * corpus-sized write's tail instead of serializing after it. Crash
+    * safety: `_meta`/`_token` were cleared first and land only after
+    * EVERY swap finished, so any partial combination reads as stale and
+    * rebuild-gates. */
+  protected def publishBuild(meta: => String,
+                             partitioned: Seq[(IndexTable, DataFrame)],
+                             flat: Seq[(String, StructType, DataFrame)] = Nil)
+      : Unit = withLease("writeIndex") {
+    clearMeta()
+    val tok = Overlap.future(meta)
+    // joining: the fold must not outlive the lease if a swap fails
+    val m = Overlap.joining(tok)(Overlap.jobs(
+      partitioned.map { case (t, df) => () =>
+        swapIn(t.name,
+          t.clustered(df.withColumn(t.partCol, t.band(configuredBands))),
+          t.full, partitionBy = Some(t.partCol))
+      } ++ flat.map { case (name, schema, df) => () =>
+        swapIn(name, df, schema)
+      }: _*))
+    publishToken(m)
+    publishMeta(m)
+  }
+
+  /** A batch projected onto `t`'s columns and banded under the table's
+    * LIVE layout — batch-sized and materialized once, because the
+    * maintenance plan reads it for the band census, the token delta and
+    * the written content (and a plan deriving it from this store's own
+    * tables must never re-read a just-replaced directory). */
+  private def banded(t: IndexTable, df: DataFrame): DataFrame =
+    df.select(t.schema.fieldNames.map(col).toIndexedSeq: _*)
+      .withColumn(t.partCol, t.band(liveBands(t.name)))
+      .localCheckpoint(true)
+
+  /** Keyed upsert by `id`: replace-or-add each table's `batches` rows —
+    * new ids land in their bands, re-ingested ids' old rows are evicted
+    * wherever they lived (a changed row may MOVE bands). Touched
+    * partitions per table = the batch's own bands ∪ the bands holding
+    * prior rows of its ids (an (id, band)-only column scan, skipped when
+    * the batch's bands already cover every live one); ONLY those are
+    * rewritten. `_meta` is untouched: it vouches for the BASE build, and
+    * [[isFresh]] deliberately keeps answering true — the extension is
+    * additive, not staleness. The covered-corpus `_token` IS folded
+    * (batch terms in, evicted rows' terms out, read from the stored `fp`
+    * column), so [[isCurrent]] keeps tracking exactly what the index
+    * covers.
+    *
+    * The eviction set is the ids of the token-carrying table's batch,
+    * UNIONED with `evictIds` when given — never `evictIds` alone: this
+    * set drives the touched-partition arithmetic, and a set narrower than
+    * the batch would leave batch rows in partitions outside the touched
+    * set — silently dropped by the swap while their token terms still
+    * fold in, putting the token AHEAD of the data (the one direction the
+    * [[foldToken]] contract forbids). `evictIds` exists for ids that
+    * leave the covered corpus (a doc re-posted with no text yields no
+    * ledger row, but its old rows must still go). */
+  protected def upsertRows(op: String, batches: Seq[(IndexTable, DataFrame)],
+                           evictIds: Option[DataFrame] = None): Unit =
+    withLease(op) {
+      val incs = batches.map { case (t, df) => t -> banded(t, df) }
+      val batchIds = incs.collectFirst {
+        case (t, inc) if t.tokenRows.isDefined => inc }.get
+        .select(col("id")).distinct()
+      val ids = evictIds
+        .map(_.select(col("id")).unionByName(batchIds).distinct()
+          .localCheckpoint(true))
+        .getOrElse(batchIds)
+      rewrite(incs.map { case (t, inc) => t -> Some(inc) }, ids)
+    }
+
+  /** Delete by `id` — the right-to-be-forgotten path: `ids0`'s rows are
+    * physically removed from every listed table (not tombstoned), so a
+    * later search can never return them. Only the partitions holding
+    * doomed rows are rewritten; absent ids are a no-op, so the call is
+    * idempotent. `_meta` stays (the base build it vouches for is still
+    * the index's lineage); the `_token` drops the forgotten rows'
+    * terms. */
+  protected def deleteRows(op: String, ids0: DataFrame,
+                           tables: IndexTable*): Unit = withLease(op) {
+    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
+    rewrite(tables.map(_ -> None), ids)
+  }
+
+  /** The keyed rewrite behind upsert and delete. Overlapped independent
+    * jobs (guide §2.6): each table's side (touched partitions, token
+    * deltas, swap) reads and replaces only its own table — every batch
+    * frame and `ids` are checkpointed — so no side's plan can see
+    * another's swap. The token fold runs after EVERY side joined
+    * (`Overlap.jobs` joins all threads, even on failure): a crash
+    * mid-swap leaves the token behind the data, the conservative
+    * direction — a token-gated search sees a mismatch and self-heals
+    * with a rebuild, never serving a version the index does not cover —
+    * and a full retry re-runs against the swapped state, where its added
+    * and removed terms cancel. */
+  private def rewrite(sides: Seq[(IndexTable, Option[DataFrame])],
+                      ids: DataFrame): Unit = {
+    val deltas = Array.fill(sides.size)((NoDelta, NoDelta))
+    Overlap.jobs(sides.zipWithIndex.map { case ((t, inc), i) =>
+      () => deltas(i) = rewriteTable(t, inc, ids)
+    }: _*)
+    foldToken(deltas.map(_._2).reduce(plus), deltas.map(_._1).reduce(plus))
+  }
+
+  /** One table's side of [[rewrite]]: evict `ids` from, and add `inc` to,
+    * the touched partitions. Returns (removed, added) token terms. The
+    * deltas overlap the staged write (the swapStage/swapCommit split):
+    * they read the SAME live pre-swap partitions the content plan reads
+    * (read-read, safe) or the checkpointed batch, and are joined strictly
+    * BEFORE any rename, so no read can see a half-swapped table. */
+  private def rewriteTable(t: IndexTable, inc: Option[DataFrame],
+                           ids: DataFrame): (Delta, Delta) = {
+    val live = readTable(t)
+    val touched = touchedParts(t, live, inc, ids)
+    val inTouched =
+      live.where(col(t.partCol).isin(touched.map(Integer.valueOf): _*))
+    val removedT = t.tokenRows.map(r => Overlap.future(deltaOf(
+      inTouched.where(r).join(ids, Seq("id"), "left_semi"))))
+    val addedT = for (r <- t.tokenRows; i <- inc)
+      yield Overlap.future(deltaOf(i.where(r)))
+    def joined() = (removedT.fold(NoDelta)(_()), addedT.fold(NoDelta)(_()))
+    if (touched.isEmpty) return joined()
+    val kept = inTouched.join(ids, Seq("id"), "left_anti")
+    val tmp = Overlap.guarding(removedT.toSeq ++ addedT.toSeq: _*)(
+      swapStage(t, t.clustered(inc.fold(kept)(kept.unionByName(_)))))
+    val out = joined()
+    swapCommit(t, touched, tmp)
+    out
+  }
+
+  /** The partitions a keyed rewrite must replace: for an id-banded table,
+    * the ids' own bands (derived, no scan); otherwise the batch's bands ∪
+    * the bands holding prior rows of `ids` — found by an (id, band)-only
+    * column scan that parquet prunes to two columns, and skipped when the
+    * batch's bands already cover every live partition (any evicted row
+    * necessarily lives in a covered one; a broad-vocabulary text batch
+    * touches every bucket by construction and pays zero lookup). */
+  private def touchedParts(t: IndexTable, live: DataFrame,
+                           inc: Option[DataFrame],
+                           ids: DataFrame): Seq[Int] = {
+    def parts(df: DataFrame) =
+      df.select(col(t.partCol)).distinct().collect().map(_.getInt(0))
+    if (t.key == "id")
+      parts(ids.select(t.band(liveBands(t.name)).as(t.partCol))).sorted.toSeq
+    else {
+      val newB = inc.fold(Array.empty[Int])(parts)
+      val oldB =
+        if (existingParts(t).subsetOf(newB.toSet)) Array.empty[Int]
+        else parts(live.select(col(t.partCol), col("id"))
+          .join(ids, Seq("id"), "left_semi"))
+      (newB ++ oldB).distinct.sorted.toSeq
+    }
+  }
+
+  /** O(batch) ingest for GENUINELY-NEW ids — the LSM/segment-style
+    * append: the batches' files land INSIDE their live partitions
+    * without reading or rewriting ANY existing byte (the keyed upsert's
+    * kept-side rewrite exists to EVICT re-ingested ids; with nothing to
+    * evict it is pure waste). Every table's files and the token publish
+    * under ONE commit marker, so the append either fully happened (token
+    * folded) or not at all; the caller's retry discipline is the O(1)
+    * token check (`expectToken` on the operator entry points), with no
+    * id-presence scan. The caller owns the new-ids guarantee (its corpus
+    * versioning already knows); a changed row under an existing id must
+    * go through [[upsertRows]]. Appends accumulate small files per
+    * partition; [[compactRows]] folds them back. */
+  protected def appendRows(op: String,
+                           batches: Seq[(IndexTable, DataFrame)]): Unit =
+    withLease(op) {
+      val incs = batches.map { case (t, df) => t -> banded(t, df) }
+      atomicAppend(incs, incs.collect {
+        case (t, inc) if t.tokenRows.isDefined =>
+          deltaOf(inc.where(t.tokenRows.get))
+      }.reduce(plus))
+    }
+
+  /** Fold append-accumulated files back into the clustered layout — one
+    * staged swap per table over the selected partitions (tables
+    * overlapped: each fold reads and swaps only its own table). The
+    * default (`minFiles = 1`) folds every live partition — the
+    * rebuild-cadence whole-table form; `minFiles >= 2` folds only
+    * partitions whose file count reached the threshold
+    * ([[fragmentedParts]], file metadata only), so steady-state
+    * compaction cost is ∝ the partitions appends actually fragmented.
+    * Rows and censuses are unchanged either way; untouched partitions'
+    * files are not rewritten. */
+  protected def compactRows(op: String, minFiles: Int,
+                            tables: IndexTable*): Unit = withLease(op) {
+    Overlap.jobs(tables.map { t => () => {
+      val parts = fragmentedParts(t, minFiles)
+      if (parts.nonEmpty)
+        swapCommit(t, parts, swapStage(t, t.clustered(readTable(t)
+          .where(col(t.partCol).isin(parts.map(Integer.valueOf): _*)))))
+    }}: _*)
+  }
 
   // ------------------------------------------------------------------
   // atomic multi-table append: staged files + single commit marker
@@ -193,16 +409,14 @@ private[sources] abstract class IndexStore(spark: SparkSession,
 
   private def markerName(uuid: String) = s"_commit-$uuid"
 
-  /** Append `tables`' batches (each (table, partCol, rows, schema)) and
-    * fold `added` into the covered-corpus token, atomically: one commit
-    * marker covers every table's file moves and the token, so a crash
-    * can never land one table's rows without the other's (the old
-    * two-append text-store window) or the rows without the token. */
-  protected def atomicAppend(
-      tables: Seq[(String, String, DataFrame, StructType)],
-      added: (Long, BigInt, BigInt)): Unit = {
+  /** Append each table's banded batch and fold `added` into the
+    * covered-corpus token, atomically: one commit marker covers every
+    * table's file moves and the token, so a crash can never land one
+    * table's rows without the other's or the rows without the token. */
+  private def atomicAppend(tables: Seq[(IndexTable, DataFrame)],
+                           added: Delta): Unit = {
     recoverCommits(sweepStages = true)
-    tables.foreach { case (t, pc, _, _) => recoverPartitions(t, pc) }
+    tables.foreach { case (t, _) => recoverPartitions(t) }
     val uuid = java.util.UUID.randomUUID().toString
     val stageRel = s".stage-$uuid"
     val stage = new Path(root, stageRel)
@@ -211,14 +425,14 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     // checkpointed batch rows, so the writes share nothing; `moves`
     // keeps the tables' declared order (the marker's move list is
     // ordered, and replay depends only on per-move idempotence)
-    val staged = tables.map { case (table, partCol, df, schema) =>
+    val staged = tables.map { case (t, df) =>
       Overlap.future {
-        val full = withPart(schema, partCol)
-        val tdir = new Path(stage, table)
-        df.select(full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-          .write.mode("errorifexists").partitionBy(partCol)
+        val tdir = new Path(stage, t.name)
+        t.clustered(df)
+          .select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
+          .write.mode("errorifexists").partitionBy(t.partCol)
           .parquet(tdir.toString)
-        val parts = fs.globStatus(new Path(tdir, s"$partCol=*"))
+        val parts = fs.globStatus(new Path(tdir, s"${t.partCol}=*"))
         (if (parts == null) Array[org.apache.hadoop.fs.FileStatus]()
          else parts).toSeq.flatMap { p =>
           fs.listStatus(p.getPath).toSeq
@@ -227,19 +441,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
               n.startsWith("_") || n.startsWith(".")
             }
             .map { f =>
-              (s"$stageRel/$table/${p.getPath.getName}/${f.getPath.getName}",
-                s"$table/${p.getPath.getName}/${f.getPath.getName}")
+              (s"$stageRel/${t.name}/${p.getPath.getName}/${f.getPath.getName}",
+                s"${t.name}/${p.getPath.getName}/${f.getPath.getName}")
             }
         }
       }
     }
-    // join EVERY staging future before propagating a failure (ADVICE
-    // r17): a sequential flatMap would rethrow the first table's error
-    // while later tables' daemon threads were still writing into the
-    // stage dir — withLease would then release the maintenance lease with
-    // writes in flight, racing the next holder's sweepStages. Joining all
-    // keeps the single-writer contract on the failure path; `moves` stays
-    // in declared table order.
     val joined = staged.map(f =>
       try Right(f()) catch { case e: Throwable => Left(e) })
     joined.collect { case Left(e) => e } match {
@@ -253,8 +460,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     // the post-append token is computed BEFORE the marker and recorded
     // in it VERBATIM, so recovery republishes — never re-folds (a redo
     // that re-folded would double-count the batch)
-    val target = storedToken().map(foldedOf(_, added,
-      (0L, BigInt(0), BigInt(0))))
+    val target = storedToken().map(foldedOf(_, added, NoDelta))
     writeAtomic(markerName(uuid),
       ("graft-commit-v1" +:
         s"stage=$stageRel" +:
@@ -308,12 +514,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
 
   /** Roll forward any committed-but-unfinished appends (called from
-    * every read and maintenance entry point — the [[recoverSwap]]
+    * every read and maintenance entry point — the [[TableStore.recoverDir]]
     * discipline for the append path). `sweepStages` additionally deletes
     * UNREFERENCED stage dirs — crashed pre-commit appends that never
     * happened; only the single writer may sweep (a reader must not
     * delete a stage an in-flight append is still writing). */
-  protected def recoverCommits(sweepStages: Boolean = false): Unit = {
+  private def recoverCommits(sweepStages: Boolean = false): Unit = {
     val glob = fs.globStatus(new Path(root, "_commit-*"))
     val all = if (glob == null) Array[org.apache.hadoop.fs.FileStatus]()
       else glob
@@ -331,13 +537,11 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   }
 
   /** Partition values currently present on disk — one directory listing,
-    * no data read. Lets a maintenance op skip the prior-rows lookup scan
-    * entirely when the batch's own partitions already cover every live
-    * one (any evicted row necessarily lives in a covered partition). */
-  protected def existingParts(table: String, partCol: String): Set[Int] = {
-    val glob = fs.globStatus(new Path(s"${path(table)}/$partCol=*"))
+    * no data read. */
+  private def existingParts(t: IndexTable): Set[Int] = {
+    val glob = fs.globStatus(new Path(s"${path(t.name)}/${t.partCol}=*"))
     if (glob == null) Set.empty
-    else glob.map(_.getPath.getName.substring(partCol.length + 1).toInt).toSet
+    else glob.map(_.getPath.getName.substring(t.partCol.length + 1).toInt).toSet
   }
 
   /** Partitions holding at least `minFiles` data files — the targeted-
@@ -347,14 +551,13 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * every partition to fold a few is a whole-table job for O(touched)
     * work. `minFiles <= 1` degenerates to every live partition (the
     * full-fold rebuild-cadence form). */
-  protected def fragmentedParts(table: String, partCol: String,
-                                minFiles: Int): Seq[Int] = {
+  private def fragmentedParts(t: IndexTable, minFiles: Int): Seq[Int] = {
     // recover FIRST even on the full-fold path: a partition sitting in a
     // crashed-swap .old-* state has no live dir and would be invisible
     // to the listing — the fold would silently skip it this round
-    recoverPartitions(table, partCol)
-    if (minFiles <= 1) return existingParts(table, partCol).toSeq.sorted
-    val dirs = fs.globStatus(new Path(s"${path(table)}/$partCol=*"))
+    recoverPartitions(t)
+    if (minFiles <= 1) return existingParts(t).toSeq.sorted
+    val dirs = fs.globStatus(new Path(s"${path(t.name)}/${t.partCol}=*"))
     (if (dirs == null) Array[org.apache.hadoop.fs.FileStatus]() else dirs)
       .filter { d =>
         // a dir can vanish between the glob and this listing (a
@@ -371,60 +574,41 @@ private[sources] abstract class IndexStore(spark: SparkSession,
           !n.startsWith("_") && !n.startsWith(".")
         } >= minFiles
       }
-      .map(_.getPath.getName.substring(partCol.length + 1).toInt)
+      .map(_.getPath.getName.substring(t.partCol.length + 1).toInt)
       .sorted.toSeq
   }
 
-  /** Replace ONLY the listed partitions of a partitioned table. `content`
-    * must hold the full replacement rows for exactly those partitions
-    * (including `partCol`); it may read the live partitions — the single
-    * write job executes the plan before any rename. A partition with no
-    * content rows is removed (its rows were all evicted). Maintenance
-    * cost is ∝ touched partitions: one job over their bytes + O(touched)
-    * renames — never a whole-table rewrite.
-    *
-    * Split into [[swapStage]] (the write job) + [[swapCommit]] (the
-    * renames) so a maintenance op can overlap OTHER pre-swap reads (the
-    * eviction token delta) with the staged write (guide §2.6) — both
-    * read the same live, pre-swap state; nothing moves until commit. */
-  protected def swapPartitions(table: String, partCol: String,
-                               parts: Seq[Int], schema: StructType,
-                               content: DataFrame): Unit = {
-    if (parts.isEmpty) { recoverPartitions(table, partCol); return }
-    swapCommit(table, partCol, parts,
-      swapStage(table, partCol, schema, content))
-  }
-
-  /** Phase 1 of [[swapPartitions]]: heal crashed swaps, then execute the
-    * content plan into the table's `.tmp-<uuid>` stage dir. The plan may
-    * read the live partitions, and so may any concurrent pre-swap read
-    * job — no live byte moves until [[swapCommit]]. Every overlapped
-    * read MUST be joined before commit is called. */
-  protected def swapStage(table: String, partCol: String,
-                          schema: StructType, content: DataFrame): Path = {
-    recoverPartitions(table, partCol)
-    val tmp = new Path(s"${path(table)}/.tmp-${java.util.UUID.randomUUID()}")
-    val full = withPart(schema, partCol)
-    content.select(full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("errorifexists").partitionBy(partCol).parquet(tmp.toString)
+  /** Phase 1 of a partition replace: heal crashed swaps, then execute the
+    * content plan — the full replacement rows for exactly the partitions
+    * [[swapCommit]] will be given — into the table's `.tmp-<uuid>` stage
+    * dir, in ONE job. The plan may read the live partitions, and so may
+    * any concurrent pre-swap read job — no live byte moves until
+    * [[swapCommit]]. Every overlapped read MUST be joined before commit
+    * is called. Maintenance cost is ∝ touched partitions: one job over
+    * their bytes + O(touched) renames — never a whole-table rewrite. */
+  private def swapStage(t: IndexTable, content: DataFrame): Path = {
+    recoverPartitions(t)
+    val tmp = new Path(s"${path(t.name)}/.tmp-${java.util.UUID.randomUUID()}")
+    content.select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("errorifexists").partitionBy(t.partCol).parquet(tmp.toString)
     tmp
   }
 
-  /** Phase 2 of [[swapPartitions]]: the per-partition renames (identical
-    * crash windows to the pre-split form — recoverPartitions heals
-    * .old-* remnants) and the stage-dir cleanup. */
-  protected def swapCommit(table: String, partCol: String,
-                           parts: Seq[Int], tmp: Path): Unit = {
+  /** Phase 2: the per-partition renames (recoverPartitions heals .old-*
+    * remnants of a crash between them) and the stage-dir cleanup. A
+    * listed partition with no staged rows is removed (its rows were all
+    * evicted). */
+  private def swapCommit(t: IndexTable, parts: Seq[Int], tmp: Path): Unit = {
     val uuid = tmp.getName.stripPrefix(".tmp-")
     parts.foreach { b =>
-      val src = new Path(tmp, s"$partCol=$b")
-      val dest = new Path(s"${path(table)}/$partCol=$b")
+      val src = new Path(tmp, s"${t.partCol}=$b")
+      val dest = new Path(s"${path(t.name)}/${t.partCol}=$b")
       if (fs.exists(src)) {
-        val old = new Path(s"${path(table)}/.old-$uuid-$partCol=$b")
+        val old = new Path(s"${path(t.name)}/.old-$uuid-${t.partCol}=$b")
         if (fs.exists(dest)) require(fs.rename(dest, old),
-          s"swapPartitions($table): rename $dest -> $old failed")
+          s"swapCommit(${t.name}): rename $dest -> $old failed")
         require(fs.rename(src, dest),
-          s"swapPartitions($table): rename $src -> $dest failed — " +
+          s"swapCommit(${t.name}): rename $src -> $dest failed — " +
             s"pre-swap in $old")
         fs.delete(old, true)
       } else {
@@ -453,7 +637,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
   }
 
-  protected def clearMeta(): Unit = {
+  private def clearMeta(): Unit = {
     fs.delete(new Path(path("_meta")), false)
     fs.delete(new Path(path("_token")), false)
     // a full build supersedes any pending append: a commit marker
@@ -482,7 +666,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
       s"writeAtomic: publishing $name failed")
   }
 
-  protected def publishMeta(meta: String): Unit = writeAtomic("_meta", meta)
+  private def publishMeta(meta: String): Unit = writeAtomic("_meta", meta)
 
   // ------------------------------------------------------------------
   // covered-corpus version token
@@ -521,23 +705,46 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * caller holds? One small file read; no job over any table. */
   def isCurrent(token: String): Boolean = storedToken().contains(token)
 
-  protected def publishToken(token: String): Unit =
+  /** The stored-search freshness gate, shared by every family's search
+    * and ensure entry points: make this index cover the caller's corpus,
+    * running `build` (one synchronous rebuild — the self-healing default;
+    * a production deployment would page instead) when it does not.
+    * With a caller-held `corpusToken` the check is O(1) — one token-file
+    * read against the covered-corpus token, zero corpus jobs on the
+    * fresh path — and a token the rebuild still does not reproduce
+    * fails, naming `tokenFn`, the function that should have computed it.
+    * Without one (audit mode) the corpus fingerprint `meta` (memoized per
+    * session under the corpus's file-manifest identity) is compared with
+    * the base build's. */
+  private[graft] def ensureCovers(corpusToken: Option[String],
+                                  meta: => String, tokenFn: String)(
+      build: => DataFrame): Unit =
+    corpusToken match {
+      case Some(tok) =>
+        if (!isCurrent(tok)) {
+          build.collect()
+          require(isCurrent(tok),
+            "caller corpus token does not match this corpus + params — " +
+              s"was it computed by $tokenFn with the same arguments?")
+        }
+      case None => if (!isFresh(meta)) build.collect()
+    }
+
+  private def publishToken(token: String): Unit =
     writeAtomic("_token", token)
 
   /** (rows, Σid, Σhash) of a maintenance delta — the commutative terms
-    * [[foldToken]] adds/subtracts. `hash` must be the same per-row hash
-    * the family's fingerprint scan uses. */
-  protected def deltaOf(df: DataFrame,
-                        hash: Column): (Long, BigInt, BigInt) =
-    CorpusToken.terms(df, col("id"), hash)
+    * [[foldToken]] adds/subtracts, read from the stored per-row `fp`
+    * (the same hash the family's fingerprint scan uses). */
+  private def deltaOf(df: DataFrame): Delta =
+    CorpusToken.terms(df, col("id"), col("fp"))
 
   private val tokenRe =
     """^([^|]+)\|n=(-?\d+)\|sumid=(-?\d+)\|chk=(-?\d+)\|(.*)$""".r
 
   /** Pure token fold: n/Σid/Σhash move by (added − removed); the params
     * suffix is untouched. */
-  private def foldedOf(cur: String, added: (Long, BigInt, BigInt),
-                       removed: (Long, BigInt, BigInt)): String =
+  private def foldedOf(cur: String, added: Delta, removed: Delta): String =
     cur match {
       case tokenRe(tag, n, sumid, chk, rest) =>
         s"$tag|n=${n.toLong + added._1 - removed._1}" +
@@ -557,8 +764,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * token converges. The APPEND paths do not use this: their fold rides
     * the [[atomicAppend]] commit marker, so token and data move
     * together. An absent token stays absent. */
-  protected def foldToken(added: (Long, BigInt, BigInt),
-                          removed: (Long, BigInt, BigInt)): Unit =
+  private def foldToken(added: Delta, removed: Delta): Unit =
     storedToken().foreach(t => publishToken(foldedOf(t, added, removed)))
 
   // ------------------------------------------------------------------
@@ -578,7 +784,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   /** Run `body` holding this store's maintenance lease. Throws (does not
     * wait) when another live maintainer holds it: maintenance is batch
     * work — the caller's scheduler owns queueing, not a file lock. */
-  protected def withLease[T](op: String)(body: => T): T = {
+  private def withLease[T](op: String)(body: => T): T = {
     val lease = new Path(path("_lease"))
     val me = java.util.UUID.randomUUID().toString
     def readLease(): Option[String] =
@@ -687,11 +893,10 @@ final class VectorIndex(spark: SparkSession, root: String,
 
   private val centroidSchema = StructType.fromDDL(
     "cid BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE")
-  private val postingSchema = StructType.fromDDL(
-    "cid BIGINT, id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, fp BIGINT")
-
-  private def band(c: Column, n: Int): Column =
-    pmod(c, lit(n.toLong)).cast("int")
+  private val postings = IndexTable("postings", "cid_band", "cid",
+    StructType.fromDDL(
+      "cid BIGINT, id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, fp BIGINT"),
+    tokenRows = Some(lit(true)))
 
   /** Per-row content hash, identical to the fingerprint scan's term
     * (the scan hashes (id, toDouble(vec)); v IS toDouble(vec)) — stored
@@ -701,183 +906,40 @@ final class VectorIndex(spark: SparkSession, root: String,
     df.withColumn("fp", xxhash64(col("id"), col("v")))
 
   def readCentroids(): DataFrame = read("centroids", centroidSchema)
-  def readPostings(): DataFrame = postingsWithBand().drop("cid_band")
+  def readPostings(): DataFrame = readTable(postings).drop("cid_band")
 
-  private def postingsWithBand(): DataFrame =
-    readPartitioned("postings", "cid_band", postingSchema)
-
-  /** Persist a full build: both tables swap in first, the fingerprint
-    * lands last. Postings hash-partition on cid (whole cells per task)
-    * and sort by (band, cid) within tasks — the band sort satisfies the
-    * dynamic-partition writer's ordering requirement (no extra sort node,
-    * which would be unstable and break the cid run lengths) and each
-    * band dir's files keep tight cid min/max row-group stats. */
+  /** Persist a full build ([[IndexStore.publishBuild]]): postings
+    * range-clustered on (band, cid) — whole cells per task, tight cid
+    * min/max row-group stats per band dir. */
   def writeIndex(centroids: DataFrame, postings: DataFrame,
-                 meta: => String): Unit = withLease("writeIndex") {
-    clearMeta()
-    // Overlapped independent jobs (guide §2.6): the two table swaps write
-    // different directories, and `meta` (by-name: the builds pass the
-    // token fold over their already-checkpointed posting frame) reads no
-    // index table — the K-row centroid swap and the fingerprint aggregate
-    // back-fill the corpus-sized postings write's tail instead of
-    // serializing after it. Crash safety is unchanged: _meta/_token were
-    // cleared first and land only after EVERY swap finished, so any
-    // partial combination reads as stale and rebuild-gates.
-    val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
-      () => swapIn("postings",
-        fpOf(postings)
-          .withColumn("cid_band", band(col("cid"), configuredBands))
-          .transform(clusteredFor(_, "cid_band", col("cid"), col("id"))),
-        withPart(postingSchema, "cid_band"),
-        partitionBy = Some("cid_band")),
-      () => swapIn("centroids", centroids, centroidSchema)))
-    publishToken(m)
-    publishMeta(m)
-  }
+                 meta: => String): Unit =
+    publishBuild(meta, Seq(this.postings -> fpOf(postings)),
+      Seq(("centroids", centroidSchema, centroids)))
 
-  /** Incremental maintenance: upsert `incoming` (cid, id, v, nrm) rows
-    * into the posting lists keyed on id — new vectors land in their
-    * assigned cells, re-ingested ids replace their old rows (an id whose
-    * vector changed may MOVE cells; the eviction finds the stale row
-    * wherever it lived). Touched partitions = the batch's own bands ∪ the
-    * bands holding prior rows of its ids (found by an (id, band)-only
-    * column scan — parquet prunes every other column); ONLY those bands
-    * are rewritten. `_meta` is untouched: it vouches for the BASE build,
-    * and [[isFresh]] deliberately keeps answering true — the extension
-    * is additive, not staleness. The covered-corpus `_token` IS folded
-    * (added batch terms in, evicted rows' terms out — the latter read
-    * from the stored fp column, band-pruned), so [[isCurrent]] keeps
-    * tracking exactly what the index covers. */
+  /** Keyed upsert of (cid, id, v, nrm) rows into the posting lists
+    * ([[IndexStore.upsertRows]]): an id whose vector changed may MOVE
+    * cells; the eviction finds the stale row wherever it lived. */
   def upsertPostings(incoming: DataFrame): Unit =
-    withLease("upsertPostings") {
-    // batch-sized; materialized once because the plan below reads it for
-    // the band census, the eviction keys, and the union content
-    val inc = fpOf(incoming
-        .select(col("cid"), col("id"), col("v"), col("nrm")))
-      .withColumn("cid_band", band(col("cid"), liveBands("postings")))
-      .localCheckpoint(true)
-    val ids = inc.select(col("id")).distinct()
-    val pb = postingsWithBand()
-    val newBands = inc.select(col("cid_band")).distinct()
-      .collect().map(_.getInt(0))
-    // prior rows of re-ingested ids may live in OTHER bands (a moved
-    // vector) — found by an (id, band)-only column scan, skipped when the
-    // batch's own bands already cover every live one
-    val oldBands =
-      if (existingParts("postings", "cid_band").subsetOf(newBands.toSet))
-        Array.empty[Int]
-      else pb.select(col("cid_band"), col("id"))
-        .join(ids, Seq("id"), "left_semi")
-        .select(col("cid_band")).distinct().collect().map(_.getInt(0))
-    val touched = (newBands ++ oldBands).distinct.sorted
-    // Token deltas overlapped with the staged write (r18, guide §2.6 —
-    // the swapStage/swapCommit split): the eviction delta reads the SAME
-    // live pre-swap bands the content plan reads (read-read, safe), the
-    // batch delta reads only the checkpointed inc — both are joined
-    // strictly BEFORE any rename, so no read can see a half-swapped
-    // table, and the fold still runs after the swap (crash leaves the
-    // token behind the data, the conservative direction, unchanged).
-    val removedT = Overlap.future(deltaOf(
-      pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    val addedT = Overlap.future(deltaOf(inc, col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT, addedT)(
-        swapStage("postings", "cid_band", postingSchema,
-          pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .unionByName(inc)
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val (removed, added) = (removedT(), addedT())
-      swapCommit("postings", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken(added, removed)
-    } else foldToken(addedT(), removedT())
-  }
+    upsertRows("upsertPostings", Seq(postings -> fpOf(incoming)))
 
-  /** O(batch) ingest for GENUINELY-NEW ids — the LSM/segment-style
-    * append: the batch's posting files land INSIDE their cid bands
-    * without reading or rewriting ANY existing byte
-    * ([[upsertPostings]]' kept-side rewrite exists to EVICT re-ingested
-    * ids; when there is nothing to evict, the rewrite is pure waste).
-    * Files and token publish under ONE commit marker
-    * ([[IndexStore.atomicAppend]]): the append either fully happened
-    * (token folded) or not at all, so the retry discipline is the O(1)
-    * token check (`expectToken` on the operator entry points) — no
-    * per-append id-presence scan over the index. The caller owns the
-    * new-ids guarantee (its corpus versioning already knows); a CHANGED
-    * vector under an existing id must go through [[upsertPostings]].
-    * Appends accumulate small files per band; [[compactPostings]] folds
-    * them back on the rebuild cadence. */
+  /** O(batch) append of genuinely-new (cid, id, v, nrm) rows
+    * ([[IndexStore.appendRows]]); a CHANGED vector under an existing id
+    * must go through [[upsertPostings]], and [[compactPostings]] folds
+    * the accumulated files back on the rebuild cadence. */
   def appendPostings(incoming: DataFrame): Unit =
-    withLease("appendPostings") {
-      // batch-sized; materialized once — consumed by the staged file
-      // write AND the token delta
-      val inc = fpOf(incoming
-          .select(col("cid"), col("id"), col("v"), col("nrm")))
-        .withColumn("cid_band", band(col("cid"), liveBands("postings")))
-        .localCheckpoint(true)
-      atomicAppend(
-        Seq(("postings", "cid_band",
-          clusteredFor(inc, "cid_band", col("cid"), col("id")),
-          postingSchema)),
-        deltaOf(inc, col("fp")))
-    }
+    appendRows("appendPostings", Seq(postings -> fpOf(incoming)))
 
-  /** Fold append-accumulated files back into the clustered layout — one
-    * [[swapPartitions]] pass over the selected bands. The default
-    * (`minFiles = 1`) folds every live band — the rebuild-cadence
-    * whole-table form; `minFiles >= 2` folds only bands whose file count
-    * reached the threshold ([[IndexStore.fragmentedParts]], file metadata
-    * only), so steady-state compaction cost is ∝ the bands appends
-    * actually fragmented, never the whole table. Rows and censuses are
-    * unchanged either way; untouched bands' files are not rewritten. */
+  /** Fold append-accumulated posting files
+    * ([[IndexStore.compactRows]]). */
   def compactPostings(minFiles: Int = 1): Unit =
-    withLease("compactPostings") {
-    val parts = fragmentedParts("postings", "cid_band", minFiles)
-    if (parts.isEmpty) return
-    swapPartitions("postings", "cid_band", parts.toIndexedSeq,
-      postingSchema,
-      clusteredFor(
-        postingsWithBand()
-          .where(col("cid_band").isin(parts.map(Integer.valueOf): _*)),
-        "cid_band", col("cid"), col("id")))
-  }
+    compactRows("compactPostings", minFiles, postings)
 
-  /** Remove `ids` (one column, `id`) from the posting lists — the
-    * right-to-be-forgotten path: subsequent searches can never return a
-    * deleted id because its vector is physically gone from the inverted
-    * lists (not tombstoned). Centroids are untouched (they are summaries,
-    * not member data — exactly how production IVF handles deletes between
-    * rebuilds); absent ids are a no-op, so the call is idempotent. Only
-    * the bands holding doomed rows (one (id, band) column scan) are
-    * rewritten. `_meta` stays, like [[upsertPostings]]: the base build
-    * it vouches for is still the index's lineage; the covered-corpus
-    * `_token` drops the forgotten rows' terms. */
-  def deletePostings(ids0: DataFrame): Unit =
-    withLease("deletePostings") {
-    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
-    val pb = postingsWithBand()
-    val touched = pb.select(col("cid_band"), col("id"))
-      .join(ids, Seq("id"), "left_semi")
-      .select(col("cid_band")).distinct().collect().map(_.getInt(0)).sorted
-    // doomed rows' token terms, read band-pruned — overlapped with the
-    // staged write (both read pre-swap state; joined before any rename)
-    val removedT = Overlap.future(deltaOf(
-      pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT)(
-        swapStage("postings", "cid_band", postingSchema,
-          pb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val removed = removedT()
-      swapCommit("postings", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken((0L, BigInt(0), BigInt(0)), removed)
-    } else foldToken((0L, BigInt(0), BigInt(0)), removedT())
-  }
+  /** Remove `ids` (one column, `id`) from the posting lists
+    * ([[IndexStore.deleteRows]]). Centroids are untouched (they are
+    * summaries, not member data — exactly how production IVF handles
+    * deletes between rebuilds). */
+  def deletePostings(ids: DataFrame): Unit =
+    deleteRows("deletePostings", ids, postings)
 }
 
 object TextIndex {
@@ -896,293 +958,77 @@ object TextIndex {
   * touch document text.
   *
   * Layout under `root/`:
-  *   - `postings/term_bucket=N/` (term, id, df, w) — the weighted
+  *   - `postings/term_bucket=N/` (term, id, df, tf, w) — the weighted
   *     inverted lists, directory-partitioned on the term hash and
   *     term-sorted within files, so a narrow-term-set probe
   *     row-group-prunes and an ingest/delete rewrites only the buckets
   *     holding its terms; df rides each row (the search-time rare-band
-  *     filter is a scan-level predicate, not a join).
-  *   - `norms/id_bucket=N/` (id, n2 decimal(38,0)) — per-doc squared
-  *     weight norms, partitioned on the doc id so keyed maintenance
-  *     touches ~|batch| buckets.
+  *     filter is a scan-level predicate, not a join), and tf rides it so
+  *     a stats-refresh rebuild can recompute weights under fresh df
+  *     without the corpus (w alone is lossy: terms with df > idfScale
+  *     weigh 0).
+  *   - `norms/id_bucket=N/` (id, n2 decimal(38,0), fp) — the per-doc
+  *     LEDGER: one row per ingested doc (n2 = 0 for a term-less doc)
+  *     carrying fp = xxhash64(id, text), the fingerprint term token folds
+  *     and rebuilds reconstruct without re-reading text; partitioned on
+  *     the doc id so keyed maintenance touches ~|batch| buckets.
   */
 final class TextIndex(spark: SparkSession, root: String,
                       val nBuckets: Int = TextIndex.TermBuckets)
     extends IndexStore(spark, root) {
   override protected def configuredBands: Int = nBuckets
 
-  // tf rides every posting row so a stats-refresh rebuild can recompute
-  // weights under fresh df without the corpus (w alone is lossy: terms
-  // with df > idfScale weigh 0)
-  private val postingSchema = StructType.fromDDL(
-    "term STRING, id BIGINT, df BIGINT, tf BIGINT, w BIGINT")
-  // norms are the per-doc LEDGER: one row per ingested doc (n2 = 0 for a
-  // term-less doc) carrying fp = xxhash64(id, text) — the fingerprint
-  // term token folds and rebuilds reconstruct without re-reading text
-  private val normSchema = StructType.fromDDL(
-    "id BIGINT, n2 DECIMAL(38,0), fp BIGINT")
+  private val postings = IndexTable("postings", "term_bucket", "term",
+    StructType.fromDDL(
+      "term STRING, id BIGINT, df BIGINT, tf BIGINT, w BIGINT"),
+    hashKey = true)
+  private val norms = IndexTable("norms", "id_bucket", "id",
+    StructType.fromDDL("id BIGINT, n2 DECIMAL(38,0), fp BIGINT"),
+    tokenRows = Some(lit(true)))
 
-  private def tBucket(t: Column, n: Int): Column =
-    pmod(xxhash64(t), lit(n.toLong)).cast("int")
-  private def nBucket(i: Column, n: Int): Column =
-    pmod(i, lit(n.toLong)).cast("int")
-
-  def readPostings(): DataFrame = postingsWithBucket().drop("term_bucket")
-  def readNorms(): DataFrame = normsWithBucket().drop("id_bucket")
-
-  private def postingsWithBucket(): DataFrame =
-    readPartitioned("postings", "term_bucket", postingSchema)
-  private def normsWithBucket(): DataFrame =
-    readPartitioned("norms", "id_bucket", normSchema)
+  def readPostings(): DataFrame = readTable(postings).drop("term_bucket")
+  def readNorms(): DataFrame = readTable(norms).drop("id_bucket")
 
   def writeIndex(postings: DataFrame, norms: DataFrame,
-                 meta: => String): Unit = withLease("writeIndex") {
-    clearMeta()
-    // Overlapped independent jobs (guide §2.6; the
-    // [[VectorIndex.writeIndex]] rationale): the postings and norms swaps
-    // write different directories — the build paths hand in frames that
-    // read only checkpointed batch/corpus rows, never these tables — and
-    // the by-name `meta` fold reads no index table. _meta/_token still
-    // land only after every swap finished, so crash combinations read as
-    // stale exactly as before.
-    val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
-      () => swapIn("postings",
-        postings.withColumn("term_bucket",
-            tBucket(col("term"), configuredBands))
-          .transform(clusteredFor(_, "term_bucket", col("term"), col("id"))),
-        withPart(postingSchema, "term_bucket"),
-        partitionBy = Some("term_bucket")),
-      () => swapIn("norms",
-        norms.withColumn("id_bucket", nBucket(col("id"), configuredBands))
-          .transform(clusteredFor(_, "id_bucket", col("id"), col("id"))),
-        withPart(normSchema, "id_bucket"), partitionBy = Some("id_bucket"))))
-    publishToken(m)
-    publishMeta(m)
-  }
+                 meta: => String): Unit =
+    publishBuild(meta, Seq(this.postings -> postings, this.norms -> norms))
 
-  /** Keyed ingest: replace-or-add `postings` rows and `norms` rows by doc
-    * id (a re-ingested doc's old posting rows are evicted from every term
-    * list they lived in). Both incoming frames are materialized
-    * batch-sized BEFORE any swap, so a plan deriving the batch weights
+  /** Keyed ingest ([[IndexStore.upsertRows]]): replace-or-add `postings`
+    * and `norms` rows by doc id — a re-ingested doc's old posting rows
+    * are evicted from every term list they lived in. Both batches are
+    * materialized before any swap, so a plan deriving the batch weights
     * from this store's own postings (the stale-IDF contract) can never
-    * re-read a just-replaced directory. Touched posting buckets = the
-    * batch terms' buckets ∪ buckets holding prior rows of its ids (an
-    * (id, bucket)-only column scan); touched norm buckets are the batch
-    * ids' own. Like [[VectorIndex.upsertPostings]], `_meta` is untouched
-    * — it vouches for the base build the extension rides on — while the
-    * covered-corpus `_token` folds the batch in and the evicted docs'
-    * ledger terms out. */
+    * re-read a just-replaced directory. `evictIds` is unioned with the
+    * batch's doc ids (a doc re-posted with NULL text yields no norm row
+    * but must still be evicted). */
   def upsert(postings: DataFrame, norms: DataFrame,
              evictIds: Option[DataFrame] = None): Unit =
-    withLease("upsert") {
-    val incP = postings
-      .select(col("term"), col("id"), col("df"), col("tf"), col("w"))
-      .withColumn("term_bucket",
-        tBucket(col("term"), liveBands("postings")))
-      .localCheckpoint(true)
-    val incN = norms.select(col("id"), col("n2"), col("fp"))
-      .withColumn("id_bucket", nBucket(col("id"), liveBands("norms")))
-      .localCheckpoint(true)
-    // the EVICTION set: the batch's doc ids, which may be WIDER than the
-    // ledger rows — a doc re-posted with NULL text yields no norm row
-    // (it leaves the covered corpus) but its old posting + ledger rows
-    // must still be evicted and their token terms folded out. A caller's
-    // evictIds is UNIONED with the batch's own ids, never trusted alone:
-    // this set drives the touched-bucket arithmetic, and an evictIds
-    // narrower than the batch would leave incN rows in buckets outside
-    // nTouched — silently dropped by the swap while deltaOf(incN) still
-    // folds their terms in, putting the token AHEAD of the data (the
-    // one direction the foldToken contract forbids)
-    val batchIds = incN.select(col("id")).distinct()
-    val ids = evictIds
-      .map(_.select(col("id")).unionByName(batchIds).distinct()
-        .localCheckpoint(true))
-      .getOrElse(batchIds)
+    upsertRows("upsert", Seq(this.postings -> postings, this.norms -> norms),
+      evictIds)
 
-    val added = deltaOf(incN, col("fp"))
-    // Overlapped independent jobs (guide §2.6): the norms side (touched
-    // buckets, evicted-ledger delta, swap) and the postings side (touched
-    // buckets, swap) read and replace DIFFERENT tables; both batch frames
-    // and `ids` are checkpointed above, so neither side's plan can see
-    // the other's swap. The eviction delta still runs strictly before the
-    // norms swap (same thread); the token fold still runs after BOTH
-    // swaps — `Overlap.jobs` joins every thread before returning, and a
-    // crash mid-either-swap leaves the token behind the data, the same
-    // conservative direction the sequential order had.
-    var removed: (Long, BigInt, BigInt) = null
-    Overlap.jobs(
-      () => {
-        val pbk = postingsWithBucket()
-        val newB = incP.select(col("term_bucket")).distinct()
-          .collect().map(_.getInt(0))
-        // a broad-vocabulary batch (e.g. whole re-posted documents)
-        // touches every bucket by construction — the covered-partitions
-        // check makes that case pay zero lookup cost; the scan only runs
-        // for term-narrow batches, where it is also what makes the
-        // rewrite narrow
-        val oldB =
-          if (existingParts("postings", "term_bucket").subsetOf(newB.toSet))
-            Array.empty[Int]
-          else pbk.select(col("term_bucket"), col("id"))
-            .join(ids, Seq("id"), "left_semi")
-            .select(col("term_bucket")).distinct().collect()
-            .map(_.getInt(0))
-        val pTouched = (newB ++ oldB).distinct.sorted
-        swapPartitions("postings", "term_bucket", pTouched.toIndexedSeq,
-          postingSchema,
-          pbk.where(col("term_bucket").isin(pTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .unionByName(incP)
-            .transform(clusteredFor(_, "term_bucket", col("term"),
-              col("id"))))
-      },
-      () => {
-        val nTouched = ids
-          .select(nBucket(col("id"), liveBands("norms")).as("id_bucket"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val nb = normsWithBucket()
-        // evicted docs' token terms from the norm ledger, bucket-pruned —
-        // overlapped with this side's staged write (r18: both read the
-        // same pre-swap buckets; joined before any rename)
-        val removedT = Overlap.future(deltaOf(
-          nb.where(col("id_bucket").isin(nTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_semi"), col("fp")))
-        if (nTouched.nonEmpty) {
-          val tmp = Overlap.guarding(removedT)(
-            swapStage("norms", "id_bucket", normSchema,
-              nb.where(col("id_bucket")
-                  .isin(nTouched.map(Integer.valueOf): _*))
-                .join(ids, Seq("id"), "left_anti")
-                .unionByName(incN)
-                .transform(clusteredFor(_, "id_bucket", col("id"),
-                  col("id")))))
-          removed = removedT()
-          swapCommit("norms", "id_bucket", nTouched.toIndexedSeq, tmp)
-        } else removed = removedT()
-      })
-    foldToken(added, removed)
-  }
-
-  /** O(batch) ingest for GENUINELY-NEW doc ids ([[VectorIndex.
-    * appendPostings]]' contract for the text store — and the store where
-    * it matters most: a broad-vocabulary batch touches every term
-    * bucket, so the keyed [[upsert]] degenerates to a full rewrite by
-    * construction, while this append writes exactly the batch's rows).
-    * BOTH tables' files and the token publish under ONE commit marker
-    * ([[IndexStore.atomicAppend]]) — a crash can never land the norms
-    * without the postings (the pre-round-17 two-append window), or a
-    * prefix of a doc's posting files, or the rows without the token; the
-    * retry discipline is the caller's O(1) token check, with no
-    * presence anti-join over either table. Re-posted docs must go
+  /** O(batch) ingest for GENUINELY-NEW doc ids
+    * ([[IndexStore.appendRows]]) — the store where it matters most: a
+    * broad-vocabulary batch touches every term bucket, so the keyed
+    * [[upsert]] degenerates to a full rewrite by construction, while this
+    * append writes exactly the batch's rows. Both tables' files and the
+    * token publish under ONE commit marker. Re-posted docs must go
     * through [[upsert]] for eviction. */
   def appendDocs(postings: DataFrame, norms: DataFrame): Unit =
-    withLease("appendDocs") {
-      val incP = postings
-        .select(col("term"), col("id"), col("df"), col("tf"), col("w"))
-        .withColumn("term_bucket",
-          tBucket(col("term"), liveBands("postings")))
-        .localCheckpoint(true)
-      val incN = norms.select(col("id"), col("n2"), col("fp"))
-        .withColumn("id_bucket", nBucket(col("id"), liveBands("norms")))
-        .localCheckpoint(true)
-      atomicAppend(
-        Seq(
-          ("norms", "id_bucket",
-            clusteredFor(incN, "id_bucket", col("id"), col("id")),
-            normSchema),
-          ("postings", "term_bucket",
-            clusteredFor(incP, "term_bucket", col("term"), col("id")),
-            postingSchema)),
-        deltaOf(incN, col("fp")))
-    }
+    appendRows("appendDocs",
+      Seq(this.norms -> norms, this.postings -> postings))
 
-  /** [[VectorIndex.compactPostings]] for the text store: fold
-    * append-accumulated files in BOTH tables back into the clustered
-    * layout — every live bucket by default, only buckets at the
-    * `minFiles` fragmentation threshold when given. */
-  def compact(minFiles: Int = 1): Unit = withLease("compact") {
-    // Overlapped independent jobs (guide §2.6): the two folds read and
-    // swap DIFFERENT tables (each side's content plan reads only its own
-    // table), so they share no state beyond the lease held here.
-    Overlap.jobs(
-      () => {
-        val pParts = fragmentedParts("postings", "term_bucket", minFiles)
-        if (pParts.nonEmpty)
-          swapPartitions("postings", "term_bucket", pParts.toIndexedSeq,
-            postingSchema,
-            clusteredFor(
-              postingsWithBucket()
-                .where(col("term_bucket")
-                  .isin(pParts.map(Integer.valueOf): _*)),
-              "term_bucket", col("term"), col("id")))
-      },
-      () => {
-        val nParts = fragmentedParts("norms", "id_bucket", minFiles)
-        if (nParts.nonEmpty)
-          swapPartitions("norms", "id_bucket", nParts.toIndexedSeq,
-            normSchema,
-            clusteredFor(
-              normsWithBucket()
-                .where(col("id_bucket").isin(nParts.map(Integer.valueOf): _*)),
-              "id_bucket", col("id"), col("id")))
-      })
-  }
+  /** Fold append-accumulated files in BOTH tables
+    * ([[IndexStore.compactRows]]). */
+  def compact(minFiles: Int = 1): Unit =
+    compactRows("compact", minFiles, postings, norms)
 
-  /** Remove documents from the index — the text-side forget path: drop
-    * every posting row of `ids` (wherever their terms hashed — found by
-    * an (id, bucket)-only column scan) and their norm rows (buckets
-    * derived from the ids directly). Physically gone, not tombstoned: a
-    * forgotten doc can never be a search candidate. Per-term df values on
-    * SURVIVING rows keep their build-time counts (the stale-df contract,
-    * same as ingest — df drift is absorbed at the next full rebuild).
-    * Absent ids are a no-op, so the call is idempotent. */
-  def delete(ids0: DataFrame): Unit = withLease("delete") {
-    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
-    // Overlapped independent jobs (guide §2.6; the [[upsert]] rationale):
-    // postings side and norms side touch different tables; the ledger
-    // delta still runs strictly before the norms swap, the token fold
-    // after both sides joined.
-    var removed: (Long, BigInt, BigInt) = null
-    Overlap.jobs(
-      () => {
-        val pbk = postingsWithBucket()
-        val pTouched = pbk.select(col("term_bucket"), col("id"))
-          .join(ids, Seq("id"), "left_semi")
-          .select(col("term_bucket")).distinct().collect()
-          .map(_.getInt(0)).sorted
-        swapPartitions("postings", "term_bucket", pTouched.toIndexedSeq,
-          postingSchema,
-          pbk.where(col("term_bucket").isin(pTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .transform(clusteredFor(_, "term_bucket", col("term"),
-              col("id"))))
-      },
-      () => {
-        val nTouched = ids
-          .select(nBucket(col("id"), liveBands("norms")).as("id_bucket"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val nb = normsWithBucket()
-        // forgotten docs' token terms from the ledger — overlapped with
-        // this side's staged write, joined before any rename (r18)
-        val removedT = Overlap.future(deltaOf(
-          nb.where(col("id_bucket").isin(nTouched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_semi"), col("fp")))
-        if (nTouched.nonEmpty) {
-          val tmp = Overlap.guarding(removedT)(
-            swapStage("norms", "id_bucket", normSchema,
-              nb.where(col("id_bucket")
-                  .isin(nTouched.map(Integer.valueOf): _*))
-                .join(ids, Seq("id"), "left_anti")
-                .transform(clusteredFor(_, "id_bucket", col("id"),
-                  col("id")))))
-          removed = removedT()
-          swapCommit("norms", "id_bucket", nTouched.toIndexedSeq, tmp)
-        } else removed = removedT()
-      })
-    foldToken((0L, BigInt(0), BigInt(0)), removed)
-  }
+  /** Remove documents ([[IndexStore.deleteRows]]): every posting row of
+    * `ids`, wherever their terms hashed, and their norm rows. Per-term df
+    * values on SURVIVING rows keep their build-time counts (the stale-df
+    * contract, same as ingest — df drift is absorbed at the next full
+    * rebuild). */
+  def delete(ids: DataFrame): Unit =
+    deleteRows("delete", ids, postings, norms)
 }
 
 object PqIndex {
@@ -1201,11 +1047,14 @@ object PqIndex {
   * Layout under `root/`:
   *   - `cells/`     (cid, cv array<bigint>) — fixed-point cell centers.
   *   - `codebooks/` (s, ccid, csub array<bigint>) — m × kCodes sub-vectors.
-  *   - `codes/cid_band=N/` (cid, id, s, code) — one row per
+  *   - `codes/cid_band=N/` (cid, id, s, code, fp) — one row per
   *     (vector, subspace), directory-partitioned on cid mod
   *     [[PqIndex.CodeBands]] and cid-sorted within files, so searches
   *     prune to probed cells and keyed maintenance rewrites only touched
-  *     bands.
+  *     bands. fp = xxhash64(id, raw vector) is set ONLY on the s = 0 row
+  *     of each id (null elsewhere — RLE-cheap): the per-VECTOR term the
+  *     covered-corpus token folds; raw vectors never enter this store, so
+  *     the hash is computed at encode time and rides the codes.
   */
 final class PqIndex(spark: SparkSession, root: String,
                     val nBands: Int = PqIndex.CodeBands)
@@ -1216,152 +1065,43 @@ final class PqIndex(spark: SparkSession, root: String,
     "cid BIGINT, cv ARRAY<BIGINT>")
   private val codebookSchema = StructType.fromDDL(
     "s INT, ccid BIGINT, csub ARRAY<BIGINT>")
-  // fp = xxhash64(id, raw vector), set ONLY on the s = 0 row of each id
-  // (null elsewhere — RLE-cheap): the per-VECTOR fingerprint term the
-  // covered-corpus token folds; raw vectors never enter this store, so
-  // the hash must be computed at encode time and ride the codes
-  private val codeSchema = StructType.fromDDL(
-    "cid BIGINT, id BIGINT, s INT, code BIGINT, fp BIGINT")
-
-  private def band(c: Column, n: Int): Column =
-    pmod(c, lit(n.toLong)).cast("int")
+  private val codes = IndexTable("codes", "cid_band", "cid",
+    StructType.fromDDL("cid BIGINT, id BIGINT, s INT, code BIGINT, fp BIGINT"),
+    tokenRows = Some(col("s") === 0))
 
   def readCells(): DataFrame = read("cells", cellSchema)
   def readCodebooks(): DataFrame = read("codebooks", codebookSchema)
-  def readCodes(): DataFrame = codesWithBand().drop("cid_band")
-
-  private def codesWithBand(): DataFrame =
-    readPartitioned("codes", "cid_band", codeSchema)
+  def readCodes(): DataFrame = readTable(codes).drop("cid_band")
 
   def writeIndex(cells: DataFrame, codebooks: DataFrame, codes: DataFrame,
-                 meta: => String): Unit = withLease("writeIndex") {
-    clearMeta()
-    // Overlapped independent jobs (guide §2.6; the
-    // [[VectorIndex.writeIndex]] rationale): three different directories,
-    // inputs checkpointed by the build, token fold reads no table;
-    // _meta/_token land only after every swap finished.
-    val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
-      () => swapIn("codes",
-        codes.withColumn("cid_band", band(col("cid"), configuredBands))
-          .transform(clusteredFor(_, "cid_band", col("cid"), col("id"))),
-        withPart(codeSchema, "cid_band"), partitionBy = Some("cid_band")),
-      () => swapIn("cells", cells, cellSchema),
-      () => swapIn("codebooks", codebooks, codebookSchema)))
-    publishToken(m)
-    publishMeta(m)
-  }
+                 meta: => String): Unit =
+    publishBuild(meta, Seq(this.codes -> codes),
+      Seq(("cells", cellSchema, cells),
+        ("codebooks", codebookSchema, codebooks)))
 
-  /** Keyed code ingest: upsert `incoming` (cid, id, s, code) rows by
-    * vector id — a re-ingested id's old code rows are evicted wherever
-    * they lived (its vector may have moved cells). The
-    * [[VectorIndex.upsertPostings]] discipline: only the batch's bands ∪
-    * the bands holding prior rows of its ids are rewritten. `_meta`
-    * untouched — additive extension over the base build's grid and
-    * codebooks — while the covered-corpus `_token` folds the per-vector
-    * terms riding the s = 0 code rows. */
+  /** Keyed code ingest of (cid, id, s, code, fp) rows by vector id
+    * ([[IndexStore.upsertRows]]) — a re-ingested id's old code rows are
+    * evicted wherever they lived. `_meta` untouched — additive extension
+    * over the base build's grid and codebooks. */
   def upsertCodes(incoming: DataFrame): Unit =
-    withLease("upsertCodes") {
-    val inc = incoming
-      .select(col("cid"), col("id"), col("s"), col("code"), col("fp"))
-      .withColumn("cid_band", band(col("cid"), liveBands("codes")))
-      .localCheckpoint(true)
-    val ids = inc.select(col("id")).distinct()
-    val cb = codesWithBand()
-    val newBands = inc.select(col("cid_band")).distinct()
-      .collect().map(_.getInt(0))
-    val oldBands =
-      if (existingParts("codes", "cid_band").subsetOf(newBands.toSet))
-        Array.empty[Int]
-      else cb.select(col("cid_band"), col("id"))
-        .join(ids, Seq("id"), "left_semi")
-        .select(col("cid_band")).distinct().collect().map(_.getInt(0))
-    val touched = (newBands ++ oldBands).distinct.sorted
-    // per-VECTOR token terms live on the s = 0 rows. Deltas overlapped
-    // with the staged write (r18 — the upsertPostings rationale: all
-    // three jobs read pre-swap state; joined before any rename).
-    val removedT = Overlap.future(deltaOf(
-      cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .where(col("s") === 0)
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    val addedT = Overlap.future(
-      deltaOf(inc.where(col("s") === 0), col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT, addedT)(
-        swapStage("codes", "cid_band", codeSchema,
-          cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .unionByName(inc)
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val (removed, added) = (removedT(), addedT())
-      swapCommit("codes", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken(added, removed)
-    } else foldToken(addedT(), removedT())
-  }
+    upsertRows("upsertCodes", Seq(codes -> incoming))
 
-  /** O(batch) code ingest for GENUINELY-NEW ids ([[VectorIndex.
-    * appendPostings]]' contract for the compressed store); re-encoded
-    * existing ids must go through [[upsertCodes]] for eviction. Files
-    * and token publish under ONE commit marker ([[IndexStore.
-    * atomicAppend]]): an id's m subspace rows can straddle a writer
-    * file boundary, and the marker's roll-forward is what guarantees a
-    * crash can never strand a prefix of them — the retry discipline is
-    * the caller's O(1) token check, with no (id, s) presence scan over
-    * the code rows. */
+  /** O(batch) code ingest for GENUINELY-NEW ids
+    * ([[IndexStore.appendRows]]): an id's m subspace rows can straddle a
+    * writer file boundary, and the commit marker's roll-forward is what
+    * guarantees a crash can never strand a prefix of them. Re-encoded
+    * existing ids must go through [[upsertCodes]]. */
   def appendCodes(incoming: DataFrame): Unit =
-    withLease("appendCodes") {
-      // materialized: consumed by the staged file write AND the delta
-      val inc = incoming
-        .select(col("cid"), col("id"), col("s"), col("code"), col("fp"))
-        .withColumn("cid_band", band(col("cid"), liveBands("codes")))
-        .localCheckpoint(true)
-      atomicAppend(
-        Seq(("codes", "cid_band",
-          clusteredFor(inc, "cid_band", col("cid"), col("id")),
-          codeSchema)),
-        deltaOf(inc.where(col("s") === 0), col("fp")))
-    }
+    appendRows("appendCodes", Seq(codes -> incoming))
 
-  /** [[VectorIndex.compactPostings]] for the code rows. */
+  /** Fold append-accumulated code files ([[IndexStore.compactRows]]). */
   def compactCodes(minFiles: Int = 1): Unit =
-    withLease("compactCodes") {
-    val parts = fragmentedParts("codes", "cid_band", minFiles)
-    if (parts.isEmpty) return
-    swapPartitions("codes", "cid_band", parts.toIndexedSeq, codeSchema,
-      clusteredFor(
-        codesWithBand()
-          .where(col("cid_band").isin(parts.map(Integer.valueOf): _*)),
-        "cid_band", col("cid"), col("id")))
-  }
+    compactRows("compactCodes", minFiles, codes)
 
-  /** Remove `ids` from the stored code rows — the PQ forget path. No
-    * re-encode: codes are per-vector, so dropping a vector's m rows is
+  /** Remove `ids` from the stored code rows ([[IndexStore.deleteRows]]).
+    * No re-encode: codes are per-vector, so dropping a vector's m rows is
     * complete removal (cells and codebooks are summaries, untouched
-    * between rebuilds). Only bands holding doomed rows are rewritten;
-    * absent ids are a no-op, so the call is idempotent. */
-  def deleteCodes(ids0: DataFrame): Unit =
-    withLease("deleteCodes") {
-    val ids = ids0.select(col("id")).distinct().localCheckpoint(true)
-    val cb = codesWithBand()
-    val touched = cb.select(col("cid_band"), col("id"))
-      .join(ids, Seq("id"), "left_semi")
-      .select(col("cid_band")).distinct().collect().map(_.getInt(0)).sorted
-    // doomed rows' terms overlapped with the staged write (pre-swap
-    // read-read; joined before any rename — the deletePostings shape)
-    val removedT = Overlap.future(deltaOf(
-      cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-        .where(col("s") === 0)
-        .join(ids, Seq("id"), "left_semi"), col("fp")))
-    if (touched.nonEmpty) {
-      val tmp = Overlap.guarding(removedT)(
-        swapStage("codes", "cid_band", codeSchema,
-          cb.where(col("cid_band").isin(touched.map(Integer.valueOf): _*))
-            .join(ids, Seq("id"), "left_anti")
-            .transform(clusteredFor(_, "cid_band", col("cid"), col("id")))))
-      val removed = removedT()
-      swapCommit("codes", "cid_band", touched.toIndexedSeq, tmp)
-      foldToken((0L, BigInt(0), BigInt(0)), removed)
-    } else foldToken((0L, BigInt(0), BigInt(0)), removedT())
-  }
+    * between rebuilds). */
+  def deleteCodes(ids: DataFrame): Unit =
+    deleteRows("deleteCodes", ids, codes)
 }

@@ -110,6 +110,17 @@ class BenchBaselineSpec extends AnyFunSuite {
     assert(json.get("baseline_matched").asInt() == 2)
   }
 
+  test("parseBaseline reads back an sf path holding a quote and a backslash") {
+    // the baseline's sf is written JSON-escaped; a reader that cannot
+    // unescape it never matches the run's sf and the gate silently drops
+    val dir = """/data/q"uoted\dir"""
+    val path = write(
+      s"""{"queries":{"q01_grouped_sum":1.5},"sf":${Json.str(dir)}}""")
+    val Some((sf, qs)) = Bench.parseBaseline(path)
+    assert(sf == dir)
+    assert(qs == Map("q01_grouped_sum" -> 1.5))
+  }
+
   test("isRegression pins the flag formula: >=2x AND >=0.5s absolute") {
     assert(Bench.isRegression(t = 1.2, base = 0.5)) // 2.4x and +0.7s
     assert(!Bench.isRegression(t = 0.9, base = 0.5)) // 1.8x — ratio short

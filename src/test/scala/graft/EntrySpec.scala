@@ -21,4 +21,27 @@ class EntrySpec extends SparkSpec {
       assert(df.limit(1).count() >= 0) // analyzes + executes the plan head
     }
   }
+
+  test("sparse top-k queries return rows ordered by (qid, rank) with AQE off") {
+    // with AQE on, the small result happened to coalesce into one
+    // partition and came back in rank order; with it off, the rank
+    // window's output partitions arrive in plan order. The oracles
+    // ORDER BY qid, rank, so the order belongs to the result.
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      val unordered = Seq("q136_sparse_retrieval",
+          "q151_sparse_search_stored", "q170_sparse_token_search")
+        .filterNot { name =>
+          val got = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
+            .collect().toSeq
+            .map(r => (r.getAs[Number]("qid").longValue,
+              r.getAs[Number]("rank").longValue))
+          assert(got.nonEmpty, s"$name returned no rows")
+          got == got.sorted
+        }
+      assert(unordered.isEmpty, s"rows not in (qid, rank) order: $unordered")
+    } finally saved.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+  }
 }
