@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is materialized through the noop sink so
   * the full plan executes (a bare count() would let Catalyst prune the
@@ -80,13 +78,7 @@ object Bench {
         .getOrElse(sys.error(
           s"SPARK_GRAFT_SHUFFLE must be an integer >= 1, got '$v'"))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus, shuffle)
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not on
     // whichever query happens to run first
     try SparkEntry.queries.get("q18_topk")

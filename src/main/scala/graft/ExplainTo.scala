@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` plans — the physical-plan evidence
   * (broadcasts, pushed filters, pruned schemas, codegen stages) that
   * PlanSpec asserts programmatically. Usage:
@@ -61,13 +59,7 @@ object ExplainTo {
       "usage: ExplainTo <sfDir> [<outDir> <suffix> <q1,q2,...>]")
     val sfDir = args(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus, cpus, logLevel = "ERROR")
     def plan(name: String): String = {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))

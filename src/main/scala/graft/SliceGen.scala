@@ -80,13 +80,7 @@ object SliceGen {
     val srcDir = if (args.length > 0) args(0) else "target/stress/sf1x100"
     val outDir = if (args.length > 1) args(1) else "target/stress/slice100"
     val every = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("32", "32")
     generate(spark, srcDir, outDir, every)
     println(s"[slicegen] wrote 1/$every block-slice of $srcDir -> $outDir")
     spark.stop()

@@ -145,13 +145,7 @@ object StressGen {
     val shiftUsers = flags.contains("shiftUsers")
     val only = flags.find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").toSet).getOrElse(Set.empty[String])
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession("32", "32")
     generate(spark, srcDir, outDir, n, keyOffset, shiftUsers, only)
     println(s"[stressgen] wrote ${n}x $srcDir -> $outDir" +
       (if (shiftUsers) " (users shifted)" else "") +

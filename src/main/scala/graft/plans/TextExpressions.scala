@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
@@ -13,10 +11,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * The `aggregate`/`zip_with` lambda composition in
   * [[graft.functions.TextFunctions.minhashSignature]] is evaluated
   * interpreted with per-element boxing — measured ~5 s for 5k docs × 64
-  * perms at sf0.1, dominating the LSH dedup pipeline. This expression emits
-  * the same computation as a tight primitive loop: per shingle one string
-  * hash, then one `hashInt` per permutation, taking minima in a local
-  * array.
+  * perms at sf0.1, dominating the LSH dedup pipeline. This expression runs
+  * the same computation as one primitive kernel loop
+  * ([[SimhashShinglesKernel.minhashSignature]]), which both the
+  * interpreted and the generated code call.
   *
   * Hash recipe matches the lambda composition EXACTLY (xxhash64(s) =
   * hashUTF8String(s, 42); xxhash64(h, p) = hashInt(p, hashLong(h, 42))), so
@@ -24,73 +22,26 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * TextExpressionsSpec.
   */
 case class MinHashSignature(child: Expression, numPerms: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String = "minhash_signature"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val sig = Array.fill(numPerms)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      // null element hashes as the seed (xxhash64(NULL) = 42) — the same
-      // rule SimHash64 applies, keeping bit-parity with the composed
-      // xxhash64-based reference instead of NPE'ing on a null slot
-      val tok = if (arr.isNullAt(i)) 42L
-        else XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
-      val seeded = XXH64.hashLong(tok, 42L)
-      var p = 0
-      while (p < numPerms) {
-        val hp = XXH64.hashInt(p, seeded)
-        if (hp < sig(p)) sig(p) = hp
-        p += 1
-      }
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    SimhashShinglesKernel.minhashSignature(input.asInstanceOf[ArrayData], numPerms)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val n = ctx.freshName("n")
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val seeded = ctx.freshName("seeded")
-      val hp = ctx.freshName("hp")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $sig = new long[$numPerms];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $seeded = $xxh.hashLong($a.isNullAt($i)
-         |    ? 42L : $xxh.hashUTF8String($a.getUTF8String($i), 42L), 42L);
-         |  for (int $p = 0; $p < $numPerms; $p++) {
-         |    long $hp = $xxh.hashInt($p, $seeded);
-         |    if ($hp < $sig[$p]) $sig[$p] = $hp;
-         |  }
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($sig);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a =>
+      s"${kernelRef(SimhashShinglesKernel)}.minhashSignature($a, $numPerms)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Codegen'd 64-bit SimHash over a token array: one pass accumulating the
-  * 64 per-bit majority votes in a local int array, then packing.
+/** Codegen'd 64-bit SimHash over a token array
+  * ([[SimhashShinglesKernel.simhash64]]): one pass accumulating the 64
+  * per-bit majority votes in a local int array, then packing.
   *
   * Replaces the 3-operator composition in [[graft.operators.Dedup.simhash]]
   * (`explode(tokens) → xxhash64 → groupBy(id).agg(64 vote sums)`): the
@@ -114,21 +65,96 @@ case class MinHashSignature(child: Expression, numPerms: Int)
   * both modes; a NULL token hashes to 42 in both (xxhash64(NULL) = seed;
   * kept identical so the modes differ ONLY in the hash family). */
 case class SimHash64(child: Expression, portable: Boolean = false)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String =
     if (portable) "simhash64_portable" else "simhash64"
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.simpleString}")
+  override def nullSafeEval(input: Any): Any =
+    SimhashShinglesKernel.simhash64(input.asInstanceOf[ArrayData], portable)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => boxedKernelCall(ctx, ev,
+      s"${kernelRef(SimhashShinglesKernel)}.simhash64($a, $portable)"))
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Codegen'd distinct word n-gram shingles over raw text: tokenize on the
+  * single-space separator, join each n-token window with a space, keep
+  * first occurrences.
+  *
+  * Replaces the `split → transform(sequence, concat_ws(slice)) →
+  * array_distinct` composition in
+  * [[graft.functions.TextFunctions.shingles]]: higher-order functions
+  * (`transform`) evaluate interpreted with per-element Column machinery —
+  * measured ~1.9 s just to shingle the sf0.1 documents table, the single
+  * largest cost inside the LSH dedup pipelines. Output matches the
+  * composition exactly — same strings, same first-occurrence order, empty
+  * array below n tokens, empty-string tokens from repeated separators
+  * preserved (Java split semantics with limit -1) — pinned in
+  * TextExpressionsSpec. */
+case class Shingles(child: Expression, n: Int)
+    extends UnaryExpression with KernelExpression {
+
+  require(n >= 1, s"shingle size $n < 1")
+
+  override def prettyName: String = "shingles"
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+
+  override def nullSafeEval(input: Any): Any =
+    SimhashShinglesKernel.shingles(
+      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"${kernelRef(SimhashShinglesKernel)}.shingles($a, $n)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Shared primitive kernels for the hashing and token expressions (object
+  * methods so the generated code can call them — the loop itself is plain
+  * JVM code either way; what matters is escaping the interpreted HOF
+  * machinery). */
+object SimhashShinglesKernel {
+  import org.apache.spark.sql.catalyst.util.GenericArrayData
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val space = UTF8String.fromString(" ")
+
+  /** [[MinHashSignature]]: per shingle one string hash, then one `hashInt`
+    * per permutation, taking minima in a local array. */
+  def minhashSignature(arr: ArrayData, numPerms: Int): UnsafeArrayData = {
+    val n = arr.numElements()
+    val sig = Array.fill(numPerms)(Long.MaxValue)
+    var i = 0
+    while (i < n) {
+      // null element hashes as the seed (xxhash64(NULL) = 42) — the same
+      // rule simhash64 applies, keeping bit-parity with the composed
+      // xxhash64-based reference instead of NPE'ing on a null slot
+      val tok = if (arr.isNullAt(i)) 42L
+        else XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
+      val seeded = XXH64.hashLong(tok, 42L)
+      var p = 0
+      while (p < numPerms) {
+        val hp = XXH64.hashInt(p, seeded)
+        if (hp < sig(p)) sig(p) = hp
+        p += 1
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  /** [[SimHash64]]: the 64 per-bit majority votes accumulated in a local
+    * int array, then packed; null for an empty array. */
+  def simhash64(arr: ArrayData, portable: Boolean): java.lang.Long = {
     val n = arr.numElements()
     if (n == 0) return null
     val votes = new Array[Int](64)
@@ -154,102 +180,6 @@ case class SimHash64(child: Expression, portable: Boolean = false)
     out
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val n = ctx.freshName("n")
-      val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      val kernel = PortableHashKernel.getClass.getName + ".MODULE$"
-      val hashCall =
-        if (portable) s"$kernel.md5Head60($a.getUTF8String($i))"
-        else s"$xxh.hashUTF8String($a.getUTF8String($i), 42L)"
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $votes = new int[64];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $a.isNullAt($i)
-         |      ? 42L
-         |      : $hashCall;
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      $votes[$b] += ((int) (($h >>> $b) & 1L) << 1) - 1;
-         |    }
-         |  }
-         |  long $out = 0L;
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ($votes[$b] > 0) $out |= 1L << $b;
-         |  }
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Codegen'd distinct word n-gram shingles over raw text: tokenize on the
-  * single-space separator, join each n-token window with a space, keep
-  * first occurrences.
-  *
-  * Replaces the `split → transform(sequence, concat_ws(slice)) →
-  * array_distinct` composition in
-  * [[graft.functions.TextFunctions.shingles]]: higher-order functions
-  * (`transform`) evaluate interpreted with per-element Column machinery —
-  * measured ~1.9 s just to shingle the sf0.1 documents table, the single
-  * largest cost inside the LSH dedup pipelines. Output matches the
-  * composition exactly — same strings, same first-occurrence order, empty
-  * array below n tokens, empty-string tokens from repeated separators
-  * preserved (Java split semantics with limit -1) — pinned in
-  * TextExpressionsSpec. */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
-
-  require(n >= 1, s"shingle size $n < 1")
-
-  override def prettyName: String = "shingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val toks = SimhashShinglesKernel.splitOnSpace(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      SimhashShinglesKernel.shingle(toks, n).asInstanceOf[Array[Any]])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val kernel = SimhashShinglesKernel.getClass.getName + ".MODULE$"
-      s"""
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    (Object[]) $kernel.shingle($kernel.splitOnSpace($a), $n));
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Shared primitive kernel for [[Shingles]] (object methods so the
-  * generated code can call them — the loop itself is plain JVM code either
-  * way; what matters is escaping the interpreted HOF machinery). */
-object SimhashShinglesKernel {
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private val space = UTF8String.fromString(" ")
-
   /** Java `split(" ", -1)` semantics (what Spark's split gives the old
     * composition): repeated separators yield empty tokens, trailing empties
     * kept. */
@@ -258,9 +188,7 @@ object SimhashShinglesKernel {
   /** Per-word exact-match counts in ONE tokenization pass (for
     * [[TokenCounts]]). Linear scan per token over the (small, constant)
     * word list — no hashing needed for ≤ a dozen markers. */
-  def countTokens(s: org.apache.spark.unsafe.types.UTF8String,
-                  targets: Array[org.apache.spark.unsafe.types.UTF8String])
-      : Array[Int] = {
+  def countTokens(s: UTF8String, targets: Array[UTF8String]): UnsafeArrayData = {
     val toks = splitOnSpace(s)
     val counts = new Array[Int](targets.length)
     var i = 0
@@ -272,12 +200,11 @@ object SimhashShinglesKernel {
       }
       i += 1
     }
-    counts
+    UnsafeArrayData.fromPrimitiveArray(counts)
   }
 
   /** Count of tokens exactly equal to `target` (for [[TokenOccurrences]]). */
-  def countToken(s: org.apache.spark.unsafe.types.UTF8String,
-                 target: org.apache.spark.unsafe.types.UTF8String): Int = {
+  def countToken(s: UTF8String, target: UTF8String): Int = {
     val toks = splitOnSpace(s)
     var c = 0
     var i = 0
@@ -288,9 +215,10 @@ object SimhashShinglesKernel {
     c
   }
 
-  /** Distinct n-gram shingles in first-occurrence order; empty below n. */
-  def shingle(toks: Array[UTF8String], n: Int): Array[UTF8String] = {
-    if (toks.length < n) return Array.empty
+  /** [[Shingles]]: distinct n-gram shingles of the space-split text in
+    * first-occurrence order; empty below n tokens. */
+  def shingles(s: UTF8String, n: Int): ArrayData = {
+    val toks = splitOnSpace(s)
     val seen = new java.util.LinkedHashSet[UTF8String]()
     var i = 0
     while (i <= toks.length - n) {
@@ -299,7 +227,7 @@ object SimhashShinglesKernel {
       seen.add(UTF8String.concatWs(space, parts: _*))
       i += 1
     }
-    seen.toArray(new Array[UTF8String](seen.size()))
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
   }
 }
 
@@ -310,16 +238,11 @@ object SimhashShinglesKernel {
   * Java split limit -1), identical to the composition (parity pinned in
   * TextExpressionsSpec). */
 case class TokenOccurrences(child: Expression, word: String)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String = "token_occurrences"
   override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   private lazy val target =
     org.apache.spark.unsafe.types.UTF8String.fromString(word)
@@ -328,13 +251,11 @@ case class TokenOccurrences(child: Expression, word: String)
     SimhashShinglesKernel.countToken(
       input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], target)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val kernel = SimhashShinglesKernel.getClass.getName + ".MODULE$"
-      val t = ctx.addReferenceObj("targetToken", target,
-        classOf[org.apache.spark.unsafe.types.UTF8String].getName)
-      s"${ev.value} = $kernel.countToken($a, $t);"
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("targetToken", target,
+      classOf[org.apache.spark.unsafe.types.UTF8String].getName)
+    defineCodeGen(ctx, ev, a => s"${kernelRef(SimhashShinglesKernel)}.countToken($a, $t)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -346,43 +267,30 @@ case class TokenOccurrences(child: Expression, word: String)
   * the SAME TokenCounts subtree from several projections of one select, so
   * whole-stage codegen's subexpression elimination evaluates it once. */
 case class TokenCounts(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   require(words.nonEmpty, "words must be non-empty")
 
   override def prettyName: String = "token_counts"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   private lazy val targets: Array[org.apache.spark.unsafe.types.UTF8String] =
     words.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray
 
   override def nullSafeEval(input: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(
-      SimhashShinglesKernel.countTokens(
-        input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        targets))
+    SimhashShinglesKernel.countTokens(
+      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], targets)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val kernel = SimhashShinglesKernel.getClass.getName + ".MODULE$"
-      // the JAVA SOURCE array syntax, not classOf[...].getName — that
-      // returns the JVM binary name ("[Lorg...;"), which janino cannot
-      // parse as a cast: the whole stage would fail to compile and fall
-      // back to interpreted execution (pinned compiled in the spec)
-      val t = ctx.addReferenceObj("targetTokens", targets,
-        "org.apache.spark.unsafe.types.UTF8String[]")
-      s"""
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |    .fromPrimitiveArray($kernel.countTokens($a, $t));
-       """.stripMargin
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // the JAVA SOURCE array syntax, not classOf[...].getName — that
+    // returns the JVM binary name ("[Lorg...;"), which janino cannot
+    // parse as a cast: the whole stage would fail to compile and fall
+    // back to interpreted execution (pinned compiled in the spec)
+    val t = ctx.addReferenceObj("targetTokens", targets,
+      "org.apache.spark.unsafe.types.UTF8String[]")
+    defineCodeGen(ctx, ev, a => s"${kernelRef(SimhashShinglesKernel)}.countTokens($a, $t)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -501,32 +409,26 @@ object NormalizeKernel {
   }
 }
 
-case class NormalizeAscii(child: Expression) extends UnaryExpression {
+case class NormalizeAscii(child: Expression)
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String = "normalize_ascii"
   override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     NormalizeKernel.normalizeAscii(
       input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val kernel = NormalizeKernel.getClass.getName + ".MODULE$"
-      s"${ev.value} = $kernel.normalizeAscii($a);"
-    })
+    defineCodeGen(ctx, ev, a => s"${kernelRef(NormalizeKernel)}.normalizeAscii($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class TermCounts(child: Expression) extends UnaryExpression {
+case class TermCounts(child: Expression)
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String = "term_counts"
 
@@ -535,23 +437,13 @@ case class TermCounts(child: Expression) extends UnaryExpression {
       StructField("term", StringType, nullable = false),
       StructField("tf", IntegerType, nullable = false))),
     containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.simpleString}")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     TermCountsKernel.eval(input.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  graft.plans.TermCountsKernel.eval($a);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${kernelRef(TermCountsKernel)}.eval($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -608,27 +500,18 @@ object BpeKernel {
 
 /** `bpe_units(token)` → ARRAY<STRING> of subword units after the fixed
   * merge table. */
-case class BpeUnits(child: Expression) extends UnaryExpression {
+case class BpeUnits(child: Expression)
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String = "bpe_units"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${other.simpleString}")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     BpeKernel.eval(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  graft.plans.BpeKernel.eval($a);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${kernelRef(BpeKernel)}.eval($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -684,88 +567,22 @@ object BigramHashesKernel {
   * (hbg, h1) struct rows directly. Value-identical to the composition —
   * incl. concat_ws null-skipping and md5(NULL) → NULL h1 — pinned in
   * TextExpressionsSpec. */
-case class BigramHashes(child: Expression) extends UnaryExpression {
+case class BigramHashes(child: Expression)
+    extends UnaryExpression with KernelExpression {
 
   override def prettyName: String = "bigram_hashes"
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("hbg", LongType, nullable = false),
       StructField("h1", LongType, nullable = true))),
     containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${other.simpleString}")
-  }
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
 
   override def nullSafeEval(input: Any): Any =
     BigramHashesKernel.bigramHashes(input.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val kernel = BigramHashesKernel.getClass.getName + ".MODULE$"
-      s"""
-         |${ev.value} = $kernel.bigramHashes($a);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"${kernelRef(BigramHashesKernel)}.bigramHashes($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object TextExpressions {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val tcId = new FunctionIdentifier("term_counts")
-    if (!reg.functionExists(tcId))
-      reg.registerFunction(
-        tcId,
-        new ExpressionInfo(classOf[TermCounts].getName, "term_counts"),
-        (args: Seq[Expression]) => TermCounts(args(0)))
-    val sigId = new FunctionIdentifier("minhash_signature")
-    // idempotent — see VectorExpressions.register
-    if (!reg.functionExists(sigId))
-      reg.registerFunction(
-        sigId,
-        new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
-        (args: Seq[Expression]) => MinHashSignature(args(0),
-          args(1).asInstanceOf[Literal].value.asInstanceOf[Int]))
-    val shId = new FunctionIdentifier("simhash64")
-    if (!reg.functionExists(shId))
-      reg.registerFunction(
-        shId,
-        new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-        (args: Seq[Expression]) => SimHash64(args(0)))
-    val shPortableId = new FunctionIdentifier("simhash64_portable")
-    if (!reg.functionExists(shPortableId))
-      reg.registerFunction(
-        shPortableId,
-        new ExpressionInfo(classOf[SimHash64].getName, "simhash64_portable"),
-        (args: Seq[Expression]) => SimHash64(args(0), portable = true))
-    val shinglesId = new FunctionIdentifier("shingles")
-    if (!reg.functionExists(shinglesId))
-      reg.registerFunction(
-        shinglesId,
-        new ExpressionInfo(classOf[Shingles].getName, "shingles"),
-        (args: Seq[Expression]) => Shingles(args(0),
-          args(1).asInstanceOf[Literal].value.asInstanceOf[Int]))
-    val bpeId = new FunctionIdentifier("bpe_units")
-    if (!reg.functionExists(bpeId))
-      reg.registerFunction(
-        bpeId,
-        new ExpressionInfo(classOf[BpeUnits].getName, "bpe_units"),
-        (args: Seq[Expression]) => BpeUnits(args(0)))
-    val normId = new FunctionIdentifier("normalize_ascii")
-    if (!reg.functionExists(normId))
-      reg.registerFunction(
-        normId,
-        new ExpressionInfo(classOf[NormalizeAscii].getName, "normalize_ascii"),
-        (args: Seq[Expression]) => NormalizeAscii(args(0)))
-    val bgId = new FunctionIdentifier("bigram_hashes")
-    if (!reg.functionExists(bgId))
-      reg.registerFunction(
-        bgId,
-        new ExpressionInfo(classOf[BigramHashes].getName, "bigram_hashes"),
-        (args: Seq[Expression]) => BigramHashes(args(0)))
-  }
 }

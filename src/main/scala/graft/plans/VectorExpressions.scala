@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -11,9 +9,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   *
   * `zip_with`/`aggregate` lambda composition is evaluated interpreted —
   * fine at the edges, but the inner loop of a k-NN or all-pairs join runs
-  * per candidate pair. These expressions generate a tight primitive `for`
-  * loop inside whole-stage codegen (`doGenCode`), the preference order the
-  * build calls for: native Expression > composition > UDF.
+  * per candidate pair. Each expression here keeps its primitive loop in
+  * one [[VectorKernels]] method, called by `nullSafeEval` and by the
+  * generated code inside whole-stage codegen (`doGenCode`) alike — the
+  * preference order the build calls for: native Expression > composition
+  * > UDF.
   *
   * Inputs are `ARRAY<DOUBLE>` (cast floats once at the scan edge —
   * [[graft.functions.VectorFunctions.toDouble]]); elements are assumed
@@ -21,27 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * `aggregate(zip_with(...))` composition, so swapping implementations does
   * not move results even at the last ulp.
   */
-abstract class VectorFold extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<DOUBLE> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-}
+object VectorKernels {
 
-/** Σ aᵢ·bᵢ over the common prefix of the two arrays. */
-case class DotProduct(left: Expression, right: Expression) extends VectorFold {
-  override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Σ aᵢ·bᵢ over the common prefix of the two arrays. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0
     var i = 0
@@ -49,33 +32,8 @@ case class DotProduct(left: Expression, right: Expression) extends VectorFold {
     dot
   }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double ${ev.value}_acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}_acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Single-pass cosine similarity; NULL when either vector has zero norm. */
-case class CosineSimilarity(left: Expression, right: Expression) extends VectorFold {
-  override def prettyName: String = "cosine_sim"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Single-pass cosine similarity; null when either vector has zero norm. */
+  def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -88,27 +46,96 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorF
     if (denom == 0.0) null else dot / denom
   }
 
+  /** Σ aᵢ·bᵢ over the common prefix, exact long arithmetic. */
+  def longDot(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0L
+    var i = 0
+    while (i < n) { dot += a.getLong(i) * b.getLong(i); i += 1 }
+    dot
+  }
+
+  /** Σ (aᵢ−bᵢ)² over the common prefix, exact long arithmetic. */
+  def longSqDist(a: ArrayData, b: ArrayData): Long = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val d = a.getLong(i) - b.getLong(i); acc += d * d; i += 1
+    }
+    acc
+  }
+
+  /** [[HyperplaneSig]]'s signature of `arr` against the `nbits × dim`
+    * precomputed plane weights `w`. */
+  def hyperplaneSig(arr: ArrayData, w: Array[Double], dim: Int, nbits: Int): Long = {
+    // composition parity: wrong length OR any null element nulls the
+    // zip_with products → every proj null → all bits 0
+    if (arr.numElements() != dim) return 0L
+    var d = 0
+    while (d < dim) {
+      if (arr.isNullAt(d)) return 0L
+      d += 1
+    }
+    var out = 0L
+    var p = 0
+    while (p < nbits) {
+      var acc = 0.0
+      var i = 0
+      while (i < dim) {
+        acc += arr.getDouble(i) * w(p * dim + i)
+        i += 1
+      }
+      // Spark SQL comparison: NaN > 0 is TRUE (NaN sorts greatest)
+      if (acc > 0 || java.lang.Double.isNaN(acc)) out |= 1L << p
+      p += 1
+    }
+    out
+  }
+
+  /** [[DoubleSortKey]]'s order-preserving key. */
+  def doubleSortKey(d: Double): Long = {
+    val bits = java.lang.Double.doubleToLongBits(d)
+    bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
+  }
+}
+
+/** A fold of two `ARRAY<elem>` vectors into one `elem`. Serializable
+  * itself: Java deserialization needs the first non-serializable
+  * superclass to have a no-arg constructor, which this one lacks. */
+abstract class VectorFold(elem: DataType)
+    extends BinaryExpression with KernelExpression with Serializable {
+  override def dataType: DataType = elem
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(elem), ArrayType(elem))
+}
+
+/** Σ aᵢ·bᵢ over the common prefix of the two arrays. */
+case class DotProduct(left: Expression, right: Expression) extends VectorFold(DoubleType) {
+  override def prettyName: String = "dot_product"
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val denom = ctx.freshName("denom")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double x = $a.getDouble($i);
-         |  double y = $b.getDouble($i);
-         |  $dot += x * y; $na += x * x; $nb += y * y;
-         |}
-         |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |if ($denom == 0.0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $dot / $denom; }
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${kernelRef(VectorKernels)}.dot($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Single-pass cosine similarity; NULL when either vector has zero norm. */
+case class CosineSimilarity(left: Expression, right: Expression)
+    extends VectorFold(DoubleType) {
+  override def prettyName: String = "cosine_sim"
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      boxedKernelCall(ctx, ev, s"${kernelRef(VectorKernels)}.cosine($a, $b)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -121,48 +148,15 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorF
   * `aggregate(zip_with(...))` lambdas measured ~4× the kernel cost there.
   * Long addition is associative and exact, so swapping the composition
   * for the kernel cannot move a single bit of any result. */
-abstract class LongVectorFold extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments, got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-}
-
-/** Σ aᵢ·bᵢ over the common prefix, exact long arithmetic. */
 case class LongDotProduct(left: Expression, right: Expression)
-    extends LongVectorFold {
+    extends VectorFold(LongType) {
   override def prettyName: String = "long_dot"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0L
-    var i = 0
-    while (i < n) { dot += a.getLong(i) * b.getLong(i); i += 1 }
-    dot
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.longDot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long ${ev.value}_acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  ${ev.value}_acc += $a.getLong($i) * $b.getLong($i);
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${kernelRef(VectorKernels)}.longDot($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -171,36 +165,14 @@ case class LongDotProduct(left: Expression, right: Expression)
 
 /** Σ (aᵢ−bᵢ)² over the common prefix, exact long arithmetic. */
 case class LongSquaredDistance(left: Expression, right: Expression)
-    extends LongVectorFold {
+    extends VectorFold(LongType) {
   override def prettyName: String = "long_sq_dist"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val d = a.getLong(i) - b.getLong(i); acc += d * d; i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.longSqDist(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long ${ev.value}_acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $d = $a.getLong($i) - $b.getLong($i);
-         |  ${ev.value}_acc += $d * $d;
-         |}
-         |${ev.value} = ${ev.value}_acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"${kernelRef(VectorKernels)}.longSqDist($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -226,20 +198,15 @@ case class LongSquaredDistance(left: Expression, right: Expression)
   * VectorExpressionsSpec. */
 case class HyperplaneSig(child: Expression, dim: Int, nbits: Int,
                          portable: Boolean = false)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with KernelExpression {
 
   require(dim >= 1, s"dim $dim < 1")
   require(nbits >= 1 && nbits <= 64, s"nbits $nbits outside [1, 64]")
 
   override def prettyName: String =
     if (portable) "hyperplane_sig_portable" else "hyperplane_sig"
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<DOUBLE>, got ${other.simpleString}")
-  }
+  override def dataType: DataType = LongType
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
 
   // default: identical derivation to (xxhash64(lit(p), d) % 1000003L)
   //          / 1000003.0 (the composed spec reference).
@@ -266,58 +233,14 @@ case class HyperplaneSig(child: Expression, dim: Int, nbits: Int,
     w
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    // composition parity: wrong length OR any null element nulls the
-    // zip_with products → every proj null → all bits 0
-    if (arr.numElements() != dim) return 0L
-    var d = 0
-    while (d < dim) {
-      if (arr.isNullAt(d)) return 0L
-      d += 1
-    }
-    var out = 0L
-    var p = 0
-    while (p < nbits) {
-      var acc = 0.0
-      var i = 0
-      while (i < dim) {
-        acc += arr.getDouble(i) * weights(p * dim + i)
-        i += 1
-      }
-      // Spark SQL comparison: NaN > 0 is TRUE (NaN sorts greatest)
-      if (acc > 0 || java.lang.Double.isNaN(acc)) out |= 1L << p
-      p += 1
-    }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.hyperplaneSig(input.asInstanceOf[ArrayData], weights, dim, nbits)
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val w = ctx.addReferenceObj("hyperplaneWeights", weights, "double[]")
-      val out = ctx.freshName("out")
-      val ok = ctx.freshName("ok")
-      val p = ctx.freshName("p")
-      val d = ctx.freshName("d")
-      val acc = ctx.freshName("acc")
-      s"""
-         |long $out = 0L;
-         |boolean $ok = $a.numElements() == $dim;
-         |for (int $d = 0; $ok && $d < $dim; $d++) {
-         |  if ($a.isNullAt($d)) $ok = false;
-         |}
-         |if ($ok) {
-         |  for (int $p = 0; $p < $nbits; $p++) {
-         |    double $acc = 0.0;
-         |    for (int $d = 0; $d < $dim; $d++) {
-         |      $acc += $a.getDouble($d) * $w[$p * $dim + $d];
-         |    }
-         |    if ($acc > 0 || java.lang.Double.isNaN($acc)) $out |= 1L << $p;
-         |  }
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val w = ctx.addReferenceObj("hyperplaneWeights", weights, "double[]")
+    defineCodeGen(ctx, ev, a =>
+      s"${kernelRef(VectorKernels)}.hyperplaneSig($a, $w, $dim, $nbits)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -344,73 +267,17 @@ case class HyperplaneSig(child: Expression, dim: Int, nbits: Int,
   * Spark compares them equal — an argmin tie between −0.0 and 0.0 of the
   * same quantity is the only observable case, unreachable for the cosine
   * inputs this serves (pinned in VectorExpressionsSpec). */
-case class DoubleSortKey(child: Expression) extends UnaryExpression {
+case class DoubleSortKey(child: Expression) extends UnaryExpression with KernelExpression {
   override def prettyName: String = "double_sort_key"
   override def dataType: DataType = LongType
+  override protected def inputTypes: Seq[DataType] = Seq(DoubleType)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case DoubleType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires DOUBLE, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val bits = java.lang.Double.doubleToLongBits(input.asInstanceOf[Double])
-    bits ^ ((bits >> 63) & 0x7fffffffffffffffL)
-  }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.doubleSortKey(input.asInstanceOf[Double])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d => {
-      val bits = ctx.freshName("bits")
-      s"""
-         |long $bits = java.lang.Double.doubleToLongBits($d);
-         |${ev.value} = $bits ^ (($bits >> 63) & 0x7fffffffffffffffL);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, d => s"${kernelRef(VectorKernels)}.doubleSortKey($d)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Registration: idempotent per-session helper plus a
-  * `spark.sql.extensions`-loadable class. */
-object VectorExpressions {
-  private def entries = Seq(
-    (new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))),
-    (new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))),
-    (new FunctionIdentifier("long_dot"),
-      new ExpressionInfo(classOf[LongDotProduct].getName, "long_dot"),
-      (args: Seq[Expression]) => LongDotProduct(args(0), args(1))),
-    (new FunctionIdentifier("long_sq_dist"),
-      new ExpressionInfo(classOf[LongSquaredDistance].getName, "long_sq_dist"),
-      (args: Seq[Expression]) => LongSquaredDistance(args(0), args(1))),
-    (new FunctionIdentifier("double_sort_key"),
-      new ExpressionInfo(classOf[DoubleSortKey].getName, "double_sort_key"),
-      (args: Seq[Expression]) => DoubleSortKey(args(0))))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    entries.foreach { case (id, info, builder) =>
-      // idempotent: operators call register() defensively per query; blind
-      // re-registration spams "replaced a previously registered function"
-      if (!spark.sessionState.functionRegistry.functionExists(id))
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-}
-
-/** `--conf spark.sql.extensions=graft.plans.GraftExtensions` entry point. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (new FunctionIdentifier("dot_product"),
-        new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-        (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction(
-      (new FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-        (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-  }
 }

@@ -229,9 +229,9 @@ final class TableStore(spark: SparkSession, root: String,
     }
 }
 
-/** The write-temp + two-rename directory swap, shared by [[TableStore]]
-  * and the index stores ([[IndexStore]]). */
-private[sources] object TableStore {
+/** The write-temp + two-rename directory swap, shared by [[TableStore]],
+  * the index stores ([[IndexStore]]) and DocStream's index compaction. */
+private[graft] object TableStore {
 
   /** Replace the directory `dest` with what `write` puts into a fresh
     * `<dest>.tmp-<uuid>`: rename `dest` to `<dest>.old-<uuid>`, rename the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
+import graft.sources.TableStore
 
 /** Incremental near-duplicate admission for a streaming document feed
   * (SURVEY §2.10 extension): each micro-batch's documents are simhashed and
@@ -563,57 +564,38 @@ object DocStream {
     q
   }
 
-  /** Crash recovery for [[compactIndex]]'s two-rename window (same shape
-    * as TableStore.recoverSwap): a kill between `index→old` and
-    * `compact→index` leaves the index ABSENT with a complete `.old-*`
-    * beside it — without restoration the next admitBatch would see an
-    * empty corpus and re-admit near-duplicates of everything ever
-    * indexed. The `.compact-*` copy is discarded (the swap never
-    * completed); leftovers from post-swap crashes are swept. */
-  private def recoverIndex(spark: SparkSession, indexDir: String): Unit = {
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val glob = fs.globStatus(new Path(indexDir + ".{old,compact}-*"))
-    if (glob == null || glob.isEmpty) return
-    if (!fs.exists(new Path(indexDir))) {
-      val olds = glob.filter(_.getPath.getName.contains(".old-"))
-      if (olds.nonEmpty)
-        require(fs.rename(olds.head.getPath, new Path(indexDir)),
-          s"recoverIndex: restoring ${olds.head.getPath} failed")
-    }
-    fs.globStatus(new Path(indexDir + ".{old,compact}-*"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
+  /** Crash recovery for [[compactIndex]]'s swap ([[TableStore.recoverDir]]):
+    * a kill between its two renames leaves the index ABSENT with a
+    * complete `.old-*` beside it — without restoration the next admitBatch
+    * would see an empty corpus and re-admit near-duplicates of everything
+    * ever indexed. */
+  private def recoverIndex(spark: SparkSession, indexDir: String): Unit =
+    TableStore.recoverDir(new Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), indexDir, "DocStream")
 
   /** Fold the per-batch parquet file accumulation back into
-    * `targetPartitions` full files (same write-temp + atomic-rename shape
-    * as TableStore.compact, including rename-result checks and the
-    * [[recoverIndex]] crash recovery) — run periodically on a long-lived
-    * index. */
+    * `targetPartitions` full files through TableStore's write-temp +
+    * two-rename swap ([[TableStore.swapDir]], healed by [[recoverIndex]])
+    * — run periodically on a long-lived index. */
   def compactIndex(spark: SparkSession, indexDir: String,
                    targetPartitions: Int = 8,
                    partCol: String = "bkt"): Unit = {
     val fs = new Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIndex(spark, indexDir)
+    TableStore.recoverDir(fs, indexDir, "DocStream")
     if (!fs.exists(new Path(indexDir))) return
     // a dir holding only _SUCCESS (every batch rejected everything) has
     // nothing to fold — and no footer to infer a schema from
     val live = fs.globStatus(new Path(indexDir, s"$partCol=*"))
     if (live == null || live.isEmpty) return
-    val tmp = indexDir + ".compact-" + java.util.UUID.randomUUID()
-    // hash-distribute on the partition column so each directory partition
-    // is written by one task (one full file per dir), with
-    // targetPartitions bounding writer concurrency; partitionBy preserves
-    // the pruning layout
-    spark.read.parquet(indexDir).repartition(targetPartitions, col(partCol))
-      .write.partitionBy(partCol).parquet(tmp)
-    val old = indexDir + ".old-" + java.util.UUID.randomUUID()
-    require(fs.rename(new Path(indexDir), new Path(old)),
-      s"compactIndex: rename $indexDir -> $old failed")
-    require(fs.rename(new Path(tmp), new Path(indexDir)),
-      s"compactIndex: rename $tmp -> $indexDir failed — index is in $old")
-    fs.delete(new Path(old), true)
+    TableStore.swapDir(fs, indexDir, "DocStream") { tmp =>
+      // hash-distribute on the partition column so each directory
+      // partition is written by one task (one full file per dir), with
+      // targetPartitions bounding writer concurrency; partitionBy
+      // preserves the pruning layout
+      spark.read.parquet(indexDir).repartition(targetPartitions, col(partCol))
+        .write.partitionBy(partCol).parquet(tmp.toString)
+    }
   }
 
   /** Fold [[curateBatch]]'s per-batch file accumulation back into full

@@ -249,6 +249,9 @@ class TextExpressionsSpec extends SparkSpec {
     val str = BoundReference(0, StringType, nullable = true)
     val arr = BoundReference(1, ArrayType(StringType), nullable = true)
     val vec = BoundReference(2, ArrayType(DoubleType), nullable = true)
+    val lvec = BoundReference(3, ArrayType(LongType), nullable = true)
+    val dbl = BoundReference(4, DoubleType, nullable = true)
+    val lvec2 = BoundReference(5, ArrayType(LongType), nullable = true)
     val exprs = Seq(
       graft.plans.Shingles(str, 3),
       graft.plans.NormalizeAscii(str),
@@ -259,13 +262,23 @@ class TextExpressionsSpec extends SparkSpec {
       graft.plans.MinHashSignature(arr, 16),
       graft.plans.DotProduct(vec, vec),
       graft.plans.CosineSimilarity(vec, vec),
-      graft.plans.HyperplaneSig(vec, 4, 8))
+      graft.plans.HyperplaneSig(vec, 4, 8),
+      graft.plans.LongDotProduct(lvec, lvec),
+      graft.plans.LongSquaredDistance(lvec, lvec2),
+      graft.plans.DoubleSortKey(dbl),
+      graft.plans.BpeUnits(str),
+      graft.plans.BigramHashes(arr),
+      graft.plans.SimHash64(arr, portable = true),
+      graft.plans.HyperplaneSig(vec, 4, 8, portable = true))
     val proj = GenerateMutableProjection.generate(exprs) // throws on bad Java
     val row = InternalRow(
       UTF8String.fromString("the quick brown fox and the lazy dog"),
       ArrayData.toArrayData(Array(UTF8String.fromString("the"),
         UTF8String.fromString("fox"))),
-      ArrayData.toArrayData(Array(1.0, 2.0, 3.0, 4.0)))
+      ArrayData.toArrayData(Array(1.0, 2.0, 3.0, 4.0)),
+      ArrayData.toArrayData(Array(3L, -1L, 4L)),
+      -2.5,
+      ArrayData.toArrayData(Array(1L, 5L, -2L)))
     val out = proj(row)
     // spot-check against interpreted eval so both paths agree
     exprs.zipWithIndex.foreach { case (e, i) =>
