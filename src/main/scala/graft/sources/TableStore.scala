@@ -12,10 +12,11 @@ import graft.model.Schemas
   *
   * Layout: `<root>/<TableName>/` parquet dirs, one per Schemas.tables entry.
   * Semantics implemented here (SURVEY §2.9):
-  *   - M5 `CREATE TABLE IF NOT EXISTS` → [[init]] (no-op when dir exists)
+  *   - M5 `CREATE TABLE IF NOT EXISTS` → [[init]]: `mkdirs`, no Spark job
+  *     ([[read]] passes the declared schema, so an empty dir reads typed)
   *   - M1/M2 `INSERT OR REPLACE` keyed upsert → [[upsert]] (left_anti on the
   *     PK ∪ new, then atomic directory swap — the one genuinely custom
-  *     physical piece, SURVEY §4.3)
+  *     physical piece, SURVEY §4.3); [[stageUpsert]] splits it in two
   *   - M3 child-table reload → [[replaceDays]] (delete-matching-(userid,date)
   *     then insert: the reference's *intent*; its literal append-on-rerun
   *     duplicates child rows — documented divergence, SURVEY §7.5 item 5)
@@ -25,6 +26,11 @@ import graft.model.Schemas
   * At scale: upsert rewrites only the table it targets; with a
   * date-partitioned layout the anti-join prunes to touched partitions
   * (dynamic partition overwrite is the production variant of the same plan).
+  *
+  * `partitionByDate` lays every table out Hive-style by date, so the
+  * reference's point lookups (`WHERE userid=? AND date=?`, S4/S5) and the
+  * report's date-range scan prune to a few directories at 100 TB. Off by
+  * default so tiny fixtures don't pay per-day directory overhead.
   */
 final class TableStore(spark: SparkSession, root: String,
                        partitionByDate: Boolean = false) {
@@ -34,23 +40,13 @@ final class TableStore(spark: SparkSession, root: String,
   /** The day key every table carries: M3 replaces and M4 cascades on it. */
   private val dayKeys = Seq("userid", "date")
 
-  /** Hive-style partition spec: every table carries (userid, date); laying
-    * the directory out by date turns the reference's point lookups
-    * (`WHERE userid=? AND date=?`, S4/S5) and the report's date-range scan
-    * into partition-pruned reads — the difference between touching a few
-    * directories and scanning the table at 100 TB. Off by default so tiny
-    * fixtures don't pay per-day directory overhead. */
-  private def partitionCols(table: String): Seq[String] =
-    if (partitionByDate) Seq("date") else Seq.empty
-
   private def fs = new Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(table: String) = fs.exists(new Path(path(table)))
-
-  /** Idempotent create of every declared table (M5). Also sweeps staging
-    * leftovers — a run killed between [[stage]] and its cleanup orphans a
-    * `_staging/<uuid>` diff copy that nothing would ever delete — and
+  /** Idempotent create of every declared table (M5) as a bare directory.
+    * Also sweeps staging leftovers — a run killed between [[stage]] or
+    * [[stageUpsert]] and its cleanup orphans a `_staging/<uuid>` copy that
+    * nothing would ever delete — and
     * recovers interrupted swaps (single writer per store — the same
     * assumption [[swapIn]] makes). */
   def init(): Unit = {
@@ -58,18 +54,10 @@ final class TableStore(spark: SparkSession, root: String,
     Schemas.tables.keys.foreach(initTable)
   }
 
-  private def recoverSwap(table: String): Unit =
-    TableStore.recoverDir(fs, path(table), table)
-
   def initTable(table: String): Unit = {
     require(Schemas.tables.contains(table), s"unknown table $table")
-    recoverSwap(table)
-    if (!exists(table)) {
-      val (schema, _) = Schemas.tables(table)
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      write(table, empty, mode = "errorifexists", dest = path(table))
-    }
+    TableStore.recoverDir(fs, path(table), table)
+    fs.mkdirs(new Path(path(table)))
   }
 
   /** Read a table; empty (typed) result when uninitialized. Recovery runs
@@ -79,8 +67,8 @@ final class TableStore(spark: SparkSession, root: String,
     * turning a recoverable crash into permanent loss. */
   def read(table: String): DataFrame = {
     val (schema, _) = Schemas.tables(table)
-    recoverSwap(table)
-    if (exists(table)) spark.read.schema(schema).parquet(path(table))
+    TableStore.recoverDir(fs, path(table), table)
+    if (fs.exists(new Path(path(table)))) spark.read.schema(schema).parquet(path(table))
     else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
 
@@ -116,14 +104,12 @@ final class TableStore(spark: SparkSession, root: String,
   /** Plain append (reference M3 literal semantics). */
   def append(table: String, df: DataFrame): Unit = {
     initTable(table)
-    write(table, align(table, df), mode = "append", dest = path(table))
+    write(table, df, "append")(new Path(path(table)))
   }
 
-  private def write(table: String, df: DataFrame, mode: String,
-                    dest: String): Unit = {
-    val w = df.write.mode(mode)
-    val parts = partitionCols(table)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(dest)
+  private def write(table: String, df: DataFrame, mode: String)(dest: Path): Unit = {
+    val w = align(table, df).write.mode(mode)
+    (if (partitionByDate) w.partitionBy("date") else w).parquet(dest.toString)
   }
 
   /** Keyed upsert (M1/M2): rows matching an incoming PK are replaced, all
@@ -133,13 +119,22 @@ final class TableStore(spark: SparkSession, root: String,
     * last-INSERT-wins to refer to); without the collapse the left_anti
     * only removes OLD rows and both duplicates would land in the table,
     * breaking the one-row-per-PK invariant every read/diff relies on. */
-  def upsert(table: String, incoming: DataFrame): Unit = {
+  def upsert(table: String, incoming: DataFrame): Unit =
+    stageUpsert(table, incoming).commit()
+
+  /** [[upsert]]'s stage half: write the table's new copy now, under
+    * `_staging/` (swept by [[init]], untouched by [[read]]'s recovery, left
+    * out of backups); reads see the old copy until `commit()`. */
+  def stageUpsert(table: String, incoming: DataFrame): TableStore.Staged = {
     val keys = Schemas.tables(table)._2
     require(keys.nonEmpty, s"$table has no PK; use append/replaceDays")
     val deduped = incoming.dropDuplicates(keys)
     val kept = read(table).join(
       deduped.select(keys.map(col): _*), keys, "left_anti")
-    swapIn(table, kept.unionByName(align(table, deduped)))
+    val staged = new TableStore.Staged(fs, stagingDir(), path(table), table)
+    try write(table, kept.unionByName(align(table, deduped)), "errorifexists")(staged.dir)
+    catch { case e: Throwable => staged.discard(); throw e }
+    staged
   }
 
   /** Delete-then-insert by (userid, date) — the intent-faithful child-table
@@ -193,7 +188,7 @@ final class TableStore(spark: SparkSession, root: String,
     * in-memory diff, never the DB). The staged copy has no lineage back to
     * the store and, unlike localCheckpoint, survives executor loss. */
   def stage(df: DataFrame): (DataFrame, () => Unit) = {
-    val dir = new Path(s"$root/_staging/${java.util.UUID.randomUUID()}")
+    val dir = stagingDir()
     df.write.mode("errorifexists").parquet(dir.toString)
     // the part files named one by one, in write-task order: a directory
     // read takes them in listing order, which differs between runs, and
@@ -223,10 +218,9 @@ final class TableStore(spark: SparkSession, root: String,
   /** Materialize `df` into a fresh dir, then swap it in
     * ([[TableStore.swapDir]]). */
   private def swapIn(table: String, df: DataFrame): Unit =
-    TableStore.swapDir(fs, path(table), table) { tmp =>
-      write(table, align(table, df), mode = "errorifexists",
-        dest = tmp.toString)
-    }
+    TableStore.swapDir(fs, path(table), table)(write(table, df, "errorifexists"))
+
+  private def stagingDir() = new Path(s"$root/_staging/${java.util.UUID.randomUUID()}")
 }
 
 /** The write-temp + two-rename directory swap, shared by [[TableStore]],
@@ -234,26 +228,37 @@ final class TableStore(spark: SparkSession, root: String,
 private[graft] object TableStore {
 
   /** Replace the directory `dest` with what `write` puts into a fresh
-    * `<dest>.tmp-<uuid>`: rename `dest` to `<dest>.old-<uuid>`, rename the
-    * tmp dir to `dest`, drop the old copy. Readers see the old or the new
-    * directory, never a partial one (rename is atomic on HDFS-like
-    * filesystems); a kill between the two renames is healed by
-    * [[recoverDir]]. */
+    * `<dest>.tmp-<uuid>` — the stage half — then commit it. */
   def swapDir(fs: FileSystem, dest: String, label: String)(
       write: Path => Unit): Unit = {
-    val destP = new Path(dest)
     val tmp = new Path(dest + ".tmp-" + java.util.UUID.randomUUID())
     write(tmp)
-    val old = new Path(dest + ".old-" + java.util.UUID.randomUUID())
-    // Hadoop rename reports failure by RETURNING FALSE, not throwing — an
-    // unchecked failed rename here would silently drop the new version
-    // and the next recoverDir would garbage-collect the .tmp holding the
-    // only copy of it
-    if (fs.exists(destP)) require(fs.rename(destP, old),
-      s"swapIn($label): rename $destP -> $old failed")
-    require(fs.rename(tmp, destP),
-      s"swapIn($label): rename $tmp -> $destP failed — pre-swap state is in $old")
-    fs.delete(old, true)
+    new Staged(fs, tmp, dest, label).commit()
+  }
+
+  /** A complete next copy of the directory `dest`, staged at `dir`. */
+  final class Staged(fs: FileSystem, private[sources] val dir: Path, dest: String,
+                     label: String) {
+    /** The commit half: rename `dest` to `<dest>.old-<uuid>`, rename `dir`
+      * to `dest`, drop the old copy. Readers see the old or the new
+      * directory, never a partial one (rename is atomic on HDFS-like
+      * filesystems); a kill between the two renames is healed by
+      * [[recoverDir]]. */
+    def commit(): Unit = {
+      val destP = new Path(dest)
+      val old = new Path(dest + ".old-" + java.util.UUID.randomUUID())
+      // Hadoop rename reports failure by RETURNING FALSE, not throwing — an
+      // unchecked failed rename here would silently drop the new version
+      // and the next recoverDir or init sweep would garbage-collect the
+      // staged dir holding the only copy of it
+      if (fs.exists(destP)) require(fs.rename(destP, old),
+        s"swapIn($label): rename $destP -> $old failed")
+      require(fs.rename(dir, destP),
+        s"swapIn($label): rename $dir -> $destP failed — pre-swap state is in $old")
+      fs.delete(old, true)
+    }
+
+    def discard(): Unit = fs.delete(dir, true)
   }
 
   /** Crash recovery for [[swapDir]]'s two-rename window: a kill between

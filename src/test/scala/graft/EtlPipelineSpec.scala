@@ -14,6 +14,10 @@ class EtlPipelineSpec extends SparkSpec {
   private def rows(store: TableStore, table: String): Seq[String] =
     store.read(table).collect().map(_.toString).toSeq.sorted
 
+  /** What the store's staging area holds. */
+  private def staged(root: String): Seq[String] =
+    Option(new java.io.File(s"$root/_staging").list()).toSeq.flatten.sorted
+
   test("full run, incremental no-op rerun, changed-day replacement") {
     val store = new TableStore(spark, tmpDir("etl"))
     val days = Fixtures.fakeDays :+ Fixtures.fullDay
@@ -177,5 +181,108 @@ class EtlPipelineSpec extends SparkSpec {
     for (_ <- 1 to 3; b = load(); t <- Schemas.tables.keys)
       assert(rows(a, t) == rows(b, t), s"$t differs between identical loads")
     assert(rows(a, "MealEntries").size == 2 * days.size)
+  }
+
+  test("a failing branch leaves RawDayData's rows as they were and nothing staged") {
+    // RawDayData's new copy is written during the fan-out, beside the
+    // branches; a failed branch must drop it, not commit or strand it
+    val root = tmpDir("etl-branch-staged")
+    val store = new TableStore(spark, root)
+    EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays))
+    val rawBefore = rows(store, "RawDayData")
+    val bad = Fixtures.fullDay.copy(
+      goals = Fixtures.fullDay.goals + ("calories" -> 1e12))
+    intercept[Exception](EtlPipeline.run(store,
+      spark.createDataset(Fixtures.fakeDays.map(_.copy(water = 3.0)) :+ bad)))
+    assert(rows(store, "RawDayData") == rawBefore)
+    assert(staged(root).isEmpty, "staged copies left behind")
+  }
+
+  test("a kill before the RawDayData rename keeps the old copy; the next run sweeps and converges") {
+    val root = tmpDir("etl-seam")
+    val store = new TableStore(spark, root)
+    EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays))
+    val rawBefore = rows(store, "RawDayData")
+    val edited = Fixtures.fakeDays.head.copy(water = 4.0) +: Fixtures.fakeDays.tail
+    val killed = tmpDir("etl-seam-killed")
+    // the seam runs after every branch and RawDayData's staging write,
+    // before its rename: what it sees is what a kill there would leave
+    val atSeam: () => Unit = () => {
+      def stagedRows = staged(root)
+        .map(d => spark.read.parquet(s"$root/_staging/$d").count()).sorted
+      val before = staged(root)
+      // the 1-day diff and RawDayData's complete 3-day new copy
+      assert(stagedRows == Seq(1L, 3L))
+      assert(rows(store, "RawDayData") == rawBefore, "old copy still read")
+      assert(staged(root) == before && stagedRows == Seq(1L, 3L),
+        "a read disturbed the staged copy")
+      graft.backup.Snapshot.copyDir(s"$root/_staging", killed)
+      throw new RuntimeException("killed before the RawDayData rename")
+    }
+    val e = intercept[RuntimeException](
+      EtlPipeline.run(store, spark.createDataset(edited), atSeam))
+    // not a failed assertion inside the seam
+    assert(e.getMessage == "killed before the RawDayData rename", e)
+    assert(rows(store, "RawDayData") == rawBefore)
+
+    // put back the staging area the kill would have left, then re-run
+    graft.backup.Snapshot.copyDir(killed, s"$root/_staging")
+    assert(staged(root).size == 2)
+    assert(EtlPipeline.run(store, spark.createDataset(edited)) == 1)
+    assert(staged(root).isEmpty, "leftovers not swept")
+    val clean = new TableStore(spark, tmpDir("etl-seam-clean"))
+    EtlPipeline.run(clean, spark.createDataset(Fixtures.fakeDays))
+    EtlPipeline.run(clean, spark.createDataset(edited))
+    Schemas.tables.keys.foreach { t =>
+      assert(rows(store, t) == rows(clean, t), s"$t differs from a clean run")
+    }
+  }
+
+  test("the changed-day count is exact: bulk, one edited day, identical re-run, empty input, micro-batch") {
+    val days = (1 to 20).map(i => Fixtures.fullDay.copy(
+      date = java.sql.Date.valueOf(java.time.LocalDate.of(2021, 4, i)),
+      water = 100.0 * i))
+    val store = new TableStore(spark, tmpDir("etl-count"))
+    assert(EtlPipeline.run(store, spark.createDataset(days)) == 20)
+    val edited = days.updated(7, days(7).copy(water = 1.0))
+    assert(EtlPipeline.run(store, spark.createDataset(edited)) == 1)
+    assert(EtlPipeline.run(store, spark.createDataset(edited)) == 0)
+    assert(EtlPipeline.run(store,
+      spark.createDataset(Seq.empty[graft.model.MaterializedDay])) == 0)
+
+    // the same load inside a Structured Streaming micro-batch
+    val streamed = new TableStore(spark, tmpDir("etl-count-stream"))
+    streamed.init()
+    def ingest(wave: Seq[graft.model.MaterializedDay]): Seq[Long] = {
+      val dir = tmpDir("etl-count-wave")
+      graft.sources.DaySource.writeJsonl(spark.createDataset(wave), dir)
+      val counts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      spark.readStream.schema(graft.sources.DaySource.daySchema).json(dir)
+        .writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          counts.add(EtlPipeline.load(streamed,
+            graft.operators.Extractors.serializeDays(batch)))
+          ()
+        }
+        .option("checkpointLocation", tmpDir("etl-count-ckpt"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+      counts.toArray.toSeq.map(_.asInstanceOf[Long])
+    }
+    assert(ingest(days) == Seq(20L))
+    assert(ingest(edited) == Seq(1L))
+    assert(ingest(edited) == Seq(0L))
+    assert(streamed.read("RawDayData").count() == 20)
+  }
+
+  test("an identical re-run submits only the staging write's jobs") {
+    val store = new TableStore(spark, tmpDir("etl-rerun-jobs"))
+    EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays :+ Fixtures.fullDay))
+    var n = -1L
+    val jobs = jobsIn {
+      n = EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays :+ Fixtures.fullDay))
+    }
+    assert(n == 0)
+    assert(jobs == 2, s"$jobs jobs")
   }
 }

@@ -26,6 +26,22 @@ abstract class SparkSpec extends AnyFunSuite {
     SparkSpec.cleanupOnExit(d)
     d.toString
   }
+
+  /** The number of Spark jobs `body` submits, counted by a listener that
+    * sees only the events posted while `body` runs. */
+  def jobsIn(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
 }
 
 object SparkSpec {

@@ -30,6 +30,20 @@ class TableStoreSpec extends SparkSpec {
 
   private val u = Fixtures.user
 
+  /** A table's rows in declared column order, order-free. */
+  private def rows(s: TableStore, table: String): Seq[String] =
+    s.read(table).select(Schemas.tables(table)._1.fieldNames.toIndexedSeq
+      .map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toString).toSeq.sorted
+
+  /** Every declared table reads back empty, with its declared schema. */
+  private def assertEmptyTyped(s: TableStore): Unit =
+    Schemas.tables.foreach { case (t, (schema, _)) =>
+      val df = s.read(t)
+      assert(df.schema == schema, t)
+      assert(df.count() == 0, t)
+    }
+
   test("M5 init is idempotent; empty tables read back typed") {
     val s = mkStore
     s.init(); s.init()
@@ -187,5 +201,49 @@ class TableStoreSpec extends SparkSpec {
     // a new run's init() sweeps the orphan
     store.init()
     assert(!new java.io.File(s"$root/_staging").exists())
+  }
+
+  for (byDate <- Seq(false, true)) {
+    def fresh(prefix: String) = {
+      val s = new TableStore(spark, tmpDir(prefix), partitionByDate = byDate)
+      s.init()
+      s
+    }
+
+    test(s"M5 init on a fresh root submits no Spark job (partitionByDate = $byDate)") {
+      val s = new TableStore(spark, tmpDir("store-nojob"), partitionByDate = byDate)
+      assert(jobsIn(s.init()) == 0)
+      assertEmptyTyped(s)
+    }
+
+    test(s"append, upsert and both replaceDays forms work on freshly init-ed tables (partitionByDate = $byDate)") {
+      val a = fresh("store-fresh-append")
+      a.append("Water", waterRows((u, "2021-01-01", 1.0), (u, "2021-01-02", 2.0)))
+      assert(rows(a, "Water") == Seq(s"[$u,2021-01-01,1.0]", s"[$u,2021-01-02,2.0]"))
+
+      val b = fresh("store-fresh-upsert")
+      b.upsert("RawDayData", rawRows((u, "2021-01-01", "[{}]")))
+      assert(rows(b, "RawDayData") == Seq(s"[$u,2021-01-01,[{}]]"))
+
+      val c = fresh("store-fresh-replace2")
+      c.replaceDays("Water", waterRows((u, "2021-01-01", 3.0)))
+      assert(rows(c, "Water") == Seq(s"[$u,2021-01-01,3.0]"))
+
+      // a day in the key set with no incoming rows ends up empty
+      val d = fresh("store-fresh-replace3")
+      val bothDays = rawRows((u, "2021-01-01", ""), (u, "2021-01-02", ""))
+      d.replaceDays("Water", waterRows((u, "2021-01-01", 4.0)), bothDays)
+      assert(rows(d, "Water") == Seq(s"[$u,2021-01-01,4.0]"))
+      d.replaceDays("Water", waterRows((u, "2021-01-02", 5.0)), bothDays)
+      assert(rows(d, "Water") == Seq(s"[$u,2021-01-02,5.0]"))
+    }
+
+    test(s"a backup of a just-init-ed store reads back the same empty typed tables (partitionByDate = $byDate)") {
+      val root = tmpDir("store-fresh-backup")
+      new TableStore(spark, root, partitionByDate = byDate).init()
+      val snap = tmpDir("store-fresh-snap") + "/s1"
+      graft.backup.Snapshot.copyDir(root, snap)
+      assertEmptyTyped(new TableStore(spark, snap, partitionByDate = byDate))
+    }
   }
 }
