@@ -6,9 +6,14 @@ import org.apache.spark.sql.functions._
 import graft.sources.TableStore
 
 /** The reference's nutrition-report query (sql.py:237-267): per-day Meals
-  * nutrient sums (A1) joined to Goals on (userid, date) (J2), day-of-week
-  * label (F2's SUBSTR weekday trick → `EEE`), BETWEEN date filter (F7/F8),
-  * final ascending date sort (O3).
+  * nutrient sums (A1) matched to the day's Goals row on (userid, date)
+  * (J2), day-of-week label (F2's SUBSTR weekday trick → `EEE`), BETWEEN
+  * date filter (F7/F8), final ascending date sort (O3).
+  *
+  * One pass over the user's rows, like [[ProgressReport]]: Meals ∪ Goals
+  * rows in the window → one exchange into a single partition → aggregate
+  * per (userid, date) keeping the days with a meal and a goal (the inner
+  * join) → local sort.
   *
   * The reference's leading 15-constant header row (U1) relies on SQLite
   * typelessness to union strings with numbers; [[withHeader]] reproduces it
@@ -17,7 +22,7 @@ import graft.sources.TableStore
   *
   * Note the reference groups by `date` alone while selecting `userid` —
   * legal in SQLite only because the WHERE pins one user; here we group by
-  * both (identical results, shuffle-parallel across users).
+  * both (identical results).
   */
 object NutritionReport {
 
@@ -28,19 +33,24 @@ object NutritionReport {
   def query(meals: DataFrame, goals: DataFrame, username: String,
             dateFrom: String, dateTo: String): DataFrame = {
     val nutrients = graft.model.Schemas.nutrientCols
-    val sums = nutrients.map(n => sum(col(n)).as(s"${n}_actual"))
-    val actual = meals
-      .where(col("userid") === username &&
-        col("date").between(to_date(lit(dateFrom)), to_date(lit(dateTo))))
-      .groupBy(col("userid"), col("date")) // A1 (both keys — see scaladoc)
-      .agg(sums.head, sums.tail: _*)
+    val inWindow = col("userid") === username &&
+      col("date").between(to_date(lit(dateFrom)), to_date(lit(dateTo)))
+    // a leg's missing nutrient columns read NULL; `meal` tells the legs
+    // apart, since all of a day's nutrients may be NULL
+    def leg(rows: DataFrame, meal: Boolean, suffix: String): DataFrame =
+      rows.where(inWindow).select(col("userid") +: col("date") +:
+        lit(meal).as("meal") +: nutrients.map(n => col(n).as(n + suffix)): _*)
+    val perDay = nutrients.flatMap(n => Seq( // A1 sums beside the day's goals
+      sum(col(s"${n}_actual")).as(s"${n}_actual"), max(col(s"${n}_goal")).as(s"${n}_goal")))
 
-    actual.as("a")
-      .join(goals.as("g"), Seq("userid", "date")) // J2 composite key
-      .select(Seq(
-        col("userid"), col("date"),
-        date_format(col("date"), "EEE").as("day_of_week")) ++
-        nutrients.flatMap(n => Seq(col(s"${n}_actual"), col(s"g.$n").as(s"${n}_goal"))): _*)
+    leg(meals, meal = true, "_actual")
+      .unionByName(leg(goals, meal = false, "_goal"), allowMissingColumns = true)
+      .repartition(1) // one exchange; the aggregate and the sort stay local
+      .groupBy(col("userid"), col("date"), // both keys — see scaladoc
+        date_format(col("date"), "EEE").as("day_of_week"))
+      .agg(count_if(col("meal")).as("meals"), count_if(!col("meal")).as("goals") +: perDay: _*)
+      .where(col("meals") > 0 && col("goals") > 0) // J2: inner join
+      .drop("meals", "goals")
       .orderBy(col("date").asc) // O3
   }
 

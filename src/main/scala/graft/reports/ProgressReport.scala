@@ -1,26 +1,26 @@
 package graft.reports
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.TableStore
 
-/** The reference's progress-report query (sql.py:196-235), faithfully
-  * re-planned on DataFrames:
+/** The reference's progress-report query (sql.py:196-235) as one pass over
+  * the requested user's rows:
   *
-  *   params → userstats CTE (A2 latest weight → A5 Mifflin-St Jeor RMR with
-  *   hardcoded height 182 / age 34) → Goals ⋈ userstats (J1, broadcast — one
-  *   row per user) → date ≥ start filter → correlated scalar sums rewritten
-  *   as pre-aggregate + left join (A3 cardio with COALESCE 0, A4 meals with
-  *   load-bearing NULL) → deficit arithmetic with truncating CAST (F4) →
-  *   running total over date (W2: SUM ignores NULL rows, ROUND, COALESCE,
-  *   CAST) → row_number day numbering (W1) → dd-MMM-yyyy label (F2) → final
-  *   IS NOT NULL filter (F9: days without logged meals drop out).
+  *   Goals, Cardio and Meals rows from the start date ∪ Weight rows of any
+  *   date → one exchange into a single partition → per-day aggregate (the
+  *   correlated sums: A3 cardio COALESCEd to 0, A4 meals with load-bearing
+  *   NULL) → A2 latest weight → A5 Mifflin-St Jeor RMR (hardcoded height
+  *   182 / age 34) → deficit arithmetic with truncating CAST (F4) → IS NOT
+  *   NULL filter (F9: days without logged meals drop out) → running total
+  *   (W2: ROUND, COALESCE, CAST) → row_number (W1) → dd-MMM-yyyy (F2).
   *
-  * Engine-side deviation (SURVEY §4.3): windows are partitioned by userid —
-  * the reference's are unpartitioned but its WHERE pins one user, so results
-  * are identical while the plan stays shuffle-parallel across users.
+  * Only that user's rows cross the exchange; the rest runs locally on its
+  * one partition: two Spark jobs, no broadcast, no range sampling. Windows
+  * are partitioned by userid (SURVEY §4.3): the reference's are not, but
+  * its WHERE pins one user, so results are identical.
   */
 object ProgressReport {
 
@@ -33,9 +33,9 @@ object ProgressReport {
   /** `spark.sql` twin of [[query]], kept structurally close to the
     * reference SQL (sql.py:196-235): the correlated scalar subqueries are
     * written as actual subqueries and Catalyst's
-    * RewriteCorrelatedScalarSubquery decorrelates them into the same
-    * aggregate-and-join plan the DataFrame version declares explicitly
-    * (SURVEY §4.2). Asserted equal to [[query]] in ReportsSpec.
+    * RewriteCorrelatedScalarSubquery decorrelates them into
+    * aggregate-and-join plans (SURVEY §4.2). It is the reference-shaped
+    * witness [[query]]'s single pass is asserted equal to in ReportsSpec.
     */
   def sqlQuery(measurements: DataFrame, goals: DataFrame, cardio: DataFrame,
                meals: DataFrame, username0: String, startingDate0: String)
@@ -95,64 +95,54 @@ object ProgressReport {
   def query(measurements: DataFrame, goals: DataFrame, cardio: DataFrame,
             meals: DataFrame, username: String, startingDate: String,
             endGoal: Long): DataFrame = {
+    val mine = col("userid") === username
+    val inWindow = mine && col("date") >= to_date(lit(startingDate))
+    def leg(rows: DataFrame, where: Column, value: String, as: String) =
+      rows.where(where).select(col("userid"), col("date"), col(value).as(as))
 
-    // A2: latest Weight per user (ORDER BY date DESC LIMIT 1).
-    val latestW = Window.partitionBy(col("userid")).orderBy(col("date").desc)
-    val userstats = measurements
-      .where(col("measure_name") === "Weight")
-      .withColumn("rn", row_number().over(latestW))
-      .where(col("rn") === 1)
-      // A5: RMR — constants straight from sql.py:201.
-      .select(col("userid"),
-        (lit(1.2) * (lit(10) * col("value") + lit(6.25) * 182 - lit(5) * 34 + 5))
-          .as("rmr"))
+    // each filter is pushed into its scan; a leg's missing columns read
+    // NULL. Weight has no date filter: the latest may predate the window.
+    val days = Seq(
+      leg(goals, inWindow, "calories", "target"),
+      leg(cardio, inWindow, "calories_burned", "burned"),
+      leg(meals, inWindow, "calories", "eaten"),
+      leg(measurements, mine && col("measure_name") === "Weight", "value", "weight"))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .repartition(1) // the one exchange: all later operators stay local
+      .groupBy(col("userid"), col("date"))
+      .agg(max(col("target")).as("calories_target"), // one Goals row per day (PK)
+        sum(col("burned")).as("burned"), // A3 (COALESCEd below)
+        sum(col("eaten")).as("eaten"), // A4: NULL on a day with no meals
+        max(col("weight")).as("weight"))
 
-    // A3: correlated SUM(calories_burned) → pre-aggregate, COALESCE(…, 0).
-    val cardioSum = cardio
-      .groupBy(col("userid").as("c_userid"), col("date").as("c_date"))
-      .agg(sum(col("calories_burned")).as("burned"))
+    val byDate = Window.partitionBy(col("userid")).orderBy(col("date"))
+    // A2 → A5: the latest Weight over all the user's days, then the RMR with
+    // the constants of sql.py:201. No Weight row ⇒ NULL RMR ⇒ no rows.
+    val latest = last(col("weight"), ignoreNulls = true)
+      .over(byDate.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val rmr = lit(1.2) * (lit(10) * latest + lit(6.25) * 182 - lit(5) * 34 + 5)
 
-    // A4: correlated SUM(calories) with NO default — NULL propagates.
-    val mealSum = meals
-      .groupBy(col("userid").as("m_userid"), col("date").as("m_date"))
-      .agg(sum(col("calories")).as("eaten"))
-
-    val base = goals
-      .where(col("userid") === username &&
-        col("date") >= to_date(lit(startingDate)))
-      .join(broadcast(userstats), "userid") // J1
-      .join(cardioSum,
-        col("userid") === col("c_userid") && col("date") === col("c_date"),
-        "left_outer")
-      .join(mealSum,
-        col("userid") === col("m_userid") && col("date") === col("m_date"),
-        "left_outer")
-      .select(col("userid"), col("date"), col("rmr"),
-        col("calories").as("calories_target"),
-        coalesce(col("burned"), lit(0.0)).as("burned"),
-        col("eaten"))
-
-    val deficitTarget = col("rmr") - col("calories_target") + col("burned")
-    // NULL eaten ⇒ NULL deficit_actual ⇒ row filtered at the end (F9).
-    val deficitActual =
-      deficitTarget + (col("calories_target") - col("eaten"))
-
-    val ordered = Window.partitionBy(col("userid")).orderBy(col("date"))
-    val running = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val deficitTarget = col("rmr") - col("calories_target") +
+      coalesce(col("burned"), lit(0.0))
+    val deficitActual = deficitTarget + (col("calories_target") - col("eaten"))
 
     // F9 first: in the reference's outer query the WHERE is evaluated before
     // its ROW_NUMBER, so day numbering skips the dropped days. The running
     // total is unaffected (SQL SUM ignores the NULL deficits either way).
-    base
+    // The filter also drops the days without a Goals row in the window
+    // (NULL calories_target) and a user without a Weight row (NULL rmr).
+    days
+      .withColumn("rmr", rmr)
       .where(deficitActual.isNotNull)
       .select(
-        row_number().over(ordered).as("day_number"), // W1
+        row_number().over(byDate).as("day_number"), // W1
         date_format(col("date"), "dd-MMM-yyyy").as("date"), // F2
         col("calories_target"),
         deficitTarget.cast("int").as("deficit_target"), // F4 truncation
         deficitActual.cast("int").as("deficit_actual"),
         // W2: ROUND half-up over the prefix sum; COALESCE; truncating CAST.
-        coalesce(round(sum(deficitActual).over(running), 0), lit(0.0))
+        coalesce(round(sum(deficitActual).over(
+          byDate.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 0), lit(0.0))
           .cast("int").as("deficit_accumulated"))
       .orderBy(col("day_number"))
   }

@@ -65,6 +65,41 @@ class ApiSpec extends SparkSpec {
     assert(new java.io.File(outbox).listFiles().length == 1)
   }
 
+  test("a report right after runEtl on the same Api includes the new day") {
+    val api = new Api(tmpDir("api-fresh-report"))
+    api.runEtl(spark.createDataset(Fixtures.fakeDays :+ Fixtures.fullDay))
+    def dates = api.runProgressReport(Fixtures.user, "2021-01-01")
+      .collect().map(_.getString(1)).toSeq
+    assert(dates == Seq("01-Feb-2021"))
+    val next = Fixtures.fullDay.copy(date = Fixtures.d("2021-02-02"))
+    assert(api.runEtl(spark.createDataset(Seq(next))) == 1)
+    assert(dates == Seq("01-Feb-2021", "02-Feb-2021"))
+    assert(api.runNutritionReport(Fixtures.user, "2021-01-01", "2021-12-31")
+      .collect().map(_.getDate(1).toString).toSeq == Seq("2021-02-01", "2021-02-02"))
+  }
+
+  test("a report against a deleted and re-created store root reads the new store") {
+    val root = tmpDir("api-recreated") + "/store"
+    val old = new Api(root)
+    old.runEtl(spark.createDataset(Fixtures.fakeDays :+ Fixtures.fullDay))
+    assert(old.runProgressReport(Fixtures.user, "2021-01-01").count() == 1)
+
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    rm(new java.io.File(root))
+    val api = new Api(root)
+    api.runEtl(spark.createDataset(Seq(Fixtures.fullDay.copy(
+      date = Fixtures.d("2021-03-01"), measurements = Map("Weight" -> 70.0)))))
+    // RMR 1.2·(700 + 1137.5 − 165) = 2007: the new store's day and weight
+    val rows = api.runProgressReport(Fixtures.user, "2021-01-01").collect()
+    assert(rows.map(r => (r.getString(1), r.getInt(3))).toSeq ==
+      Seq(("01-Mar-2021", 357))) // 2007 − 2000 + 350 burned
+    assert(old.runProgressReport(Fixtures.user, "2021-01-01").collect()
+      .map(_.getString(1)).toSeq == Seq("01-Mar-2021"))
+  }
+
   test("first backup on an uninitialized store and fresh backup root") {
     // Neither the store dir nor the backup root exists yet — the first-ever
     // backup run must produce an empty snapshot, no NPE, no victims.

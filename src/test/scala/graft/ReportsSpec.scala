@@ -2,10 +2,12 @@ package graft
 
 import java.sql.Date
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{expr, lit, sum}
 
 import graft.model.Schemas
 import graft.reports.{NutritionReport, ProgressReport}
+import graft.sources.TableStore
 
 /** Golden tests for the two report queries — the most complex logic in the
   * reference and completely untested there (SURVEY §5.1). Goldens are
@@ -84,6 +86,150 @@ class ReportsSpec extends SparkSpec {
     val got = ProgressReport.query(measurements, g2, cardio, meals,
       u, "2021-03-01", 150000L).collect()
     assert(got.length == 1)
+  }
+
+  // ---- the single-user pass against its reference-shaped SQL witness ----
+
+  private val v = "v@example.com"
+  private val start = "2021-03-01"
+
+  /** [[ProgressReport.query]]'s rows, asserted equal to [[ProgressReport.sqlQuery]]'s. */
+  private def progress(m: DataFrame, g: DataFrame, c: DataFrame, ml: DataFrame,
+                       user: String = u): Seq[(Int, String, Int, Int, Int, Int)] = {
+    val got = ProgressReport.query(m, g, c, ml, user, start, 150000L).collect().map(_.toSeq).toSeq
+    val sql = ProgressReport.sqlQuery(m, g, c, ml, user, start)(spark).collect().map(_.toSeq).toSeq
+    assert(got == sql)
+    got.map(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[String], r(2).asInstanceOf[Int],
+      r(3).asInstanceOf[Int], r(4).asInstanceOf[Int], r(5).asInstanceOf[Int]))
+  }
+
+  private val golden = Seq(
+    (1, "01-Mar-2021", 2000, 430, 630, 631),
+    (2, "02-Mar-2021", 2000, 130, -369, 261),
+    (3, "04-Mar-2021", 2000, 130, 30, 292))
+
+  /** The fixture tables for user [[u]] plus a second user [[v]] on the same
+    * dates with other values, so a leak between users changes some sum. */
+  private lazy val twoUsers = {
+    def asV(rows: DataFrame) = rows.withColumn("userid", lit(v))
+    val vm = df(Schemas.measurements,
+      Row(v, d("2021-02-25"), "Weight", 60.0), Row(v, d("2021-03-05"), "Waist", 70.0))
+    Seq(measurements.union(vm),
+      goals.union(asV(goals).withColumn("calories", lit(1500))),
+      cardio.union(asV(cardio).withColumn("calories_burned", lit(999.0))),
+      meals.union(asV(meals).where("date <> '2021-03-02'")))
+  }
+
+  private def storeOf(tables: Seq[DataFrame]): TableStore = {
+    val store = new TableStore(spark, tmpDir("reports-store"))
+    store.init()
+    Seq("Measurements", "Goals", "CardioExercises", "Meals").zip(tables)
+      .foreach { case (t, rows) => store.append(t, rows) }
+    store
+  }
+
+  test("single pass: two users in all four tables, each report its own rows") {
+    val store = storeOf(twoUsers)
+    val Seq(m, g, c, ml) =
+      Seq("Measurements", "Goals", "CardioExercises", "Meals").map(store.read)
+    assert(progress(m, g, c, ml, u) == golden)
+    val vRows = progress(m, g, c, ml, v)
+    // v's own tables alone give v's report: nothing of u's leaks in
+    val vOnly = twoUsers.map(_.where(s"userid = '$v'"))
+    assert(vRows == progress(vOnly(0), vOnly(1), vOnly(2), vOnly(3), v))
+    // RMR 1.2·(600 + 1137.5 − 165) = 1887; v has no meals on 03-02 or 03-03
+    assert(vRows == Seq(
+      (1, "01-Mar-2021", 1500, 1386, 1086, 1086),
+      (2, "04-Mar-2021", 1500, 387, -213, 873)))
+    assert(ProgressReport.fromStore(store, v, start, 150000L).collect()
+      .map(_.getInt(4)).toSeq == vRows.map(_._5))
+  }
+
+  test("single pass: latest Weight before the start date, and on a day with no Goals row") {
+    // the fixture's latest Weight (02-20) already predates the start
+    assert(progress(measurements, goals, cardio, meals) == golden)
+    // a later Weight on a day with no Goals row is still the latest, and
+    // it sets the RMR of every day, not only of the days after it:
+    // RMR = 1.2·(703 + 1137.5 − 165) = 2010.6
+    val later = measurements.union(df(Schemas.measurements,
+      Row(u, d("2021-03-10"), "Weight", 70.3)))
+    assert(progress(later, goals, cardio, meals) == Seq(
+      (1, "01-Mar-2021", 2000, 310, 510, 511),
+      (2, "02-Mar-2021", 2000, 10, -489, 21),
+      (3, "04-Mar-2021", 2000, 10, -89, -68)))
+  }
+
+  test("single pass: no Weight row gives an empty report") {
+    val noWeight = measurements.where("measure_name <> 'Weight'")
+    assert(progress(noWeight, goals, cardio, meals).isEmpty)
+  }
+
+  test("single pass: a Goals row with NULL calories drops its day") {
+    val g = goals.withColumn("calories",
+      expr("IF(date = DATE'2021-03-02', CAST(NULL AS INT), calories)"))
+    // 03-02 leaves the running total and the numbering
+    assert(progress(measurements, g, cardio, meals) == Seq(
+      (1, "01-Mar-2021", 2000, 430, 630, 631),
+      (2, "04-Mar-2021", 2000, 130, 30, 661)))
+  }
+
+  test("single pass: a cardio-only day and a meals-only day add no rows") {
+    val c = cardio.union(df(Schemas.cardioExercises,
+      Row(4L, u, d("2021-03-05"), "run", 30.0, 300.0)))
+    val ml = meals.union(df(Schemas.meals, meal("2021-03-06", "lunch", 700)))
+    assert(progress(measurements, goals, c, ml) == golden)
+  }
+
+  test("single pass: a report over a TableStore runs at most 2 Spark jobs") {
+    val store = storeOf(twoUsers)
+    // one job for the four scans feeding the single exchange, one for the
+    // result; the sort after it is local, so no range-sampling job
+    assert(jobsIn(ProgressReport.fromStore(store, u, start, 150000L).collect()) <= 2)
+    assert(jobsIn(NutritionReport.fromStore(store, u, start, "2021-03-31").collect()) <= 2)
+  }
+
+  test("single pass: the same rows under AQE off, 1 and 7 shuffle partitions, no broadcast") {
+    val store = storeOf(twoUsers)
+    def reports = Seq(u, v).map { user =>
+      (ProgressReport.fromStore(store, user, start, 150000L).collect().toSeq,
+        NutritionReport.fromStore(store, user, start, "2021-03-31").collect().toSeq)
+    }
+    val expected = reports
+    assert(expected.head._1.map(_.getInt(5)) == golden.map(_._6))
+    Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1").foreach { case (k, value) =>
+      val before = spark.conf.getOption(k)
+      spark.conf.set(k, value)
+      try assert(reports == expected, s"$k=$value")
+      finally before match {
+        case Some(b) => spark.conf.set(k, b)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("nutrition single pass: only days with a meal and a goal, as the join form gives") {
+    val Seq(_, g, _, m) = twoUsers
+    val ml = m.union(df(Schemas.meals, meal("2021-03-06", "lunch", 700))) // no goal
+    val n = Schemas.nutrientCols
+    for (user <- Seq(u, v)) {
+      val got = NutritionReport.query(ml, g, user, start, "2021-03-31")
+      // the reference's shape: grouped meal sums inner-joined to Goals
+      val sums = n.map(c => sum(c).as(s"${c}_actual"))
+      val joined = ml.where(s"userid = '$user'").groupBy("userid", "date")
+        .agg(sums.head, sums.tail: _*)
+        .join(g, Seq("userid", "date"))
+        .selectExpr(Seq("userid", "date", "date_format(date, 'EEE') AS day_of_week") ++
+          n.flatMap(c => Seq(s"${c}_actual", s"$c AS ${c}_goal")): _*)
+        .orderBy("date")
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        joined.schema.map(f => (f.name, f.dataType))) // *_actual long, *_goal int
+      assert(got.collect().toSeq == joined.collect().toSeq)
+    }
+    assert(NutritionReport.query(ml, g, u, start, "2021-03-31").collect()
+      .map(_.getDate(1).toString).toSeq == Seq("2021-03-01", "2021-03-02", "2021-03-04"))
   }
 
   test("q19 analog: day_number renumbers after the NULL-actual drop (no gaps)") {
