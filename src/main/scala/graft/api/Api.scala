@@ -78,19 +78,6 @@ final class Api(storeRoot: String)(implicit spark: SparkSession) {
                 maxBackups: Int = 5): Seq[String] = {
     val name = Snapshot.backupName(today)
     Snapshot.copyDir(storeRoot, s"$backupRoot/$name")
-    // File.list is null for a missing dir — guard the first-ever backup
-    // (copyDir creates backupRoot/name, but stay robust to races/failures)
-    val existing = Option(new java.io.File(backupRoot).list())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(_.startsWith("mfp_db_backup_"))
-    val victims = Snapshot.rotationVictims(existing, maxBackups)
-    victims.foreach { v =>
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(new java.io.File(s"$backupRoot/$v"))
-    }
-    victims
+    Snapshot.rotate(backupRoot, maxBackups)
   }
 }

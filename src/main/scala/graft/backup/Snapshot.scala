@@ -51,10 +51,7 @@ object Snapshot {
     // merged: parquet part files are uuid-named, so merging two store
     // versions' files into one snapshot dir would read back as the union
     // of both versions — every surviving row duplicated on restore
-    if (Files.exists(d)) scala.util.Using.resource(Files.walk(d)) { w =>
-      w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    deleteTree(d)
     if (!Files.exists(s)) { Files.createDirectories(d); return }
     scala.util.Using.resource(Files.walk(s)) { walk =>
       walk.forEach { p =>
@@ -70,6 +67,30 @@ object Snapshot {
           }
         }
       }
+    }
+  }
+
+  /** D15 applied to the snapshots under `backupRoot`: delete the
+    * [[rotationVictims]] among its `mfp_db_backup_*` entries and return
+    * them. A victim that cannot be deleted throws — it is never reported
+    * as rotated. */
+  def rotate(backupRoot: String, maxNum: Int): Seq[String] = {
+    // File.list is null for a missing dir — guard the first-ever backup
+    val existing = Option(new java.io.File(backupRoot).list()).toSeq
+      .flatten.filter(_.startsWith("mfp_db_backup_"))
+    val victims = rotationVictims(existing, maxNum)
+    victims.foreach(v => deleteTree(java.nio.file.Paths.get(backupRoot, v)))
+    victims
+  }
+
+  /** Delete `p` and everything under it, deepest first; a missing `p` is
+    * a no-op. `Files.delete` throws on any entry it cannot remove. The
+    * walk stream is closed via `Using` (it holds directory handles). */
+  private def deleteTree(p: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    if (Files.exists(p)) scala.util.Using.resource(Files.walk(p)) { w =>
+      w.sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => Files.delete(q))
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 
 import graft.model.{MaterializedDay, Schemas}
-import graft.sources.{Overlap, TableStore}
+import graft.sources.{DirSwap, Overlap, TableStore}
 
 /** The ETL flow (reference flows.py:17-124, SURVEY §3.1):
   *
@@ -67,7 +67,7 @@ object EtlPipeline {
     val changed = Observation()
     val (diff, dropStaged) = store.stage(Extractors.changedDays(serialized,
       store.read("RawDayData")).observe(changed, count(lit(1)).as("n")))
-    var raw: Option[TableStore.Staged] = None
+    var raw: Option[DirSwap.Staged] = None
     try {
       val nChanged = changed.get("n").asInstanceOf[Long]
       if (nChanged > 0) {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -15,8 +15,9 @@ import graft.model.Schemas
   *   - M5 `CREATE TABLE IF NOT EXISTS` → [[init]]: `mkdirs`, no Spark job
   *     ([[read]] passes the declared schema, so an empty dir reads typed)
   *   - M1/M2 `INSERT OR REPLACE` keyed upsert → [[upsert]] (left_anti on the
-  *     PK ∪ new, then atomic directory swap — the one genuinely custom
-  *     physical piece, SURVEY §4.3); [[stageUpsert]] splits it in two
+  *     PK ∪ new, then the atomic directory swap of [[DirSwap]] — the one
+  *     genuinely custom physical piece, SURVEY §4.3); [[stageUpsert]]
+  *     splits it in two
   *   - M3 child-table reload → [[replaceDays]] (delete-matching-(userid,date)
   *     then insert: the reference's *intent*; its literal append-on-rerun
   *     duplicates child rows — documented divergence, SURVEY §7.5 item 5)
@@ -56,7 +57,7 @@ final class TableStore(spark: SparkSession, root: String,
 
   def initTable(table: String): Unit = {
     require(Schemas.tables.contains(table), s"unknown table $table")
-    TableStore.recoverDir(fs, path(table), table)
+    DirSwap.recover(fs, path(table), table)
     fs.mkdirs(new Path(path(table)))
   }
 
@@ -67,7 +68,7 @@ final class TableStore(spark: SparkSession, root: String,
     * turning a recoverable crash into permanent loss. */
   def read(table: String): DataFrame = {
     val (schema, _) = Schemas.tables(table)
-    TableStore.recoverDir(fs, path(table), table)
+    DirSwap.recover(fs, path(table), table)
     if (fs.exists(new Path(path(table)))) spark.read.schema(schema).parquet(path(table))
     else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
@@ -125,16 +126,14 @@ final class TableStore(spark: SparkSession, root: String,
   /** [[upsert]]'s stage half: write the table's new copy now, under
     * `_staging/` (swept by [[init]], untouched by [[read]]'s recovery, left
     * out of backups); reads see the old copy until `commit()`. */
-  def stageUpsert(table: String, incoming: DataFrame): TableStore.Staged = {
+  def stageUpsert(table: String, incoming: DataFrame): DirSwap.Staged = {
     val keys = Schemas.tables(table)._2
     require(keys.nonEmpty, s"$table has no PK; use append/replaceDays")
     val deduped = incoming.dropDuplicates(keys)
     val kept = read(table).join(
       deduped.select(keys.map(col): _*), keys, "left_anti")
-    val staged = new TableStore.Staged(fs, stagingDir(), path(table), table)
-    try write(table, kept.unionByName(align(table, deduped)), "errorifexists")(staged.dir)
-    catch { case e: Throwable => staged.discard(); throw e }
-    staged
+    DirSwap.stage(fs, path(table), table, Some(stagingDir()))(
+      write(table, kept.unionByName(align(table, deduped)), "errorifexists"))
   }
 
   /** Delete-then-insert by (userid, date) — the intent-faithful child-table
@@ -160,7 +159,12 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Cascade delete (M4): remove the parent rows and every child row whose
     * (userid, date) matches — explicit version of SQLite's FK cascade,
-    * applied only when enforce=true (mirrors PRAGMA foreign_keys). */
+    * applied only when enforce=true (mirrors PRAGMA foreign_keys). The
+    * children swap first and RawDayData LAST — the ETL's commit-marker
+    * order: a failure between two swaps leaves the parent rows in place,
+    * so a retry with victims derived from the store finds them again and
+    * purges the children it missed (parent-first would leave those
+    * orphans for good). */
   def cascadeDelete(parentKeys: DataFrame, enforce: Boolean = true): Unit = {
     // STAGED, not lazy: the natural call passes keys derived from the
     // store (read("RawDayData").where(...)), and the first swapIn deletes
@@ -169,13 +173,11 @@ final class TableStore(spark: SparkSession, root: String,
     // nothing, and silently leave every orphan in place
     val (victims, cleanup) =
       stage(parentKeys.select(dayKeys.map(col): _*).distinct())
+    def purge(table: String): Unit =
+      swapIn(table, read(table).join(victims, dayKeys, "left_anti"))
     try {
-      swapIn("RawDayData", read("RawDayData").join(victims, dayKeys, "left_anti"))
-      if (enforce) {
-        Schemas.tables.keys.filter(_ != "RawDayData").foreach { child =>
-          swapIn(child, read(child).join(victims, dayKeys, "left_anti"))
-        }
-      }
+      if (enforce) Schemas.tables.keys.filter(_ != "RawDayData").foreach(purge)
+      purge("RawDayData")
     } finally cleanup()
   }
 
@@ -215,74 +217,10 @@ final class TableStore(spark: SparkSession, root: String,
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
   }
 
-  /** Materialize `df` into a fresh dir, then swap it in
-    * ([[TableStore.swapDir]]). */
+  /** Materialize `df` into a fresh dir, then swap it in ([[DirSwap]]). */
   private def swapIn(table: String, df: DataFrame): Unit =
-    TableStore.swapDir(fs, path(table), table)(write(table, df, "errorifexists"))
+    DirSwap.stage(fs, path(table), table)(write(table, df, "errorifexists"))
+      .commit()
 
   private def stagingDir() = new Path(s"$root/_staging/${java.util.UUID.randomUUID()}")
-}
-
-/** The write-temp + two-rename directory swap, shared by [[TableStore]],
-  * the index stores ([[IndexStore]]) and DocStream's index compaction. */
-private[graft] object TableStore {
-
-  /** Replace the directory `dest` with what `write` puts into a fresh
-    * `<dest>.tmp-<uuid>` — the stage half — then commit it. */
-  def swapDir(fs: FileSystem, dest: String, label: String)(
-      write: Path => Unit): Unit = {
-    val tmp = new Path(dest + ".tmp-" + java.util.UUID.randomUUID())
-    write(tmp)
-    new Staged(fs, tmp, dest, label).commit()
-  }
-
-  /** A complete next copy of the directory `dest`, staged at `dir`. */
-  final class Staged(fs: FileSystem, private[sources] val dir: Path, dest: String,
-                     label: String) {
-    /** The commit half: rename `dest` to `<dest>.old-<uuid>`, rename `dir`
-      * to `dest`, drop the old copy. Readers see the old or the new
-      * directory, never a partial one (rename is atomic on HDFS-like
-      * filesystems); a kill between the two renames is healed by
-      * [[recoverDir]]. */
-    def commit(): Unit = {
-      val destP = new Path(dest)
-      val old = new Path(dest + ".old-" + java.util.UUID.randomUUID())
-      // Hadoop rename reports failure by RETURNING FALSE, not throwing — an
-      // unchecked failed rename here would silently drop the new version
-      // and the next recoverDir or init sweep would garbage-collect the
-      // staged dir holding the only copy of it
-      if (fs.exists(destP)) require(fs.rename(destP, old),
-        s"swapIn($label): rename $destP -> $old failed")
-      require(fs.rename(dir, destP),
-        s"swapIn($label): rename $dir -> $destP failed — pre-swap state is in $old")
-      fs.delete(old, true)
-    }
-
-    def discard(): Unit = fs.delete(dir, true)
-  }
-
-  /** Crash recovery for [[swapDir]]'s two-rename window: a kill between
-    * `dest→old` and `tmp→dest` leaves `dest` ABSENT with a complete
-    * `.old-*` beside it — without recovery, a read would silently see an
-    * empty table (the next diff would treat every row as new). The
-    * `.tmp-*` (new data, possibly incomplete) is discarded: the swap never
-    * completed, so the pre-swap state is the durable truth. Leftover
-    * tmp/old dirs from crashes AFTER a completed swap are plain garbage —
-    * swept. */
-  def recoverDir(fs: FileSystem, dest: String, label: String): Unit = {
-    val glob = fs.globStatus(new Path(dest + ".{old,tmp}-*"))
-    if (glob == null || glob.isEmpty) return
-    if (!fs.exists(new Path(dest))) {
-      val olds = glob.filter(_.getPath.getName.contains(".old-"))
-      if (olds.nonEmpty) {
-        // at most one .old can exist (single writer, deleted per swap);
-        // rename failure returns false — surface it, the .old is the only
-        // durable copy
-        require(fs.rename(olds.head.getPath, new Path(dest)),
-          s"recoverSwap($label): restoring ${olds.head.getPath} failed")
-      }
-    }
-    fs.globStatus(new Path(dest + ".{old,tmp}-*"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
 }

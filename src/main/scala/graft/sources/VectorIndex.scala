@@ -66,17 +66,18 @@ private[sources] final case class IndexTable(
   *   - targeted compaction ([[compactRows]]): refold only partitions at a
   *     file-count threshold.
   *
-  * Whole tables swap in with [[TableStore.swapDir]]'s write-temp +
-  * two-rename discipline (crash-recoverable). Large tables are
-  * PHYSICALLY PARTITIONED (`<table>/<col>=<n>/` dirs) so incremental
-  * maintenance rewrites only the partitions a batch touches — the
-  * production layout: an ingest/delete over a 100 TB index must cost
-  * ∝ touched cells, not ∝ corpus. Partition maintenance writes every
-  * replacement partition in ONE job into a dot-prefixed temp dir
-  * (invisible to Spark's file listing), then swaps each partition with
-  * the same two-rename discipline; a crash mid-swap leaves `.old-*`
-  * markers that [[recoverPartitions]] restores, and every maintenance op
-  * is keyed + idempotent, so a retry after a partial swap converges.
+  * Whole tables swap in through [[DirSwap]]'s write-temp + two-rename
+  * discipline (crash-recoverable). Large tables are PHYSICALLY
+  * PARTITIONED (`<table>/<col>=<n>/` dirs) so incremental maintenance
+  * rewrites only the partitions a batch touches — the production
+  * layout: an ingest/delete over a 100 TB index must cost ∝ touched
+  * cells, not ∝ corpus. Partition maintenance writes every replacement
+  * partition in ONE job into a dot-prefixed temp dir (invisible to
+  * Spark's file listing), then swaps each partition as one slot of the
+  * same staged copy ([[DirSwap.stageParts]]); a crash mid-swap leaves
+  * `.old-*` markers that [[DirSwap.recover]] restores, and every
+  * maintenance op is keyed + idempotent, so a retry after a partial swap
+  * converges.
   * Every mutating verb runs under the store's single-writer lease. */
 private[sources] abstract class IndexStore(spark: SparkSession,
                                            root: String) {
@@ -118,7 +119,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
 
   private def swapIn(table: String, df: DataFrame, schema: StructType,
                      partitionBy: Option[String] = None): Unit =
-    TableStore.swapDir(fs, path(table), table) { tmp =>
+    DirSwap.stage(fs, path(table), table) { tmp =>
       val w = df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
         .write.mode("errorifexists")
       partitionBy.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
@@ -131,11 +132,11 @@ private[sources] abstract class IndexStore(spark: SparkSession,
           java.nio.charset.StandardCharsets.UTF_8))
         finally outS.close()
       }
-    }
+    }.commit()
 
   protected def read(table: String, schema: StructType): DataFrame = {
     recoverCommits()
-    TableStore.recoverDir(fs, path(table), table)
+    DirSwap.recover(fs, path(table), table)
     require(fs.exists(new Path(path(table))),
       s"index table $table missing under $root — build the index first")
     spark.read.schema(schema).parquet(path(table))
@@ -149,34 +150,34 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * pruning — only the named dirs' files are listed and read). */
   protected def readTable(t: IndexTable): DataFrame = {
     recoverCommits()
-    TableStore.recoverDir(fs, path(t.name), t.name)
-    recoverPartitions(t)
+    DirSwap.recover(fs, path(t.name), t.name)
+    recoverParts(t)
     require(fs.exists(new Path(path(t.name))),
       s"index table ${t.name} missing under $root — build the index first")
     spark.read.schema(t.full).parquet(path(t.name))
   }
 
-  /** Per-partition crash recovery: a kill between a partition's two
-    * renames leaves `<table>/.old-<uuid>-<partCol>=<n>` with the live dir
-    * absent — restore it; any other `.old-*`/`.tmp-*` leftovers are
-    * post-swap garbage — swept. (Dot-prefixed names are invisible to
-    * Spark's file listing, so even unswept leftovers can't pollute a
-    * read.) */
-  private def recoverPartitions(t: IndexTable): Unit = {
-    val glob = fs.globStatus(new Path(path(t.name) + "/.{old,tmp}-*"))
-    if (glob == null) return
-    glob.foreach { st =>
-      val nm = st.getPath.getName
-      val marker = nm.indexOf(s"-${t.partCol}=")
-      if (nm.startsWith(".old-") && marker > 0) {
-        val live = new Path(path(t.name) + "/" + nm.substring(marker + 1))
-        if (!fs.exists(live))
-          require(fs.rename(st.getPath, live),
-            s"recoverPartitions(${t.name}): restoring $nm failed")
-        else fs.delete(st.getPath, true)
-      } else fs.delete(st.getPath, true)
+  /** Per-partition crash recovery ([[DirSwap.recover]]): a kill between
+    * a partition's two renames leaves `<table>/.old-<uuid>-<partCol>=<n>`
+    * with the live dir absent — restored; other leftovers are swept. */
+  private def recoverParts(t: IndexTable): Unit =
+    DirSwap.recover(fs, path(t.name), t.name, Some(t.partCol))
+
+  /** Stage the full replacement rows (`content`) of exactly the `parts`
+    * partitions of `t` into the table's `.tmp-<uuid>` dir, clustered, in
+    * ONE job. The plan may read the live partitions, and so may any
+    * concurrent pre-swap read job — no live byte moves until `commit()`,
+    * and every overlapped read MUST be joined before it. Maintenance cost
+    * is ∝ touched partitions: one job over their bytes + O(touched)
+    * renames — never a whole-table rewrite. Callers have just recovered
+    * `t` (their reads go through [[readTable]]). */
+  private def stageParts(t: IndexTable, parts: Seq[Int],
+                         content: DataFrame): DirSwap.Staged =
+    DirSwap.stageParts(fs, path(t.name), t.partCol, parts, t.name) { tmp =>
+      t.clustered(content)
+        .select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
+        .write.mode("errorifexists").partitionBy(t.partCol).parquet(tmp.toString)
     }
-  }
 
   // ------------------------------------------------------------------
   // the maintenance verbs
@@ -294,7 +295,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
 
   /** One table's side of [[rewrite]]: evict `ids` from, and add `inc` to,
     * the touched partitions. Returns (removed, added) token terms. The
-    * deltas overlap the staged write (the swapStage/swapCommit split):
+    * deltas overlap the staged write ([[stageParts]], then `commit()`):
     * they read the SAME live pre-swap partitions the content plan reads
     * (read-read, safe) or the checkpointed batch, and are joined strictly
     * BEFORE any rename, so no read can see a half-swapped table. */
@@ -311,10 +312,10 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     def joined() = (removedT.fold(NoDelta)(_()), addedT.fold(NoDelta)(_()))
     if (touched.isEmpty) return joined()
     val kept = inTouched.join(ids, Seq("id"), "left_anti")
-    val tmp = Overlap.guarding(removedT.toSeq ++ addedT.toSeq: _*)(
-      swapStage(t, t.clustered(inc.fold(kept)(kept.unionByName(_)))))
+    val staged = Overlap.guarding(removedT.toSeq ++ addedT.toSeq: _*)(
+      stageParts(t, touched, inc.fold(kept)(kept.unionByName(_))))
     val out = joined()
-    swapCommit(t, touched, tmp)
+    staged.commit()
     out
   }
 
@@ -378,9 +379,8 @@ private[sources] abstract class IndexStore(spark: SparkSession,
                             tables: IndexTable*): Unit = withLease(op) {
     Overlap.jobs(tables.map { t => () => {
       val parts = fragmentedParts(t, minFiles)
-      if (parts.nonEmpty)
-        swapCommit(t, parts, swapStage(t, t.clustered(readTable(t)
-          .where(col(t.partCol).isin(parts.map(Integer.valueOf): _*)))))
+      if (parts.nonEmpty) stageParts(t, parts, readTable(t)
+        .where(col(t.partCol).isin(parts.map(Integer.valueOf): _*))).commit()
     }}: _*)
   }
 
@@ -416,7 +416,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   private def atomicAppend(tables: Seq[(IndexTable, DataFrame)],
                            added: Delta): Unit = {
     recoverCommits(sweepStages = true)
-    tables.foreach { case (t, _) => recoverPartitions(t) }
+    tables.foreach { case (t, _) => recoverParts(t) }
     val uuid = java.util.UUID.randomUUID().toString
     val stageRel = s".stage-$uuid"
     val stage = new Path(root, stageRel)
@@ -514,7 +514,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
 
   /** Roll forward any committed-but-unfinished appends (called from
-    * every read and maintenance entry point — the [[TableStore.recoverDir]]
+    * every read and maintenance entry point — the [[DirSwap.recover]]
     * discipline for the append path). `sweepStages` additionally deletes
     * UNREFERENCED stage dirs — crashed pre-commit appends that never
     * happened; only the single writer may sweep (a reader must not
@@ -555,7 +555,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     // recover FIRST even on the full-fold path: a partition sitting in a
     // crashed-swap .old-* state has no live dir and would be invisible
     // to the listing — the fold would silently skip it this round
-    recoverPartitions(t)
+    recoverParts(t)
     if (minFiles <= 1) return existingParts(t).toSeq.sorted
     val dirs = fs.globStatus(new Path(s"${path(t.name)}/${t.partCol}=*"))
     (if (dirs == null) Array[org.apache.hadoop.fs.FileStatus]() else dirs)
@@ -576,52 +576,6 @@ private[sources] abstract class IndexStore(spark: SparkSession,
       }
       .map(_.getPath.getName.substring(t.partCol.length + 1).toInt)
       .sorted.toSeq
-  }
-
-  /** Phase 1 of a partition replace: heal crashed swaps, then execute the
-    * content plan — the full replacement rows for exactly the partitions
-    * [[swapCommit]] will be given — into the table's `.tmp-<uuid>` stage
-    * dir, in ONE job. The plan may read the live partitions, and so may
-    * any concurrent pre-swap read job — no live byte moves until
-    * [[swapCommit]]. Every overlapped read MUST be joined before commit
-    * is called. Maintenance cost is ∝ touched partitions: one job over
-    * their bytes + O(touched) renames — never a whole-table rewrite. */
-  private def swapStage(t: IndexTable, content: DataFrame): Path = {
-    recoverPartitions(t)
-    val tmp = new Path(s"${path(t.name)}/.tmp-${java.util.UUID.randomUUID()}")
-    content.select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-      .write.mode("errorifexists").partitionBy(t.partCol).parquet(tmp.toString)
-    tmp
-  }
-
-  /** Phase 2: the per-partition renames (recoverPartitions heals .old-*
-    * remnants of a crash between them) and the stage-dir cleanup. A
-    * listed partition with no staged rows is removed (its rows were all
-    * evicted). */
-  private def swapCommit(t: IndexTable, parts: Seq[Int], tmp: Path): Unit = {
-    val uuid = tmp.getName.stripPrefix(".tmp-")
-    parts.foreach { b =>
-      val src = new Path(tmp, s"${t.partCol}=$b")
-      val dest = new Path(s"${path(t.name)}/${t.partCol}=$b")
-      if (fs.exists(src)) {
-        val old = new Path(s"${path(t.name)}/.old-$uuid-${t.partCol}=$b")
-        if (fs.exists(dest)) require(fs.rename(dest, old),
-          s"swapCommit(${t.name}): rename $dest -> $old failed")
-        require(fs.rename(src, dest),
-          s"swapCommit(${t.name}): rename $src -> $dest failed — " +
-            s"pre-swap in $old")
-        fs.delete(old, true)
-      } else {
-        // no src dir: every row of this partition was evicted. Delete the
-        // live dir DIRECTLY — routing it through a rename-to-.old would
-        // open a crash window where recoverPartitions RESTORES it,
-        // resurrecting forgotten (right-to-be-forgotten) rows; a crash
-        // mid-delete instead leaves a remnant that a retry of the same
-        // idempotent op deletes for good.
-        fs.delete(dest, true)
-      }
-    }
-    fs.delete(tmp, true)
   }
 
   /** True iff a complete index built under exactly `meta` is present —
@@ -840,9 +794,11 @@ private[graft] object IndexStore {
 
   /** Test-only failpoint: [[atomicAppend]]/[[replayCommit]] call
     * `maybeCrash(step)` at every publish step ("staged", "marker",
-    * "move-<i>", "token"); a spec sets this predicate to kill the append
-    * at an exact step and then proves recovery rolls the commit forward.
-    * Always false outside specs. */
+    * "move-<i>", "token"), and [[DirSwap]]'s commit between each slot's
+    * two renames ("swap:<label>", the label being the table or
+    * "DocStream"); a spec sets this predicate to kill the op at an exact
+    * step and then proves recovery converges. Always false outside
+    * specs. */
   @volatile private[graft] var crashAt: String => Boolean = _ => false
 
   private[graft] final class InjectedCrash(step: String)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Dedup
-import graft.sources.TableStore
+import graft.sources.DirSwap
 
 /** Incremental near-duplicate admission for a streaming document feed
   * (SURVEY §2.10 extension): each micro-batch's documents are simhashed and
@@ -564,38 +564,38 @@ object DocStream {
     q
   }
 
-  /** Crash recovery for [[compactIndex]]'s swap ([[TableStore.recoverDir]]):
+  /** Crash recovery for [[compactIndex]]'s swap ([[DirSwap.recover]]):
     * a kill between its two renames leaves the index ABSENT with a
     * complete `.old-*` beside it — without restoration the next admitBatch
     * would see an empty corpus and re-admit near-duplicates of everything
     * ever indexed. */
   private def recoverIndex(spark: SparkSession, indexDir: String): Unit =
-    TableStore.recoverDir(new Path(indexDir)
+    DirSwap.recover(new Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), indexDir, "DocStream")
 
   /** Fold the per-batch parquet file accumulation back into
-    * `targetPartitions` full files through TableStore's write-temp +
-    * two-rename swap ([[TableStore.swapDir]], healed by [[recoverIndex]])
+    * `targetPartitions` full files through the write-temp + two-rename
+    * swap ([[DirSwap.stage]], healed by [[recoverIndex]])
     * — run periodically on a long-lived index. */
   def compactIndex(spark: SparkSession, indexDir: String,
                    targetPartitions: Int = 8,
                    partCol: String = "bkt"): Unit = {
     val fs = new Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    TableStore.recoverDir(fs, indexDir, "DocStream")
+    DirSwap.recover(fs, indexDir, "DocStream")
     if (!fs.exists(new Path(indexDir))) return
     // a dir holding only _SUCCESS (every batch rejected everything) has
     // nothing to fold — and no footer to infer a schema from
     val live = fs.globStatus(new Path(indexDir, s"$partCol=*"))
     if (live == null || live.isEmpty) return
-    TableStore.swapDir(fs, indexDir, "DocStream") { tmp =>
+    DirSwap.stage(fs, indexDir, "DocStream") { tmp =>
       // hash-distribute on the partition column so each directory
       // partition is written by one task (one full file per dir), with
       // targetPartitions bounding writer concurrency; partitionBy
       // preserves the pruning layout
       spark.read.parquet(indexDir).repartition(targetPartitions, col(partCol))
         .write.partitionBy(partCol).parquet(tmp.toString)
-    }
+    }.commit()
   }
 
   /** Fold [[curateBatch]]'s per-batch file accumulation back into full

@@ -101,6 +101,30 @@ class DocStreamSpec extends SparkSpec {
       !new java.io.File(index + ".old-simulated").exists())
   }
 
+  test("compaction killed between its renames: admission sees the pre-swap index, a retry folds it") {
+    import graft.sources.IndexStore
+    val index = tmpDir("doc-index-swapcrash") + "/idx"
+    Seq((5L, base), (6L, other), (8L, third)).foreach { d =>
+      DocStream.admitBatch(spark, Seq(d).toDF("doc_id", "text"), index)
+    }
+    val before = spark.read.parquet(index).collect().toSet
+    IndexStore.crashAt = (_ == "swap:DocStream")
+    try intercept[IndexStore.InjectedCrash](
+      DocStream.compactIndex(spark, index, targetPartitions = 1))
+    finally IndexStore.crashAt = _ => false
+    val parent = new java.io.File(index).getParentFile
+    assert(!new java.io.File(index).exists() &&
+      parent.list().exists(_.startsWith("idx.old-")),
+      "the crash must leave the index parked between the renames")
+    // admission recovers before probing: the near-dup is still rejected
+    assert(DocStream.admitBatch(spark,
+      Seq((31L, neardup)).toDF("doc_id", "text"), index).count() == 0)
+    assert(spark.read.parquet(index).collect().toSet == before)
+    DocStream.compactIndex(spark, index, targetPartitions = 1)
+    assert(spark.read.parquet(index).collect().toSet == before)
+    assert(parent.list().toSeq == Seq("idx"), "swap remnants left behind")
+  }
+
   test("admission index is bkt-partitioned and the probe scan prunes") {
     val index = tmpDir("doc-index-part") + "/idx"
     // seed enough distinct docs that several bkt directories materialize

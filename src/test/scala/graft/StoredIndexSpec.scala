@@ -201,6 +201,45 @@ class StoredIndexSpec extends SparkSpec {
     assert(idx.readPostings().count() == n)
   }
 
+  test("per-partition upsert killed between a band's renames: reads see the pre-swap rows, a retry converges") {
+    import graft.sources.IndexStore
+    // new ids plus a re-ingested id that moves cells: existing bands are
+    // rewritten, so the first committed slot has a live dir to park
+    val batch = emb.where(col("vec_id") % 10 === 0)
+      .select((col("vec_id") + 100L).as("vec_id"),
+        transform(col("embedding"), x => -x).as("embedding"))
+      .unionByName(Seq((3L, Seq(0f, 0f, 0f, 1f, 0f, 0f, 0f, 1f)))
+        .toDF("vec_id", "embedding"))
+    def build(root: String): VectorIndex = {
+      val idx = new VectorIndex(spark, root)
+      Similarity.ivfBuildStored(emb, "vec_id", "embedding",
+        nCentroids = 5, index = idx, portable = true).collect()
+      idx
+    }
+    def rows(i: VectorIndex) = i.readPostings().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ctrl = build(tmpDir("vidx-swapcrash-ctrl"))
+    Similarity.ivfExtendStored(batch, "vec_id", "embedding", ctrl).collect()
+    val root = tmpDir("vidx-swapcrash")
+    val idx = build(root)
+    val before = rows(idx)
+    val tokBefore = idx.storedToken()
+    IndexStore.crashAt = (_ == "swap:postings")
+    try intercept[IndexStore.InjectedCrash](
+      Similarity.ivfExtendStored(batch, "vec_id", "embedding", idx))
+    finally IndexStore.crashAt = _ => false
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.globStatus(new org.apache.hadoop.fs.Path(
+      s"$root/postings/.old-*-cid_band=*")).nonEmpty,
+      "the crash must leave a band parked between its renames")
+    assert(rows(idx) == before, "a bare read must see the pre-swap rows")
+    assert(idx.storedToken() == tokBefore, "token folded for a failed swap")
+    Similarity.ivfExtendStored(batch, "vec_id", "embedding", idx).collect()
+    assert(rows(idx) == rows(ctrl))
+    assert(idx.storedToken() == ctrl.storedToken())
+  }
+
   test("stale CONTENT rebuild-gates even when ids are unchanged") {
     val idx = new VectorIndex(spark, tmpDir("vidx-content"))
     Similarity.ivfBuildStored(emb, "vec_id", "embedding",

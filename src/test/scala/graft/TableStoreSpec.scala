@@ -153,6 +153,36 @@ class TableStoreSpec extends SparkSpec {
       "store-derived victims must cascade to children")
   }
 
+  test("M4 cascade delete swaps RawDayData last: a store-derived retry purges a crashed child") {
+    import graft.sources.IndexStore
+    val root = tmpDir("store-cascade-crash")
+    val s = new TableStore(spark, root)
+    s.upsert("RawDayData", rawRows((u, "2021-01-01", "[{}]"),
+      (u, "2021-01-02", "[{}]")))
+    s.append("Water", waterRows((u, "2021-01-01", 0.0),
+      (u, "2021-01-02", 150.0)))
+    def victims = s.read("RawDayData")
+      .where(org.apache.spark.sql.functions.col("date") <
+        Date.valueOf("2021-01-02"))
+    def dates(t: String) =
+      s.read(t).collect().map(_.getDate(1).toString).toSeq.sorted
+    // kill the cascade inside Water's commit, between its two renames
+    IndexStore.crashAt = (_ == "swap:Water")
+    try intercept[IndexStore.InjectedCrash](s.cascadeDelete(victims))
+    finally IndexStore.crashAt = _ => false
+    assert(!new java.io.File(s"$root/Water").exists() &&
+      new java.io.File(root).list().exists(_.startsWith("Water.old-")),
+      "the crash must leave Water parked between the renames")
+    // a bare read restores Water's pre-swap rows, and the parent still
+    // holds the victim: it has not been committed ahead of its children
+    assert(dates("Water") == Seq("2021-01-01", "2021-01-02"))
+    assert(dates("RawDayData") == Seq("2021-01-01", "2021-01-02"))
+    // the natural retry derives its victims from the store again
+    s.cascadeDelete(victims)
+    assert(dates("RawDayData") == Seq("2021-01-02"))
+    assert(dates("Water") == Seq("2021-01-02"), "orphaned child rows left")
+  }
+
   test("interrupted swap recovers the pre-swap table on init") {
     val root = tmpDir("store-recover")
     val store = new TableStore(spark, root)
