@@ -38,12 +38,11 @@ object Snapshot {
 
   /** Filesystem snapshot of a table-store directory (S9 equivalent). A
     * missing/uninitialized source yields an empty snapshot dir — the
-    * first-ever backup must not fail. Transient store internals (the
-    * `_staging` diff area) are excluded: backing them up would inflate
-    * every rotated snapshot and resurrect stale staging data on restore.
-    * The walk stream is closed via `Using` (it holds directory handles). */
-  def copyDir(src: String, dest: String,
-              exclude: Set[String] = Set("_staging")): Unit = {
+    * first-ever backup must not fail. The store's transient `_staging`
+    * diff area is excluded: backing it up would inflate every rotated
+    * snapshot and resurrect stale staging data on restore. The walk
+    * stream is closed via `Using` (it holds directory handles). */
+  def copyDir(src: String, dest: String): Unit = {
     import java.nio.file._
     val s = Paths.get(src)
     val d = Paths.get(dest)
@@ -57,7 +56,7 @@ object Snapshot {
       walk.forEach { p =>
         val rel = s.relativize(p)
         val excluded = rel.getNameCount > 0 &&
-          exclude.contains(rel.getName(0).toString)
+          rel.getName(0).toString == "_staging"
         if (!excluded) {
           val t = d.resolve(rel)
           if (Files.isDirectory(p)) Files.createDirectories(t)

@@ -26,7 +26,7 @@ object Bucketing {
   def writeBucketed(df: DataFrame, table: String, key: String,
                     nBuckets: Int): Unit = {
     val spark = df.sparkSession
-    // WRITE-NEW-THEN-SWAP, the TableStore.swapIn discipline: dropping the
+    // WRITE-NEW-THEN-SWAP, the DirSwap discipline: dropping the
     // existing table before the write means a mid-write failure loses
     // BOTH versions. The new data lands under a temp table name first;
     // only after the write commits is the old table dropped and the temp

@@ -60,21 +60,6 @@ private[graft] object Overlap {
         throw e
     }
 
-  /** Run `body`, then join `tok` and return its value — joining EVEN WHEN
-    * `body` throws (ADVICE r17): a token fold left running past a failed
-    * swap would outlive the caller's maintenance lease. The fold is
-    * read-only (checkpointed frames + corpus parquet), so on the failure
-    * path its own error is suppressed onto `body`'s. */
-  def joining[A](tok: () => A)(body: => Unit): A = {
-    try body
-    catch {
-      case e: Throwable =>
-        try tok() catch { case t: Throwable => e.addSuppressed(t) }
-        throw e
-    }
-    tok()
-  }
-
   /** Start evaluating `a` on a daemon thread NOW; the returned thunk
     * joins and yields the value (or rethrows the thread's failure).
     * For a side computation (e.g. a token fold over a checkpointed

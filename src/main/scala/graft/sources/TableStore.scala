@@ -15,9 +15,8 @@ import graft.model.Schemas
   *   - M5 `CREATE TABLE IF NOT EXISTS` → [[init]]: `mkdirs`, no Spark job
   *     ([[read]] passes the declared schema, so an empty dir reads typed)
   *   - M1/M2 `INSERT OR REPLACE` keyed upsert → [[upsert]] (left_anti on the
-  *     PK ∪ new, then the atomic directory swap of [[DirSwap]] — the one
-  *     genuinely custom physical piece, SURVEY §4.3); [[stageUpsert]]
-  *     splits it in two
+  *     PK ∪ new, then the atomic commit of [[DirSwap]] — the one genuinely
+  *     custom physical piece, SURVEY §4.3)
   *   - M3 child-table reload → [[replaceDays]] (delete-matching-(userid,date)
   *     then insert: the reference's *intent*; its literal append-on-rerun
   *     duplicates child rows — documented divergence, SURVEY §7.5 item 5)
@@ -32,6 +31,10 @@ import graft.model.Schemas
   * reference's point lookups (`WHERE userid=? AND date=?`, S4/S5) and the
   * report's date-range scan prune to a few directories at 100 TB. Off by
   * default so tiny fixtures don't pay per-day directory overhead.
+  *
+  * Every write stages each table's next copy at `<table>.tmp-<uuid>` and
+  * commits through one [[DirSwap]] marker, so a write spanning several
+  * tables ([[cascadeDelete]], the ETL's [[stageAll]]) lands all-or-nothing.
   */
 final class TableStore(spark: SparkSession, root: String,
                        partitionByDate: Boolean = false) {
@@ -41,34 +44,37 @@ final class TableStore(spark: SparkSession, root: String,
   /** The day key every table carries: M3 replaces and M4 cascades on it. */
   private val dayKeys = Seq("userid", "date")
 
-  private def fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val rootPath = new Path(root)
+  private def fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Idempotent create of every declared table (M5) as a bare directory.
-    * Also sweeps staging leftovers — a run killed between [[stage]] or
-    * [[stageUpsert]] and its cleanup orphans a `_staging/<uuid>` copy that
-    * nothing would ever delete — and
-    * recovers interrupted swaps (single writer per store — the same
-    * assumption [[swapIn]] makes). */
+    * The store's writer entry point: it rolls pending commits forward,
+    * then sweeps what crashed writes left behind — `_staging/` frames of
+    * [[stage]] and every table's unreferenced `.tmp-*` copy, which nothing
+    * else deletes (single writer per store: no other write is in flight). */
   def init(): Unit = {
     fs.delete(new Path(s"$root/_staging"), true)
-    Schemas.tables.keys.foreach(initTable)
+    Schemas.tables.keys.foreach { t =>
+      DirSwap.recover(fs, rootPath, t, sweep = true)
+      fs.mkdirs(new Path(path(t)))
+    }
   }
 
   def initTable(table: String): Unit = {
     require(Schemas.tables.contains(table), s"unknown table $table")
-    DirSwap.recover(fs, path(table), table)
+    DirSwap.recover(fs, rootPath, table)
     fs.mkdirs(new Path(path(table)))
   }
 
   /** Read a table; empty (typed) result when uninitialized. Recovery runs
-    * first: without it, a read (or the upsert/replaceDays built on it)
-    * issued after a crashed swap would see an absent table, treat it as
-    * empty, and the next sweep would discard the stranded .old copy —
-    * turning a recoverable crash into permanent loss. */
+    * first: a pending commit is rolled forward, and without the heal a
+    * read (or the upsert/replaceDays built on it) issued after a crashed
+    * swap would see an absent table, treat it as empty, and the next sweep
+    * would discard the stranded .old copy — turning a recoverable crash
+    * into permanent loss. */
   def read(table: String): DataFrame = {
     val (schema, _) = Schemas.tables(table)
-    DirSwap.recover(fs, path(table), table)
+    DirSwap.recover(fs, rootPath, table)
     if (fs.exists(new Path(path(table)))) spark.read.schema(schema).parquet(path(table))
     else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
   }
@@ -114,26 +120,22 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** Keyed upsert (M1/M2): rows matching an incoming PK are replaced, all
-    * others survive. Write-new + atomic swap so readers never see a partial
-    * table. Duplicate PKs WITHIN `incoming` collapse to one row (which one
-    * is not defined — a DataFrame has no row order for SQLite's
+    * others survive. Write-new + atomic commit so readers never see a
+    * partial table. Duplicate PKs WITHIN `incoming` collapse to one row
+    * (which one is not defined — a DataFrame has no row order for SQLite's
     * last-INSERT-wins to refer to); without the collapse the left_anti
     * only removes OLD rows and both duplicates would land in the table,
     * breaking the one-row-per-PK invariant every read/diff relies on. */
   def upsert(table: String, incoming: DataFrame): Unit =
-    stageUpsert(table, incoming).commit()
+    commit(table -> (() => upserted(table, incoming)))
 
-  /** [[upsert]]'s stage half: write the table's new copy now, under
-    * `_staging/` (swept by [[init]], untouched by [[read]]'s recovery, left
-    * out of backups); reads see the old copy until `commit()`. */
-  def stageUpsert(table: String, incoming: DataFrame): DirSwap.Staged = {
+  /** [[upsert]]'s next copy of `table`. */
+  private[graft] def upserted(table: String, incoming: DataFrame): DataFrame = {
     val keys = Schemas.tables(table)._2
     require(keys.nonEmpty, s"$table has no PK; use append/replaceDays")
     val deduped = incoming.dropDuplicates(keys)
-    val kept = read(table).join(
-      deduped.select(keys.map(col): _*), keys, "left_anti")
-    DirSwap.stage(fs, path(table), table, Some(stagingDir()))(
-      write(table, kept.unionByName(align(table, deduped)), "errorifexists"))
+    read(table).join(deduped.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(align(table, deduped))
   }
 
   /** Delete-then-insert by (userid, date) — the intent-faithful child-table
@@ -151,34 +153,27 @@ final class TableStore(spark: SparkSession, root: String,
     * (no meals any more, an emptied note) — which the rows-derived form
     * cannot express. Duplicate keys in `days` are harmless (anti-join). */
   def replaceDays(table: String, incoming: DataFrame,
-                  days: DataFrame): Unit = {
-    val kept = read(table).join(days.select(dayKeys.map(col): _*),
-      dayKeys, "left_anti")
-    swapIn(table, kept.unionByName(align(table, incoming)))
-  }
+                  days: DataFrame): Unit =
+    commit(table -> (() => replacedDays(table, incoming, days)))
+
+  /** [[replaceDays]]'s next copy of `table`. */
+  private[graft] def replacedDays(table: String, incoming: DataFrame,
+                                  days: DataFrame): DataFrame =
+    read(table).join(days.select(dayKeys.map(col): _*), dayKeys, "left_anti")
+      .unionByName(align(table, incoming))
 
   /** Cascade delete (M4): remove the parent rows and every child row whose
     * (userid, date) matches — explicit version of SQLite's FK cascade,
-    * applied only when enforce=true (mirrors PRAGMA foreign_keys). The
-    * children swap first and RawDayData LAST — the ETL's commit-marker
-    * order: a failure between two swaps leaves the parent rows in place,
-    * so a retry with victims derived from the store finds them again and
-    * purges the children it missed (parent-first would leave those
-    * orphans for good). */
+    * applied only when enforce=true (mirrors PRAGMA foreign_keys). Every
+    * purge is written before any table is renamed, and all of them commit
+    * under one marker: a crash leaves the parent and all its children as
+    * they were, or all purged. The victims may be derived from the store
+    * (`read("RawDayData").where(...)`): no directory they read moves
+    * until every purge has read them. */
   def cascadeDelete(parentKeys: DataFrame, enforce: Boolean = true): Unit = {
-    // STAGED, not lazy: the natural call passes keys derived from the
-    // store (read("RawDayData").where(...)), and the first swapIn deletes
-    // the directory that frame reads — each child join would then
-    // re-evaluate the victims against the post-delete parent, find
-    // nothing, and silently leave every orphan in place
-    val (victims, cleanup) =
-      stage(parentKeys.select(dayKeys.map(col): _*).distinct())
-    def purge(table: String): Unit =
-      swapIn(table, read(table).join(victims, dayKeys, "left_anti"))
-    try {
-      if (enforce) Schemas.tables.keys.filter(_ != "RawDayData").foreach(purge)
-      purge("RawDayData")
-    } finally cleanup()
+    val victims = parentKeys.select(dayKeys.map(col): _*).distinct()
+    commit((if (enforce) Schemas.tables.keys.toSeq else Seq("RawDayData"))
+      .map(t => t -> (() => read(t).join(victims, dayKeys, "left_anti"))): _*)
   }
 
   /** Durably materialize `df` into a staging parquet dir under the store
@@ -205,10 +200,10 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Small-file compaction: rewrite the table into `targetPartitions`
     * output files (incremental upserts accumulate per-batch files; compacted
-    * scans restore full parquet row-group efficiency). Same atomic-swap
-    * path as upsert, so readers never see a partial table. */
+    * scans restore full parquet row-group efficiency). Same atomic commit
+    * as upsert, so readers never see a partial table. */
   def compact(table: String, targetPartitions: Int = 1): Unit =
-    swapIn(table, read(table).repartition(targetPartitions))
+    commit(table -> (() => read(table).repartition(targetPartitions)))
 
   /** Project/cast an incoming frame onto the declared schema (column order
     * and types pinned by the DDL port). */
@@ -217,10 +212,19 @@ final class TableStore(spark: SparkSession, root: String,
     df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
   }
 
-  /** Materialize `df` into a fresh dir, then swap it in ([[DirSwap]]). */
-  private def swapIn(table: String, df: DataFrame): Unit =
-    DirSwap.stage(fs, path(table), table)(write(table, df, "errorifexists"))
-      .commit()
+  /** Write every (table, next copy) pair's new copy at `<table>.tmp-<uuid>`,
+    * concurrently ([[DirSwap.stageAll]]: one table's planning and write
+    * overlap the others' tasks); reads see the old copies until the
+    * returned copy's `commit()` swaps them all in under one marker. A
+    * failed write drops every copy. Each `next` plans on its own thread. */
+  private[graft] def stageAll(next: (String, () => DataFrame)*): DirSwap.Staged =
+    DirSwap.stageAll(next.map { case (table, df) => () =>
+      Some(DirSwap.stage(fs, rootPath, table, table)(
+        write(table, df(), "errorifexists")))
+    }).get
+
+  private def commit(next: (String, () => DataFrame)*): Unit =
+    stageAll(next: _*).commit()
 
   private def stagingDir() = new Path(s"$root/_staging/${java.util.UUID.randomUUID()}")
 }

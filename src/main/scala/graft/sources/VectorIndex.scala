@@ -53,31 +53,28 @@ private[sources] final case class IndexTable(
   * [[PqIndex]], [[TextIndex]]) runs ONE lifecycle written here once,
   * parameterized only by its [[IndexTable]] descriptions:
   *
-  *   - build publish ([[publishBuild]]): clear `_meta`/`_token`, swap
-  *     every table in (overlapped), fold the fingerprint on a driver
-  *     thread alongside, then publish token and meta — LAST, so a
-  *     freshness probe can only see them once every byte they vouch for
-  *     is durable;
+  *   - build publish ([[publishBuild]]): clear `_meta`/`_token`, stage
+  *     every table (overlapped), fold the fingerprint on a driver thread
+  *     alongside, then commit the tables, token and meta together;
   *   - keyed upsert ([[upsertRows]]) and delete ([[deleteRows]]) by `id`:
   *     rewrite only the partitions holding the batch's rows or prior rows
-  *     of its ids, then fold the token (added terms in, evicted out);
+  *     of its ids, committed with the folded token (added terms in,
+  *     evicted out);
   *   - atomic append ([[appendRows]]): batch files land inside the live
-  *     partitions under one commit marker that also carries the token;
+  *     partitions, moved by the commit that also carries the token;
   *   - targeted compaction ([[compactRows]]): refold only partitions at a
   *     file-count threshold.
   *
-  * Whole tables swap in through [[DirSwap]]'s write-temp + two-rename
-  * discipline (crash-recoverable). Large tables are PHYSICALLY
-  * PARTITIONED (`<table>/<col>=<n>/` dirs) so incremental maintenance
-  * rewrites only the partitions a batch touches — the production
-  * layout: an ingest/delete over a 100 TB index must cost ∝ touched
-  * cells, not ∝ corpus. Partition maintenance writes every replacement
-  * partition in ONE job into a dot-prefixed temp dir (invisible to
-  * Spark's file listing), then swaps each partition as one slot of the
-  * same staged copy ([[DirSwap.stageParts]]); a crash mid-swap leaves
-  * `.old-*` markers that [[DirSwap.recover]] restores, and every
-  * maintenance op is keyed + idempotent, so a retry after a partial swap
-  * converges.
+  * Every op commits through ONE [[DirSwap]] marker: whatever tables,
+  * partitions, files and `_token`/`_meta` it changes land together or not
+  * at all, and a crash after the marker rolls forward on the next read.
+  * Large tables are PHYSICALLY PARTITIONED (`<table>/<col>=<n>/` dirs) so
+  * incremental maintenance rewrites only the partitions a batch touches —
+  * the production layout: an ingest/delete over a 100 TB index must cost
+  * ∝ touched cells, not ∝ corpus. Partition maintenance writes every
+  * replacement partition in ONE job into a dot-prefixed temp dir
+  * (invisible to Spark's file listing), each partition one slot of the
+  * staged copy ([[DirSwap.stageParts]]).
   * Every mutating verb runs under the store's single-writer lease. */
 private[sources] abstract class IndexStore(spark: SparkSession,
                                            root: String) {
@@ -88,14 +85,14 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     (a._1 + b._1, a._2 + b._2, a._3 + b._3)
 
   private def path(table: String) = s"$root/$table"
-  private def fs = new Path(root)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val rootPath = new Path(root)
+  private def fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Partition count NEW layouts of this store are written with. */
   protected def configuredBands: Int
 
   /** The band/bucket count an EXISTING partitioned table was built with,
-    * read from its `_layout` marker ([[swapIn]] writes the marker into
+    * read from its `_layout` marker ([[stageTable]] writes the marker into
     * the temp dir, so it rides the same atomic rename as the data).
     * Maintenance ops derive their partition arithmetic from THIS value,
     * never the compile-time constant: raising the constant for a bigger
@@ -117,9 +114,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
   }
 
-  private def swapIn(table: String, df: DataFrame, schema: StructType,
-                     partitionBy: Option[String] = None): Unit =
-    DirSwap.stage(fs, path(table), table) { tmp =>
+  /** Stage a whole-table replacement of `table`, sweeping its crashed
+    * writes' stages first (a leased op is a writer entry point). */
+  private def stageTable(table: String, df: DataFrame, schema: StructType,
+                         partitionBy: Option[String] = None): DirSwap.Staged = {
+    DirSwap.recover(fs, rootPath, table, sweep = true)
+    DirSwap.stage(fs, rootPath, table, table) { tmp =>
       val w = df.select(schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
         .write.mode("errorifexists")
       partitionBy.fold(w)(w.partitionBy(_)).parquet(tmp.toString)
@@ -132,11 +132,11 @@ private[sources] abstract class IndexStore(spark: SparkSession,
           java.nio.charset.StandardCharsets.UTF_8))
         finally outS.close()
       }
-    }.commit()
+    }
+  }
 
   protected def read(table: String, schema: StructType): DataFrame = {
-    recoverCommits()
-    DirSwap.recover(fs, path(table), table)
+    DirSwap.recover(fs, rootPath, table)
     require(fs.exists(new Path(path(table))),
       s"index table $table missing under $root — build the index first")
     spark.read.schema(schema).parquet(path(table))
@@ -149,19 +149,17 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * from the directory names (callers filtering on it get partition
     * pruning — only the named dirs' files are listed and read). */
   protected def readTable(t: IndexTable): DataFrame = {
-    recoverCommits()
-    DirSwap.recover(fs, path(t.name), t.name)
-    recoverParts(t)
+    DirSwap.recover(fs, rootPath, t.name, Some(t.partCol))
     require(fs.exists(new Path(path(t.name))),
       s"index table ${t.name} missing under $root — build the index first")
     spark.read.schema(t.full).parquet(path(t.name))
   }
 
-  /** Per-partition crash recovery ([[DirSwap.recover]]): a kill between
-    * a partition's two renames leaves `<table>/.old-<uuid>-<partCol>=<n>`
-    * with the live dir absent — restored; other leftovers are swept. */
-  private def recoverParts(t: IndexTable): Unit =
-    DirSwap.recover(fs, path(t.name), t.name, Some(t.partCol))
+  /** A leased op's recovery of `t` before it writes: pending commits roll
+    * forward, crashed swaps heal, and the stages crashed writes left in
+    * and beside `t` are swept ([[DirSwap.recover]]). */
+  private def recoverForWrite(t: IndexTable): Unit =
+    DirSwap.recover(fs, rootPath, t.name, Some(t.partCol), sweep = true)
 
   /** Stage the full replacement rows (`content`) of exactly the `parts`
     * partitions of `t` into the table's `.tmp-<uuid>` dir, clustered, in
@@ -170,48 +168,51 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * and every overlapped read MUST be joined before it. Maintenance cost
     * is ∝ touched partitions: one job over their bytes + O(touched)
     * renames — never a whole-table rewrite. Callers have just recovered
-    * `t` (their reads go through [[readTable]]). */
+    * `t` ([[recoverForWrite]]). */
   private def stageParts(t: IndexTable, parts: Seq[Int],
                          content: DataFrame): DirSwap.Staged =
-    DirSwap.stageParts(fs, path(t.name), t.partCol, parts, t.name) { tmp =>
-      t.clustered(content)
-        .select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-        .write.mode("errorifexists").partitionBy(t.partCol).parquet(tmp.toString)
-    }
+    DirSwap.stageParts(fs, rootPath, t.name, t.partCol, parts, t.name)(
+      writeParts(t, content))
+
+  /** Write `df` clustered and `partCol`-partitioned into the stage `tmp`. */
+  private def writeParts(t: IndexTable, df: DataFrame)(tmp: Path): Unit =
+    t.clustered(df)
+      .select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("errorifexists").partitionBy(t.partCol).parquet(tmp.toString)
 
   // ------------------------------------------------------------------
   // the maintenance verbs
 
-  /** Persist a full build: every table swaps in, the fingerprint lands
-    * last. `partitioned` tables are banded under the CONFIGURED count and
-    * clustered ([[IndexTable.clustered]]); `flat` (name, schema, rows)
-    * tables are broadcast-sized and written whole. Overlapped independent
-    * jobs (guide §2.6): the swaps write different directories, the build
-    * paths hand in frames that read only checkpointed corpus/batch rows,
-    * never these tables, and `meta` (by-name: the builds pass the token
-    * fold over their already-checkpointed rows) reads no index table —
-    * the small swaps and the fingerprint aggregate back-fill the
-    * corpus-sized write's tail instead of serializing after it. Crash
-    * safety: `_meta`/`_token` were cleared first and land only after
-    * EVERY swap finished, so any partial combination reads as stale and
-    * rebuild-gates. */
+  /** Persist a full build: every table is staged, then all of them, the
+    * token and the fingerprint commit under one marker. `partitioned`
+    * tables are banded under the CONFIGURED count and clustered
+    * ([[IndexTable.clustered]]); `flat` (name, schema, rows) tables are
+    * broadcast-sized and written whole. Overlapped independent jobs (guide
+    * §2.6): the stages write different directories, the build paths hand
+    * in frames that read only checkpointed corpus/batch rows, never these
+    * tables, and `meta` (by-name: the builds pass the token fold over
+    * their already-checkpointed rows) reads no index table — the small
+    * writes and the fingerprint aggregate back-fill the corpus-sized
+    * write's tail instead of serializing after it. Crash safety:
+    * `_meta`/`_token` were cleared first, so a crash before the marker
+    * reads as stale and rebuild-gates. */
   protected def publishBuild(meta: => String,
                              partitioned: Seq[(IndexTable, DataFrame)],
                              flat: Seq[(String, StructType, DataFrame)] = Nil)
       : Unit = withLease("writeIndex") {
     clearMeta()
     val tok = Overlap.future(meta)
-    // joining: the fold must not outlive the lease if a swap fails
-    val m = Overlap.joining(tok)(Overlap.jobs(
+    // guarding: the fold must not outlive the lease if a write fails
+    val staged = Overlap.guarding(tok)(DirSwap.stageAll(
       partitioned.map { case (t, df) => () =>
-        swapIn(t.name,
+        Some(stageTable(t.name,
           t.clustered(df.withColumn(t.partCol, t.band(configuredBands))),
-          t.full, partitionBy = Some(t.partCol))
+          t.full, partitionBy = Some(t.partCol)))
       } ++ flat.map { case (name, schema, df) => () =>
-        swapIn(name, df, schema)
-      }: _*))
-    publishToken(m)
-    publishMeta(m)
+        Some(stageTable(name, df, schema))
+      }))
+    val m = tok()
+    staged.get.commit("_token" -> m, "_meta" -> m)
   }
 
   /** A batch projected onto `t`'s columns and banded under the table's
@@ -242,8 +243,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * set drives the touched-partition arithmetic, and a set narrower than
     * the batch would leave batch rows in partitions outside the touched
     * set — silently dropped by the swap while their token terms still
-    * fold in, putting the token AHEAD of the data (the one direction the
-    * [[foldToken]] contract forbids). `evictIds` exists for ids that
+    * fold in, putting the token AHEAD of the data. `evictIds` exists for ids that
     * leave the covered corpus (a doc re-posted with no text yields no
     * ledger row, but its old rows must still go). */
   protected def upsertRows(op: String, batches: Seq[(IndexTable, DataFrame)],
@@ -275,32 +275,34 @@ private[sources] abstract class IndexStore(spark: SparkSession,
 
   /** The keyed rewrite behind upsert and delete. Overlapped independent
     * jobs (guide §2.6): each table's side (touched partitions, token
-    * deltas, swap) reads and replaces only its own table — every batch
-    * frame and `ids` are checkpointed — so no side's plan can see
-    * another's swap. The token fold runs after EVERY side joined
-    * (`Overlap.jobs` joins all threads, even on failure): a crash
-    * mid-swap leaves the token behind the data, the conservative
-    * direction — a token-gated search sees a mismatch and self-heals
-    * with a rebuild, never serving a version the index does not cover —
-    * and a full retry re-runs against the swapped state, where its added
-    * and removed terms cancel. */
+    * deltas, staged write) reads and stages only its own table — every
+    * batch frame and `ids` are checkpointed — and nothing is renamed
+    * before every side has joined. Then every side's partitions and the
+    * folded token commit under one marker, so the token never falls
+    * behind or runs ahead of the data: a crash before the marker leaves
+    * both as they were, one after it rolls both forward. */
   private def rewrite(sides: Seq[(IndexTable, Option[DataFrame])],
                       ids: DataFrame): Unit = {
     val deltas = Array.fill(sides.size)((NoDelta, NoDelta))
-    Overlap.jobs(sides.zipWithIndex.map { case ((t, inc), i) =>
-      () => deltas(i) = rewriteTable(t, inc, ids)
-    }: _*)
-    foldToken(deltas.map(_._2).reduce(plus), deltas.map(_._1).reduce(plus))
+    val staged = DirSwap.stageAll(sides.zipWithIndex.map { case ((t, inc), i) =>
+      () => { val (st, d) = rewriteTable(t, inc, ids); deltas(i) = d; st }
+    })
+    val removed = deltas.map(_._1).reduce(plus)
+    val added = deltas.map(_._2).reduce(plus)
+    staged.foreach(_.commit(storedToken().map(t =>
+      "_token" -> foldedOf(t, added, removed)).toSeq: _*))
   }
 
-  /** One table's side of [[rewrite]]: evict `ids` from, and add `inc` to,
-    * the touched partitions. Returns (removed, added) token terms. The
-    * deltas overlap the staged write ([[stageParts]], then `commit()`):
-    * they read the SAME live pre-swap partitions the content plan reads
-    * (read-read, safe) or the checkpointed batch, and are joined strictly
-    * BEFORE any rename, so no read can see a half-swapped table. */
+  /** One table's side of [[rewrite]]: stage the touched partitions with
+    * `ids` evicted and `inc` added. Returns the staged copy (None when
+    * nothing is touched) and the (removed, added) token terms. The deltas
+    * overlap the staged write ([[stageParts]]): they read the SAME live
+    * partitions the content plan reads (read-read, safe) or the
+    * checkpointed batch, and are joined before the copy is returned. */
   private def rewriteTable(t: IndexTable, inc: Option[DataFrame],
-                           ids: DataFrame): (Delta, Delta) = {
+                           ids: DataFrame)
+      : (Option[DirSwap.Staged], (Delta, Delta)) = {
+    recoverForWrite(t)
     val live = readTable(t)
     val touched = touchedParts(t, live, inc, ids)
     val inTouched =
@@ -310,13 +312,13 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     val addedT = for (r <- t.tokenRows; i <- inc)
       yield Overlap.future(deltaOf(i.where(r)))
     def joined() = (removedT.fold(NoDelta)(_()), addedT.fold(NoDelta)(_()))
-    if (touched.isEmpty) return joined()
+    if (touched.isEmpty) return (None, joined())
     val kept = inTouched.join(ids, Seq("id"), "left_anti")
     val staged = Overlap.guarding(removedT.toSeq ++ addedT.toSeq: _*)(
       stageParts(t, touched, inc.fold(kept)(kept.unionByName(_))))
-    val out = joined()
-    staged.commit()
-    out
+    val out =
+      try joined() catch { case e: Throwable => staged.discard(); throw e }
+    (Some(staged), out)
   }
 
   /** The partitions a keyed rewrite must replace: for an id-banded table,
@@ -347,29 +349,42 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * append: the batches' files land INSIDE their live partitions
     * without reading or rewriting ANY existing byte (the keyed upsert's
     * kept-side rewrite exists to EVICT re-ingested ids; with nothing to
-    * evict it is pure waste). Every table's files and the token publish
-    * under ONE commit marker, so the append either fully happened (token
-    * folded) or not at all; the caller's retry discipline is the O(1)
-    * token check (`expectToken` on the operator entry points), with no
-    * id-presence scan. The caller owns the new-ids guarantee (its corpus
-    * versioning already knows); a changed row under an existing id must
-    * go through [[upsertRows]]. Appends accumulate small files per
-    * partition; [[compactRows]] folds them back. */
+    * evict it is pure waste). Every table's files are staged
+    * ([[DirSwap.stageFiles]], tables overlapped: each writes only its own
+    * stage from checkpointed batch rows), then their moves and the
+    * post-append token commit under ONE marker, so the append either
+    * fully happened (token folded) or not at all — a crash between any
+    * two moves, or before the token publish, rolls forward on the next
+    * read with zero self-healing rebuilds. The token is computed BEFORE
+    * the marker and recorded in it verbatim, so a replay republishes and
+    * never re-folds (a re-fold would double-count the batch). The
+    * caller's retry discipline is the O(1) token check (`expectToken` on
+    * the operator entry points), with no id-presence scan. The caller
+    * owns the new-ids guarantee (its corpus versioning already knows); a
+    * changed row under an existing id must go through [[upsertRows]].
+    * Appends accumulate small files per partition; [[compactRows]] folds
+    * them back. */
   protected def appendRows(op: String,
                            batches: Seq[(IndexTable, DataFrame)]): Unit =
     withLease(op) {
       val incs = batches.map { case (t, df) => t -> banded(t, df) }
-      atomicAppend(incs, incs.collect {
+      val added = incs.collect {
         case (t, inc) if t.tokenRows.isDefined =>
           deltaOf(inc.where(t.tokenRows.get))
-      }.reduce(plus))
+      }.reduce(plus)
+      DirSwap.stageAll(incs.map { case (t, df) => () =>
+        recoverForWrite(t)
+        Some(DirSwap.stageFiles(fs, rootPath, t.name, t.partCol)(
+          writeParts(t, df)))
+      }).get.commit(storedToken().map(t =>
+        "_token" -> foldedOf(t, added, NoDelta)).toSeq: _*)
     }
 
-  /** Fold append-accumulated files back into the clustered layout — one
-    * staged swap per table over the selected partitions (tables
-    * overlapped: each fold reads and swaps only its own table). The
-    * default (`minFiles = 1`) folds every live partition — the
-    * rebuild-cadence whole-table form; `minFiles >= 2` folds only
+  /** Fold append-accumulated files back into the clustered layout — the
+    * selected partitions of every table staged (tables overlapped: each
+    * fold reads and stages only its own table), then committed under one
+    * marker. The default (`minFiles = 1`) folds every live partition —
+    * the rebuild-cadence whole-table form; `minFiles >= 2` folds only
     * partitions whose file count reached the threshold
     * ([[fragmentedParts]], file metadata only), so steady-state
     * compaction cost is ∝ the partitions appends actually fragmented.
@@ -377,163 +392,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     * files are not rewritten. */
   protected def compactRows(op: String, minFiles: Int,
                             tables: IndexTable*): Unit = withLease(op) {
-    Overlap.jobs(tables.map { t => () => {
+    DirSwap.stageAll(tables.map { t => () =>
       val parts = fragmentedParts(t, minFiles)
-      if (parts.nonEmpty) stageParts(t, parts, readTable(t)
-        .where(col(t.partCol).isin(parts.map(Integer.valueOf): _*))).commit()
-    }}: _*)
-  }
-
-  // ------------------------------------------------------------------
-  // atomic multi-table append: staged files + single commit marker
-  //
-  // The LSM/segment discipline (batch files land INSIDE live partition
-  // dirs, no existing byte read or rewritten) made ATOMIC: the batch is
-  // written under a dot-stage dir (invisible to Spark's listing), then a
-  // single `_commit-<uuid>` marker — carrying every file move AND the
-  // post-append token verbatim — publishes with one atomic rename.
-  // Before the marker lands, nothing happened (the stage is unreferenced
-  // garbage, swept by the next writer); once it lands, the append is
-  // guaranteed to complete — [[recoverCommits]] rolls the marker forward
-  // from every read and maintenance entry point, so a crash between any
-  // two file moves, or between the moves and the token publish, heals
-  // into the COMMITTED state with zero self-healing rebuilds (the
-  // pre-round-17 design folded the token after non-atomic moves, leaving
-  // a crash window where the token fell permanently behind and the next
-  // token-gated search paid a full rebuild). The caller-side retry
-  // contract is O(1): pass the pre-batch corpus token as `expectToken` —
-  // if the crashed attempt actually committed, the stored token moved on
-  // and the retry is a no-op; no per-append id-presence scan over the
-  // index is needed (appends are for genuinely-new ids; a re-ingest
-  // goes through the keyed upsert).
-
-  private def markerName(uuid: String) = s"_commit-$uuid"
-
-  /** Append each table's banded batch and fold `added` into the
-    * covered-corpus token, atomically: one commit marker covers every
-    * table's file moves and the token, so a crash can never land one
-    * table's rows without the other's or the rows without the token. */
-  private def atomicAppend(tables: Seq[(IndexTable, DataFrame)],
-                           added: Delta): Unit = {
-    recoverCommits(sweepStages = true)
-    tables.foreach { case (t, _) => recoverParts(t) }
-    val uuid = java.util.UUID.randomUUID().toString
-    val stageRel = s".stage-$uuid"
-    val stage = new Path(root, stageRel)
-    // staged table writes overlapped on driver threads (guide §2.6):
-    // each table stages under its own subdir and every input frame is
-    // checkpointed batch rows, so the writes share nothing; `moves`
-    // keeps the tables' declared order (the marker's move list is
-    // ordered, and replay depends only on per-move idempotence)
-    val staged = tables.map { case (t, df) =>
-      Overlap.future {
-        val tdir = new Path(stage, t.name)
-        t.clustered(df)
-          .select(t.full.fields.map(f => col(f.name).cast(f.dataType)): _*)
-          .write.mode("errorifexists").partitionBy(t.partCol)
-          .parquet(tdir.toString)
-        val parts = fs.globStatus(new Path(tdir, s"${t.partCol}=*"))
-        (if (parts == null) Array[org.apache.hadoop.fs.FileStatus]()
-         else parts).toSeq.flatMap { p =>
-          fs.listStatus(p.getPath).toSeq
-            .filterNot { f =>
-              val n = f.getPath.getName
-              n.startsWith("_") || n.startsWith(".")
-            }
-            .map { f =>
-              (s"$stageRel/${t.name}/${p.getPath.getName}/${f.getPath.getName}",
-                s"${t.name}/${p.getPath.getName}/${f.getPath.getName}")
-            }
-        }
-      }
-    }
-    val joined = staged.map(f =>
-      try Right(f()) catch { case e: Throwable => Left(e) })
-    joined.collect { case Left(e) => e } match {
-      case Seq() =>
-      case errs =>
-        errs.tail.foreach(errs.head.addSuppressed)
-        throw errs.head
-    }
-    val moves = joined.collect { case Right(ms) => ms }.flatten
-    IndexStore.maybeCrash("staged")
-    // the post-append token is computed BEFORE the marker and recorded
-    // in it VERBATIM, so recovery republishes — never re-folds (a redo
-    // that re-folded would double-count the batch)
-    val target = storedToken().map(foldedOf(_, added, NoDelta))
-    writeAtomic(markerName(uuid),
-      ("graft-commit-v1" +:
-        s"stage=$stageRel" +:
-        s"token=${target.getOrElse("-")}" +:
-        moves.map { case (s, d) => s"$s\t$d" }).mkString("\n"))
-    IndexStore.maybeCrash("marker")
-    replayCommit(new Path(path(markerName(uuid))))
-  }
-
-  /** Roll a commit marker forward: redo its file moves (each idempotent
-    * — a move whose src is gone and dest present already happened),
-    * publish the recorded token, then drop the marker and its stage dir.
-    * Serialized per store root within the process; cross-process
-    * replayers racing on the same marker are tolerated by re-checking
-    * the destination after a failed rename. */
-  private def replayCommit(marker: Path): Unit =
-    IndexStore.lockFor(root).synchronized {
-      if (!fs.exists(marker)) return // a racing replayer finished it
-      val in = fs.open(marker)
-      val text = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val lines = text.split("\n").toSeq
-      require(lines.headOption.contains("graft-commit-v1"),
-        s"unreadable commit marker $marker")
-      val stageRel = lines.collectFirst {
-        case l if l.startsWith("stage=") => l.stripPrefix("stage=") }.get
-      val token = lines.collectFirst {
-        case l if l.startsWith("token=") => l.stripPrefix("token=") }.get
-      val moves = lines.drop(3).filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t')
-        (l.substring(0, i), l.substring(i + 1))
-      }
-      moves.zipWithIndex.foreach { case ((src, dest), i) =>
-        val s = new Path(root, src)
-        val d = new Path(root, dest)
-        if (fs.exists(s)) {
-          if (!fs.exists(d.getParent)) fs.mkdirs(d.getParent)
-          if (!fs.rename(s, d))
-            // a cross-process replayer can win the rename between our
-            // exists check and here; the move is done iff dest holds it
-            require(fs.exists(d) && !fs.exists(s),
-              s"replayCommit: moving $s -> $d failed")
-        } else require(fs.exists(d),
-          s"replayCommit: $src gone and $dest absent — staged file lost")
-        IndexStore.maybeCrash(s"move-$i")
-      }
-      if (token != "-") publishToken(token)
-      IndexStore.maybeCrash("token")
-      fs.delete(marker, false)
-      fs.delete(new Path(root, stageRel), true)
-    }
-
-  /** Roll forward any committed-but-unfinished appends (called from
-    * every read and maintenance entry point — the [[DirSwap.recover]]
-    * discipline for the append path). `sweepStages` additionally deletes
-    * UNREFERENCED stage dirs — crashed pre-commit appends that never
-    * happened; only the single writer may sweep (a reader must not
-    * delete a stage an in-flight append is still writing). */
-  private def recoverCommits(sweepStages: Boolean = false): Unit = {
-    val glob = fs.globStatus(new Path(root, "_commit-*"))
-    val all = if (glob == null) Array[org.apache.hadoop.fs.FileStatus]()
-      else glob
-    all.filterNot(_.getPath.getName.contains(".tmp-"))
-      .foreach(st => replayCommit(st.getPath))
-    if (sweepStages) {
-      // writeAtomic leftovers of a crashed marker publish, then stage
-      // dirs no surviving marker references — pre-commit garbage
-      all.filter(_.getPath.getName.contains(".tmp-"))
-        .foreach(st => fs.delete(st.getPath, false))
-      val stages = fs.globStatus(new Path(root, ".stage-*"))
-      (if (stages == null) Array[org.apache.hadoop.fs.FileStatus]()
-       else stages).foreach(st => fs.delete(st.getPath, true))
-    }
+      if (parts.isEmpty) None
+      else Some(stageParts(t, parts, readTable(t)
+        .where(col(t.partCol).isin(parts.map(Integer.valueOf): _*))))
+    }).foreach(_.commit())
   }
 
   /** Partition values currently present on disk — one directory listing,
@@ -555,7 +419,7 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     // recover FIRST even on the full-fold path: a partition sitting in a
     // crashed-swap .old-* state has no live dir and would be invisible
     // to the listing — the fold would silently skip it this round
-    recoverParts(t)
+    recoverForWrite(t)
     if (minFiles <= 1) return existingParts(t).toSeq.sorted
     val dirs = fs.globStatus(new Path(s"${path(t.name)}/${t.partCol}=*"))
     (if (dirs == null) Array[org.apache.hadoop.fs.FileStatus]() else dirs)
@@ -591,36 +455,13 @@ private[sources] abstract class IndexStore(spark: SparkSession,
     }
   }
 
+  /** A build's first step: with `_meta`/`_token` gone, any partial
+    * state reads as stale until the build's own commit republishes both
+    * (pending commits were already rolled forward by the lease). */
   private def clearMeta(): Unit = {
     fs.delete(new Path(path("_meta")), false)
     fs.delete(new Path(path("_token")), false)
-    // a full build supersedes any pending append: a commit marker
-    // replayed AFTER the rebuilt tables swap in would inject a stale
-    // batch's files into the fresh layout — purge markers and stages
-    // instead of rolling them forward (rebuild-with-carryover paths
-    // read the index first, which already rolled them forward)
-    Seq("_commit-*", ".stage-*").foreach { pat =>
-      val glob = fs.globStatus(new Path(root, pat))
-      (if (glob == null) Array[org.apache.hadoop.fs.FileStatus]()
-       else glob).foreach(st => fs.delete(st.getPath, true))
-    }
   }
-
-  private def writeAtomic(name: String, content: String): Unit = {
-    val tmp = new Path(path(s"$name.tmp-" + java.util.UUID.randomUUID()))
-    val outS = fs.create(tmp, true)
-    try outS.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally outS.close()
-    // Hadoop rename refuses an existing destination — delete first. A
-    // crash inside the delete→rename window leaves the marker ABSENT,
-    // which every reader treats as stale/unknown: the conservative
-    // direction (a rebuild, never a silently-served wrong version).
-    fs.delete(new Path(path(name)), false)
-    require(fs.rename(tmp, new Path(path(name))),
-      s"writeAtomic: publishing $name failed")
-  }
-
-  private def publishMeta(meta: String): Unit = writeAtomic("_meta", meta)
 
   // ------------------------------------------------------------------
   // covered-corpus version token
@@ -637,14 +478,14 @@ private[sources] abstract class IndexStore(spark: SparkSession,
   // no corpus scan.
 
   /** The covered-corpus version token, or None when absent (legacy index,
-    * build crashed pre-fingerprint, or a maintenance op crashed between
-    * its table swap and its token fold — all conservative: a token-gated
-    * search treats None as stale). */
+    * or a build crashed before its commit — conservative: a token-gated
+    * search treats None as stale). The token commits with the data it
+    * describes, under the same marker. */
   def storedToken(): Option[String] = {
-    // roll any committed-but-unfinished append forward FIRST: the token
-    // gate must answer for the committed state, not a crash's leftovers
-    // (one root listing — still corpus-independent)
-    recoverCommits()
+    // roll any pending commit forward FIRST: the token gate must answer
+    // for the committed state, not a crash's leftovers (one root listing
+    // — still corpus-independent)
+    DirSwap.replay(fs, rootPath)
     val t = new Path(path("_token"))
     if (!fs.exists(t)) None
     else {
@@ -684,11 +525,8 @@ private[sources] abstract class IndexStore(spark: SparkSession,
       case None => if (!isFresh(meta)) build.collect()
     }
 
-  private def publishToken(token: String): Unit =
-    writeAtomic("_token", token)
-
   /** (rows, Σid, Σhash) of a maintenance delta — the commutative terms
-    * [[foldToken]] adds/subtracts, read from the stored per-row `fp`
+    * [[foldedOf]] adds/subtracts, read from the stored per-row `fp`
     * (the same hash the family's fingerprint scan uses). */
   private def deltaOf(df: DataFrame): Delta =
     CorpusToken.terms(df, col("id"), col("fp"))
@@ -708,25 +546,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
         throw new IllegalStateException(s"unparseable _token: '$other'")
     }
 
-  /** Fold a maintenance delta into the stored token. Called AFTER a
-    * table swap — a crash between swap and fold leaves the token BEHIND
-    * the data, which is the conservative direction (a token-gated search
-    * sees a mismatch and self-heals with a rebuild; it can never serve a
-    * corpus version the index does not actually cover), and a full retry
-    * of a SWAP-based op re-runs against the already-swapped state, so
-    * its added and removed terms cancel and the fold nets zero — the
-    * token converges. The APPEND paths do not use this: their fold rides
-    * the [[atomicAppend]] commit marker, so token and data move
-    * together. An absent token stays absent. */
-  private def foldToken(added: Delta, removed: Delta): Unit =
-    storedToken().foreach(t => publishToken(foldedOf(t, added, removed)))
-
   // ------------------------------------------------------------------
   // single-writer lease
   //
-  // The swap-write + commit-marker protocols assume ONE maintainer per
-  // index at a time (two concurrent upserts could interleave their
-  // partition swaps and token folds). The lease makes that contract
+  // The commit protocol assumes ONE maintainer per index at a time (two
+  // concurrent upserts could each fold the token from the same base, or
+  // one could sweep the other's stages). The lease makes that contract
   // enforced instead of assumed: every mutating op runs under
   // `_lease` — acquired with an atomic create-if-absent, so two
   // maintainers racing on the same store get one winner and one
@@ -778,7 +603,12 @@ private[sources] abstract class IndexStore(spark: SparkSession,
             s"(TTL ${IndexStore.LeaseTtlMs / 60000} min)")
       }
     acquire(0)
-    try body
+    try {
+      // the writer entry point: roll pending commits forward and sweep
+      // marker writes that never landed
+      DirSwap.replay(fs, rootPath, sweep = true)
+      body
+    }
     finally {
       // release only OUR lease: an expiry-breaker may have replaced it
       if (readLease().exists(_.startsWith(me + "|")))
@@ -792,12 +622,13 @@ private[graft] object IndexStore {
     * running its release) blocks the next one. */
   private[graft] val LeaseTtlMs: Long = 15L * 60 * 1000
 
-  /** Test-only failpoint: [[atomicAppend]]/[[replayCommit]] call
-    * `maybeCrash(step)` at every publish step ("staged", "marker",
-    * "move-<i>", "token"), and [[DirSwap]]'s commit between each slot's
-    * two renames ("swap:<label>", the label being the table or
-    * "DocStream"); a spec sets this predicate to kill the op at an exact
-    * step and then proves recovery converges. Always false outside
+  /** Test-only failpoint: every [[DirSwap]] commit calls
+    * `maybeCrash(step)` before its marker ("staged") and after it
+    * ("marker"), and its replay after each file move ("move-<i>"), after
+    * publishing `_token` ("token") or `_meta` ("meta"), and between each
+    * swap slot's two renames ("swap:<label>", the label being the table
+    * or "DocStream"); a spec sets this predicate to kill the op at an
+    * exact step and then proves recovery converges. Always false outside
     * specs. */
   @volatile private[graft] var crashAt: String => Boolean = _ => false
 
@@ -807,15 +638,6 @@ private[graft] object IndexStore {
   private[sources] def maybeCrash(step: String): Unit =
     if (crashAt(step)) throw new InjectedCrash(step)
 
-  private val rootLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Per-root monitor serializing commit replay within the process (two
-    * threads — a reader's recovery and the writer — must not interleave
-    * one marker's moves; cross-process races are tolerated by the
-    * idempotent move handling). */
-  private[sources] def lockFor(root: String): Object =
-    rootLocks.computeIfAbsent(root, _ => new Object)
 }
 
 object VectorIndex {

@@ -409,9 +409,9 @@ object DocStream {
       .localCheckpoint(true)
     val cbkts = assigned.select(col("cbkt")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    // a crash inside compactEmbState's two-rename window leaves the state
-    // ABSENT with a complete .old-* beside it — restore before reading,
-    // or this batch would probe an empty corpus and re-admit near-dups
+    // a crash inside compactEmbState's commit can leave the state ABSENT
+    // — recover before reading, or this batch would probe an empty
+    // corpus and re-admit near-dups
     recoverIndex(spark, embDir)
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -564,31 +564,37 @@ object DocStream {
     q
   }
 
-  /** Crash recovery for [[compactIndex]]'s swap ([[DirSwap.recover]]):
-    * a kill between its two renames leaves the index ABSENT with a
-    * complete `.old-*` beside it — without restoration the next admitBatch
-    * would see an empty corpus and re-admit near-duplicates of everything
-    * ever indexed. */
-  private def recoverIndex(spark: SparkSession, indexDir: String): Unit =
-    DirSwap.recover(new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), indexDir, "DocStream")
+  /** Crash recovery for [[compactIndex]]'s commit ([[DirSwap.recover]]):
+    * a kill inside it can leave the index ABSENT — rolled forward from its
+    * marker here (or, marker-less, restored from a complete `.old-*`
+    * beside it); without that the next admitBatch would see an empty
+    * corpus and re-admit near-duplicates of everything ever indexed.
+    * `sweep` is for [[compactIndex]], the writer, only. */
+  private def recoverIndex(spark: SparkSession, indexDir: String,
+                           sweep: Boolean = false): Unit = {
+    val p = new Path(indexDir)
+    DirSwap.recover(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p.getParent, p.getName, sweep = sweep)
+  }
 
   /** Fold the per-batch parquet file accumulation back into
-    * `targetPartitions` full files through the write-temp + two-rename
-    * swap ([[DirSwap.stage]], healed by [[recoverIndex]])
-    * — run periodically on a long-lived index. */
+    * `targetPartitions` full files through a staged copy committed under
+    * one marker in the index's parent directory ([[DirSwap.stage]];
+    * [[recoverIndex]] rolls a crashed commit forward) — run periodically
+    * on a long-lived index. A compaction is a writer entry point: it
+    * sweeps the stages of crashed earlier ones. */
   def compactIndex(spark: SparkSession, indexDir: String,
                    targetPartitions: Int = 8,
                    partCol: String = "bkt"): Unit = {
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DirSwap.recover(fs, indexDir, "DocStream")
-    if (!fs.exists(new Path(indexDir))) return
+    val dir = new Path(indexDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverIndex(spark, indexDir, sweep = true)
+    if (!fs.exists(dir)) return
     // a dir holding only _SUCCESS (every batch rejected everything) has
     // nothing to fold — and no footer to infer a schema from
     val live = fs.globStatus(new Path(indexDir, s"$partCol=*"))
     if (live == null || live.isEmpty) return
-    DirSwap.stage(fs, indexDir, "DocStream") { tmp =>
+    DirSwap.stage(fs, dir.getParent, dir.getName, "DocStream") { tmp =>
       // hash-distribute on the partition column so each directory
       // partition is written by one task (one full file per dir), with
       // targetPartitions bounding writer concurrency; partitionBy
@@ -614,10 +620,10 @@ object DocStream {
   /** Fold [[admitEmbBatch]]'s per-batch file accumulation (it appends to
     * `stateDir/emb` every micro-batch — unbounded small files on a
     * long-lived stream) back into `targetPartitions` full files per cell
-    * bucket. Same write-temp + two-rename swap as [[compactIndex]];
+    * bucket. Same staged commit as [[compactIndex]];
     * [[admitEmbBatch]] runs the matching [[recoverIndex]] before every
-    * read, so a crash inside the rename window cannot make a batch probe
-    * an empty corpus. Verdicts are unchanged: rows and the cbkt layout
+    * read, so a crash inside the commit cannot make a batch probe an
+    * empty corpus. Verdicts are unchanged: rows and the cbkt layout
     * are preserved, only file counts drop. */
   def compactEmbState(spark: SparkSession, stateDir: String,
                       targetPartitions: Int = 8): Unit =

@@ -53,18 +53,17 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("crash before the RawDayData commit retries to a complete, duplicate-free store") {
-    // RawDayData is upserted LAST as the commit marker: a crash after the
-    // child loads leaves the parent untouched, so the retry recomputes the
-    // SAME non-empty diff and re-runs the idempotent child loads. The old
-    // parent-first ordering made the retry's diff empty — children stale
-    // forever with no error.
+    // all nine tables commit under one marker: a crash after the staged
+    // writes but before the commit leaves every table untouched, so the
+    // retry recomputes the SAME non-empty diff and loads it whole
     val store = new TableStore(spark, tmpDir("etl-crash"))
     val days = Fixtures.fakeDays
     val boom: () => Unit = () => throw new RuntimeException("injected crash")
     intercept[RuntimeException](
       EtlPipeline.run(store, spark.createDataset(days), boom))
-    assert(store.read("RawDayData").count() == 0, "commit marker not written")
-    assert(store.read("Water").count() == 3, "children were loaded pre-crash")
+    Schemas.tables.keys.foreach { t =>
+      assert(store.read(t).count() == 0, s"$t committed without the others")
+    }
 
     val n = EtlPipeline.run(store, spark.createDataset(days))
     assert(n == 3, "retry must see the full diff")
@@ -127,9 +126,10 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("one failing branch fails the call after its siblings finish; a fixed retry converges") {
-    val store = new TableStore(spark, tmpDir("etl-branch-fail"))
+    val root = tmpDir("etl-branch-fail")
+    val store = new TableStore(spark, root)
     EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays))
-    val rawBefore = rows(store, "RawDayData")
+    val before = Schemas.tables.keys.map(t => t -> rows(store, t)).toMap
     // a goal beyond the int range fails ANSI's cast in the Goals extract
     // and nowhere else: Meals and MealEntries cast their own totals maps
     val bad = Fixtures.fullDay.copy(
@@ -141,18 +141,15 @@ class EtlPipelineSpec extends SparkSpec {
       .takeWhile(_ != null).map(String.valueOf).mkString(" <- ")
     assert(causes.contains("CAST_OVERFLOW"), causes)
     // thrown only after every sibling finished: no job still running and
-    // each sibling's load of the new day already swapped in (so Goals was
-    // the only branch that failed)
+    // no sibling's staged copy left behind (one still writing after the
+    // copies were dropped would leave its own)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
-    val badDay = java.sql.Date.valueOf("2021-02-01")
-    val siblings = Map("Notes" -> 1, "Water" -> 1, "Meals" -> 2,
-      "MealEntries" -> 2, "CardioExercises" -> 1, "StrengthExercises" -> 1,
-      "Measurements" -> 1)
-    siblings.foreach { case (t, n) =>
-      assert(store.read(t).where($"date" === badDay).count() == n, t)
+    assert(!new java.io.File(root).list().exists(_.contains(".tmp-")),
+      "staged copies left behind")
+    // nothing committed: all nine tables are as they were
+    Schemas.tables.keys.foreach { t =>
+      assert(rows(store, t) == before(t), s"$t committed without the others")
     }
-    assert(store.read("Goals").where($"date" === badDay).count() == 0)
-    assert(rows(store, "RawDayData") == rawBefore, "commit marker untouched")
 
     val fixed = edited :+ Fixtures.fullDay
     assert(EtlPipeline.run(store, spark.createDataset(fixed)) == 4)
@@ -202,34 +199,39 @@ class EtlPipelineSpec extends SparkSpec {
     val root = tmpDir("etl-seam")
     val store = new TableStore(spark, root)
     EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays))
-    val rawBefore = rows(store, "RawDayData")
+    val before = Schemas.tables.keys.map(t => t -> rows(store, t)).toMap
     val edited = Fixtures.fakeDays.head.copy(water = 4.0) +: Fixtures.fakeDays.tail
     val killed = tmpDir("etl-seam-killed")
-    // the seam runs after every branch and RawDayData's staging write,
-    // before its rename: what it sees is what a kill there would leave
+    def stages = new java.io.File(root).list().filter(_.contains(".tmp-")).sorted
+    // the seam runs after every table's staging write, before the commit:
+    // what it sees is what a kill there would leave
     val atSeam: () => Unit = () => {
-      def stagedRows = staged(root)
-        .map(d => spark.read.parquet(s"$root/_staging/$d").count()).sorted
-      val before = staged(root)
-      // the 1-day diff and RawDayData's complete 3-day new copy
-      assert(stagedRows == Seq(1L, 3L))
-      assert(rows(store, "RawDayData") == rawBefore, "old copy still read")
-      assert(staged(root) == before && stagedRows == Seq(1L, 3L),
-        "a read disturbed the staged copy")
-      graft.backup.Snapshot.copyDir(s"$root/_staging", killed)
-      throw new RuntimeException("killed before the RawDayData rename")
+      val copies = stages
+      // one staged copy per table, beside the 1-day diff under _staging/
+      assert(copies.map(_.takeWhile(_ != '.')).toSet == Schemas.tables.keySet)
+      assert(staged(root).size == 1)
+      assert(spark.read.parquet(s"$root/${copies.find(_.startsWith("RawDayData")).get}")
+        .count() == 3, "RawDayData's complete new copy")
+      Schemas.tables.keys.foreach { t =>
+        assert(rows(store, t) == before(t), s"$t: old copy still read")
+      }
+      assert(stages.sameElements(copies), "a read disturbed the staged copies")
+      copies.foreach(c => graft.backup.Snapshot.copyDir(s"$root/$c", s"$killed/$c"))
+      throw new RuntimeException("killed before the commit")
     }
     val e = intercept[RuntimeException](
       EtlPipeline.run(store, spark.createDataset(edited), atSeam))
     // not a failed assertion inside the seam
-    assert(e.getMessage == "killed before the RawDayData rename", e)
-    assert(rows(store, "RawDayData") == rawBefore)
+    assert(e.getMessage == "killed before the commit", e)
+    assert(stages.isEmpty, "a failed load must drop its staged copies")
+    Schemas.tables.keys.foreach(t => assert(rows(store, t) == before(t), t))
 
-    // put back the staging area the kill would have left, then re-run
-    graft.backup.Snapshot.copyDir(killed, s"$root/_staging")
-    assert(staged(root).size == 2)
+    // put back the staged copies the kill would have left, then re-run
+    new java.io.File(killed).list().foreach(c =>
+      graft.backup.Snapshot.copyDir(s"$killed/$c", s"$root/$c"))
+    assert(stages.length == Schemas.tables.size)
     assert(EtlPipeline.run(store, spark.createDataset(edited)) == 1)
-    assert(staged(root).isEmpty, "leftovers not swept")
+    assert(stages.isEmpty && staged(root).isEmpty, "leftovers not swept")
     val clean = new TableStore(spark, tmpDir("etl-seam-clean"))
     EtlPipeline.run(clean, spark.createDataset(Fixtures.fakeDays))
     EtlPipeline.run(clean, spark.createDataset(edited))
@@ -243,9 +245,11 @@ class EtlPipelineSpec extends SparkSpec {
     val root = tmpDir("etl-swap-crash")
     val store = new TableStore(spark, root)
     EtlPipeline.run(store, spark.createDataset(Fixtures.fakeDays))
-    val before = Schemas.tables.keys.map(t => t -> rows(store, t)).toMap
     val edited = Fixtures.fakeDays.map(_.copy(water = 5.0))
-    // kill Water's replaceDays between its two renames, mid fan-out
+    val clean = new TableStore(spark, tmpDir("etl-swap-crash-clean"))
+    EtlPipeline.run(clean, spark.createDataset(Fixtures.fakeDays))
+    EtlPipeline.run(clean, spark.createDataset(edited))
+    // kill the commit between Water's two renames
     IndexStore.crashAt = (_ == "swap:Water")
     val e =
       try intercept[Exception](
@@ -255,18 +259,55 @@ class EtlPipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/Water").exists() &&
       new java.io.File(root).list().exists(_.startsWith("Water.old-")),
       "the crash must leave Water parked between the renames")
-    // the next bare read restores Water's pre-swap rows; the commit marker
-    // never moved
+    // the commit marker was written: the next bare read rolls the whole
+    // load forward — Water's new rows and every other table's with them
     val reader = new TableStore(spark, root)
-    assert(rows(reader, "Water") == before("Water"))
-    assert(rows(reader, "RawDayData") == before("RawDayData"))
-    assert(EtlPipeline.run(store, spark.createDataset(edited)) ==
-      Fixtures.fakeDays.size)
-    val clean = new TableStore(spark, tmpDir("etl-swap-crash-clean"))
-    EtlPipeline.run(clean, spark.createDataset(Fixtures.fakeDays))
-    EtlPipeline.run(clean, spark.createDataset(edited))
+    Schemas.tables.keys.foreach { t =>
+      assert(rows(reader, t) == rows(clean, t), s"$t not rolled forward")
+    }
+    assert(EtlPipeline.run(store, spark.createDataset(edited)) == 0)
     Schemas.tables.keys.foreach { t =>
       assert(rows(store, t) == rows(clean, t), s"$t differs from a clean run")
+    }
+  }
+
+  test("a crash at any step of the nine-table commit leaves all nine tables old or all new") {
+    import graft.sources.IndexStore
+    val edited = Fixtures.fakeDays.map(_.copy(water = 6.0)) :+ Fixtures.fullDay
+    def load(root: String, days: Seq[graft.model.MaterializedDay]) = {
+      val s = new TableStore(spark, root)
+      EtlPipeline.run(s, spark.createDataset(days))
+      s
+    }
+    def snapshot(s: TableStore) = Schemas.tables.keys.map(t => t -> rows(s, t)).toMap
+    val old = snapshot(load(tmpDir("etl-commit-old"), Fixtures.fakeDays))
+    val cleanRoot = tmpDir("etl-commit-new")
+    load(cleanRoot, Fixtures.fakeDays)
+    val fresh = snapshot(load(cleanRoot, edited))
+    assert(Schemas.tables.keys.forall(t => old(t) != fresh(t)),
+      "the edit must change every table, or old and new cannot be told apart")
+    // "staged" is before the marker; "marker" right after it; then each
+    // table's swap, between its two renames
+    val steps = Seq("staged", "marker") ++ Schemas.tables.keys.toSeq.sorted.map("swap:" + _)
+    steps.foreach { step =>
+      val root = tmpDir("etl-commit-crash")
+      val store = load(root, Fixtures.fakeDays)
+      IndexStore.crashAt = (_ == step)
+      try intercept[IndexStore.InjectedCrash](
+        EtlPipeline.run(store, spark.createDataset(edited)))
+      finally IndexStore.crashAt = _ => false
+      val seen = snapshot(new TableStore(spark, root))
+      val want = if (step == "staged") old else fresh
+      Schemas.tables.keys.foreach { t =>
+        assert(seen(t) == want(t), s"[$step] $t is neither all-old nor all-new")
+      }
+      EtlPipeline.run(store, spark.createDataset(edited))
+      Schemas.tables.keys.foreach { t =>
+        assert(rows(store, t) == fresh(t), s"[$step] $t: re-run differs from a clean run")
+      }
+      assert(new java.io.File(root).list().forall(n =>
+        !n.contains(".tmp-") && !n.contains(".old-") && !n.startsWith("_commit-")),
+        s"[$step] leftovers after the re-run")
     }
   }
 

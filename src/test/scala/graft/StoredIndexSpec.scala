@@ -233,11 +233,74 @@ class StoredIndexSpec extends SparkSpec {
     assert(fs.globStatus(new org.apache.hadoop.fs.Path(
       s"$root/postings/.old-*-cid_band=*")).nonEmpty,
       "the crash must leave a band parked between its renames")
-    assert(rows(idx) == before, "a bare read must see the pre-swap rows")
-    assert(idx.storedToken() == tokBefore, "token folded for a failed swap")
+    // the commit marker was written: a bare read rolls every band AND the
+    // folded token forward together
+    assert(rows(idx) != before)
+    assert(rows(idx) == rows(ctrl), "a bare read must see the committed rows")
+    assert(idx.storedToken() != tokBefore)
+    assert(idx.storedToken() == ctrl.storedToken(),
+      "the token must move with the data")
     Similarity.ivfExtendStored(batch, "vec_id", "embedding", idx).collect()
     assert(rows(idx) == rows(ctrl))
     assert(idx.storedToken() == ctrl.storedToken())
+  }
+
+  test("IVF upsert and delete killed at swap:postings converge with zero " +
+      "self-healing rebuilds") {
+    import graft.sources.IndexStore
+    val batch = emb.where(col("vec_id") % 10 === 0)
+      .select((col("vec_id") + 100L).as("vec_id"),
+        transform(col("embedding"), x => -x).as("embedding"))
+      .unionByName(Seq((3L, Seq(0f, 0f, 0f, 1f, 0f, 0f, 0f, 1f)))
+        .toDF("vec_id", "embedding"))
+    val upserted = emb.where(col("vec_id") =!= 3L).unionByName(batch)
+    val doomed = Seq(4L, 9L, 17L).toDF("id")
+    val deleted = emb.where(!col("vec_id").isin(4L, 9L, 17L))
+    def build(root: String): VectorIndex = {
+      val idx = new VectorIndex(spark, root)
+      Similarity.ivfBuildStored(emb, "vec_id", "embedding",
+        nCentroids = 5, index = idx, portable = true).collect()
+      idx
+    }
+    def rows(i: VectorIndex) = i.readPostings().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def centroidFiles(root: String) = {
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/centroids"))
+        .map(_.getPath.getName).toSet
+    }
+    Seq[(String, VectorIndex => Unit, org.apache.spark.sql.DataFrame)](
+      ("upsert", i => Similarity.ivfExtendStored(batch, "vec_id", "embedding", i)
+        .collect(), upserted),
+      ("delete", i => Similarity.ivfDeleteStored(doomed, i).collect(), deleted)
+    ).foreach { case (op, run, corpus) =>
+      val ctrl = build(tmpDir(s"vidx-$op-ctrl"))
+      run(ctrl)
+      val root = tmpDir(s"vidx-$op-crash")
+      val idx = build(root)
+      val grid = centroidFiles(root)
+      IndexStore.crashAt = (_ == "swap:postings")
+      try intercept[IndexStore.InjectedCrash](run(idx))
+      finally IndexStore.crashAt = _ => false
+      // the token a caller maintaining the corpus holds after the op
+      val tok = Similarity.ivfCorpusToken(corpus, "vec_id", "embedding",
+        nCentroids = 5, index = idx, portable = true)
+      assert(ctrl.isCurrent(tok), s"[$op] the control must cover the new corpus")
+      // a token-gated search right after the crash: the read rolls the
+      // commit forward, the token matches, and no rebuild runs
+      Similarity.ivfSearchStored(corpus, "vec_id", "embedding",
+        nCentroids = 5, nProbe = 2, queryPred = col("vec_id") < 5L, k = 3,
+        index = idx, portable = true, corpusToken = Some(tok)).collect()
+      assert(idx.isCurrent(tok), s"[$op] token must converge")
+      assert(rows(idx) == rows(ctrl), s"[$op] rows must converge")
+      // a rebuild would have swapped in a fresh centroid table
+      assert(centroidFiles(root) == grid,
+        s"[$op] recovery must never trigger a rebuild")
+      run(idx)
+      assert(idx.isCurrent(tok) && rows(idx) == rows(ctrl),
+        s"[$op] a retry must be a no-op")
+    }
   }
 
   test("stale CONTENT rebuild-gates even when ids are unchanged") {

@@ -173,14 +173,15 @@ class TableStoreSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/Water").exists() &&
       new java.io.File(root).list().exists(_.startsWith("Water.old-")),
       "the crash must leave Water parked between the renames")
-    // a bare read restores Water's pre-swap rows, and the parent still
-    // holds the victim: it has not been committed ahead of its children
-    assert(dates("Water") == Seq("2021-01-01", "2021-01-02"))
-    assert(dates("RawDayData") == Seq("2021-01-01", "2021-01-02"))
-    // the natural retry derives its victims from the store again
+    // every purge was written before the one commit marker: a bare read
+    // rolls the whole cascade forward — parent and children purged
+    // together, never one without the other
+    assert(dates("Water") == Seq("2021-01-02"), "orphaned child rows left")
+    assert(dates("RawDayData") == Seq("2021-01-02"))
+    // the natural retry derives its victims from the store again: a no-op
     s.cascadeDelete(victims)
     assert(dates("RawDayData") == Seq("2021-01-02"))
-    assert(dates("Water") == Seq("2021-01-02"), "orphaned child rows left")
+    assert(dates("Water") == Seq("2021-01-02"))
   }
 
   test("interrupted swap recovers the pre-swap table on init") {

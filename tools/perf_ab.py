@@ -23,10 +23,12 @@ median, the pairs the change won (ties count for neither), whether that is
 a gain by the rule the benchmark is judged by (wins in at least 9/10 of the
 pairs and a median gap larger than the parent's q3 - q1), whether the change
 stays inside the metric's bound, and per side the failed operations, the
-runs that ended `correct`, the runs that exited non-zero and the runs whose
-kept stderr shows the JVM's code cache filled (`CodeCache is full`: from
-then on newly hot code runs interpreted, so that run's later calls are
-slower). The script only calls the benchmark; it changes nothing under
+runs that ended `correct`, the runs that exited non-zero, the runs whose
+kept stderr shows run.py's own deadline killed them (`run timed out`: run.py
+exits 1 then too, so the non-zero count alone cannot tell a hang from a
+JVM failure) and the runs whose kept stderr shows the JVM's code cache
+filled (`CodeCache is full`: from then on newly hot code runs interpreted,
+so that run's later calls are slower). The script only calls the benchmark; it changes nothing under
 perfbench/.
 """
 import argparse
@@ -63,12 +65,22 @@ def log_name(workload, side, seed):
     return f"{workload}-{side}-seed{seed}"
 
 
-def code_cache_full(out, side, workload, seed):
+def stderr_shows(out, side, workload, seed, text):
     path = os.path.join(out, "logs", log_name(workload, side, seed) + ".err")
     if not os.path.exists(path):
         return False
     with open(path, errors="replace") as fh:
-        return any("CodeCache is full" in line for line in fh)
+        return any(text in line for line in fh)
+
+
+def code_cache_full(out, side, workload, seed):
+    return stderr_shows(out, side, workload, seed, "CodeCache is full")
+
+
+def timed_out(out, side, workload, seed):
+    # run.py kills a run at its own deadline, logs this and exits 1 -- the
+    # same exit code as a JVM failure
+    return stderr_shows(out, side, workload, seed, "run timed out")
 
 
 def run_one(out, side, workload, seed, seconds):
@@ -119,8 +131,8 @@ def summarize(out, workloads):
         metrics = json.load(fh)["end_to_end"]
     print("| workload | metric | parent median (q1–q3) | change median (q1–q3) "
           "| Δ median | change better | gain | in bound | failed p/c "
-          "| correct p/c | exit≠0 p/c | code cache full p/c |")
-    print("|---|---|---|---|---|---|---|---|---|---|---|---|")
+          "| correct p/c | exit≠0 p/c | timed out p/c | code cache full p/c |")
+    print("|---|---|---|---|---|---|---|---|---|---|---|---|---|")
     for w in workloads:
         rows = {s: load(out, s, w) for s in SIDES}
         health = {}
@@ -131,7 +143,8 @@ def summarize(out, workloads):
                 sum(1 for r in runs if r["r"] and r["r"]["correct"]),
                 len(runs),
                 sum(1 for r in runs if r["exit"] != 0),
-                sum(1 for r in runs if code_cache_full(out, s, w, r["seed"])))
+                sum(1 for r in runs if code_cache_full(out, s, w, r["seed"])),
+                sum(1 for r in runs if timed_out(out, s, w, r["seed"])))
         paired = sorted(set(rows["parent"]) & set(rows["change"]))
         for m in metrics:
             name, lower = m["name"], m["better"] == "lower"
@@ -143,7 +156,7 @@ def summarize(out, workloads):
             pairs = [(val("parent", s), val("change", s)) for s in paired]
             pairs = [(p, c) for p, c in pairs if p is not None and c is not None]
             if not pairs:
-                print(f"| {w} | `{name}` | no paired results" + " |" * 10)
+                print(f"| {w} | `{name}` | no paired results" + " |" * 11)
                 continue
             pv = [p for p, _ in pairs]
             cv = [c for _, c in pairs]
@@ -160,7 +173,7 @@ def summarize(out, workloads):
                   f"| {wins}/{len(pairs)} | {'yes' if gain else 'no'} "
                   f"| {'yes' if worse <= m['bound'] else 'NO'} "
                   f"| {hp[0]}/{hc[0]} | {hp[1]}/{hp[2]}, {hc[1]}/{hc[2]} "
-                  f"| {hp[3]}/{hc[3]} | {hp[4]}/{hc[4]} |")
+                  f"| {hp[3]}/{hc[3]} | {hp[5]}/{hc[5]} | {hp[4]}/{hc[4]} |")
 
 
 def main():
